@@ -94,7 +94,8 @@ object TopicCatalog {
 
   // Driver-side catalog cache — the analog of the reference's singleton
   // InMemoryTopicMetadataRepository (metadata-scale), invalidated by
-  // fingerprinting the catalog dir listing so cross-JVM creates are seen.
+  // the catalog dir's [[graft.core.Memo.listing]] so cross-JVM creates are
+  // seen. Not a Memo: a change must also notify the listeners below.
   private val cache =
     scala.collection.concurrent.TrieMap.empty[String, (String, Map[String, FluxTopic])]
 
@@ -116,17 +117,9 @@ object TopicCatalog {
 
   def removeListeners(wh: Warehouse): Unit = listeners.remove(wh.root)
 
-  private def catalogFingerprint(wh: Warehouse): String = {
-    healCatalog(wh)
-    val p = new org.apache.hadoop.fs.Path(wh.catalogDir)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    if (!fs.exists(p)) ""
-    else fs.listStatus(p).filterNot(_.getPath.getName.startsWith("_"))
-      .map(s => s"${s.getPath.getName}:${s.getLen}").sorted.mkString(",")
-  }
-
   private def cachedTopics(spark: SparkSession, wh: Warehouse): Map[String, FluxTopic] = {
-    val fp = catalogFingerprint(wh)
+    healCatalog(wh)
+    val fp = graft.core.Memo.listing(wh.catalogDir)
     cache.get(wh.root) match {
       case Some((f, m)) if f == fp => m
       case prev =>

@@ -260,31 +260,40 @@ object ConsumerGroup {
       max: Long,
       from: Map[Int, Long]): (DataFrame, Map[Int, Long]) = {
     val parts = membership.assignment.getOrElse(topic, Seq.empty)
-    val frames = parts.map { p =>
-      LogReader.poll(spark, wh, topic, p, from.getOrElse(p, 0L), max)
-        .withColumn("partition", lit(p))
-    }
-    val all =
-      if (frames.isEmpty)
-        spark.createDataFrame(java.util.List.of[Row](), graft.core.Schemas.record)
-      else frames.reduce(_ unionByName _)
-    // next offsets come from the (already-consulted) index cache, not a
-    // second Spark job over the polled frames: offsets are dense per
-    // partition, so the highest polled offset is min(log end, from + max)
-    // whenever the poll window intersects the committed range.
-    val perPart = graft.core.log.IndexCache.entries(spark, wh, topic)
-      .filter(_.isData).groupBy(_.partition)
-    val next = parts.flatMap { p =>
-      val start = from.getOrElse(p, 0L)
-      perPart.get(p).flatMap { es =>
-        val lo = es.map(_.baseOffset).min
-        val hi = es.map(_.endOffset).max
-        if (hi >= start && lo < start + max)
-          Some(p -> (math.min(hi, start + max - 1) + 1))
-        else None
+    // ONE index snapshot prunes the frames AND computes the next offsets:
+    // an append landing between two reads would otherwise advance `next`
+    // past records the frame never held. A vanished-file retry re-reads
+    // the snapshot for both.
+    LogReader.retryOnceOnVanished {
+      val entries = graft.core.log.IndexCache.entries(spark, wh, topic)
+      val frames = parts.map { p =>
+        LogReader.pollIn(spark, wh, topic, entries, p, from.getOrElse(p, 0L), max)
+          .withColumn("partition", lit(p))
       }
-    }.toMap
-    (all, from ++ next)
+      val all =
+        if (frames.isEmpty)
+          spark.createDataFrame(java.util.List.of[Row](), graft.core.Schemas.record)
+        else frames.reduce(_ unionByName _)
+      // next offsets come from the snapshot, not a second Spark job over
+      // the polled frames: offsets are dense per partition, so the highest
+      // polled offset is min(log end, from + max) whenever the poll window
+      // intersects the committed range.
+      val perPart = entries.filter(_.isData).groupBy(_.partition)
+      val next = parts.flatMap { p =>
+        val start = from.getOrElse(p, 0L)
+        perPart.get(p).flatMap { es =>
+          val lo = es.map(_.baseOffset).min
+          val hi = es.map(_.endOffset).max
+          if (hi >= start && lo < start + max)
+            Some(p -> (math.min(hi, start + max - 1) + 1))
+          else None
+        }
+      }.toMap
+      // only the member's own partitions: `from` is the whole group's
+      // committed map, and committing a peer's entry from it would rewind
+      // that peer to this snapshot
+      (all, from.filter { case (p, _) => parts.contains(p) } ++ next)
+    }
   }
 
   /** Poll every topic of the member's assignment in one call. The reference

@@ -1,9 +1,6 @@
 package graft.core.log
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import scala.collection.concurrent.TrieMap
 
 /** Driver-side cache of a topic's file-offset index — the in-memory analog
   * of the reference's per-segment index map
@@ -12,9 +9,9 @@ import scala.collection.concurrent.TrieMap
   *
   * The index table is metadata-scale (one row per committed file), so
   * loading it once and pruning in-driver turns every `poll` into a single
-  * Spark job over just the matching files. Staleness is detected by
-  * fingerprinting the index directory listing (name+size of each index
-  * file) — one cheap FS listing per poll instead of a full Spark read.
+  * Spark job over just the matching files. The entries are a
+  * [[graft.core.Memo]] stamped with the index directory's listing — one
+  * cheap FS listing per poll instead of a full Spark read.
   */
 object IndexCache {
 
@@ -24,24 +21,6 @@ object IndexCache {
     /** High-watermark tombstones ([[LogIndex.HwmFile]]) carry offsets but
       * reference no data file. */
     def isData: Boolean = count > 0
-  }
-
-  private case class Cached(fingerprint: String, entries: Array[Entry])
-
-  private val cache = TrieMap.empty[(String, String), Cached]
-
-  private def fingerprint(indexDir: String): String = {
-    val p = new Path(indexDir)
-    val fs = p.getFileSystem(new Configuration())
-    if (!fs.exists(p)) ""
-    else fs.listStatus(p)
-      // same visibility rule as IndexIO.readRows: dot-prefixed files
-      // (staging temp/CRC debris) are never read, so they must not churn
-      // the fingerprint into spurious full reloads (r18 advice)
-      .filterNot(s => s.getPath.getName.startsWith("_") ||
-        s.getPath.getName.startsWith("."))
-      .map(s => s"${s.getPath.getName}:${s.getLen}")
-      .sorted.mkString(",")
   }
 
   /** Entries of one topic, reloaded only when the topic's index dir changed
@@ -57,20 +36,15 @@ object IndexCache {
       spark: SparkSession,
       wh: graft.core.catalog.Warehouse,
       topic: String): Array[Entry] = {
-    val key = (wh.root, topic)
     LogIndex.heal(wh, topic)
-    val fp = fingerprint(wh.indexDir(topic))
-    cache.get(key) match {
-      case Some(c) if c.fingerprint == fp => c.entries
-      case _ =>
-        // driver-side parquet read (IndexIO): the reload is metadata-scale
-        // and used to cost one Spark job per post-append read — a pure
-        // scheduler round-trip on the hot produce path
-        val loaded = IndexIO.readRows(wh.indexDir(topic)).map(r =>
-          Entry(r.partition, r.file, r.baseOffset, r.endOffset, r.count,
-            r.batchId))
-        cache.put(key, Cached(fp, loaded))
-        loaded
+    val dir = wh.indexDir(topic)
+    // driver-side parquet read (IndexIO): the reload is metadata-scale
+    // and used to cost one Spark job per post-append read — a pure
+    // scheduler round-trip on the hot produce path
+    graft.core.Memo("log.index", dir, graft.core.Memo.listing(dir)) {
+      IndexIO.readRows(dir).map(r =>
+        Entry(r.partition, r.file, r.baseOffset, r.endOffset, r.count,
+          r.batchId))
     }
   }
 
@@ -96,5 +70,5 @@ object IndexCache {
       .map { case (p, es) => p -> (es.map(_.endOffset).max + 1L) }
 
   def invalidate(wh: graft.core.catalog.Warehouse, topic: String): Unit =
-    cache.remove((wh.root, topic))
+    graft.core.Memo.invalidate(wh.indexDir(topic))
 }

@@ -31,10 +31,26 @@ object LogReader {
       partition: Int,
       fromOffset: Long,
       max: Long): DataFrame = retryOnceOnVanished {
+    pollIn(spark, wh, topic, IndexCache.entries(spark, wh, topic),
+      partition, fromOffset, max)
+  }
+
+  /** [[poll]] pruned against a caller-held `entries` snapshot, so a caller
+    * that derives more from the index (a group's next offsets) reads the
+    * same snapshot the frame was built from. Callers wrap the snapshot
+    * read and this call together in [[retryOnceOnVanished]]. */
+  private[graft] def pollIn(
+      spark: SparkSession,
+      wh: Warehouse,
+      topic: String,
+      entries: Array[IndexCache.Entry],
+      partition: Int,
+      fromOffset: Long,
+      max: Long): DataFrame = {
     val to = fromOffset + max // exclusive
     // prune in-driver against the cached index — no Spark job; the poll
     // itself is then ONE job over just the intersecting files
-    val hits = IndexCache.entries(spark, wh, topic)
+    val hits = entries
       .filter(e => e.isData && e.partition == partition &&
         e.endOffset >= fromOffset && e.baseOffset < to)
     if (hits.isEmpty) emptyLog(spark, wh, topic)

@@ -85,33 +85,14 @@ object IndexMaintenance {
     * `spark.read.parquet(root)` pays footer inference + a FULL recursive
     * directory listing on EVERY call — per probe per micro-batch, twice
     * per index (candidate + verify side), growing with the index's file
-    * count. */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
+    * count. Index `build`s overwrite their sub-tables in place and
+    * [[graft.core.Memo.invalidate]] the index path, so a rebuild with a
+    * changed schema is never served the stale pin (pinned parquet reads
+    * silently null or drop changed columns). Stamped by build, not by
+    * listing: a listing stamp would re-infer on every delta append. */
   private def tableSchema(
       spark: SparkSession, table: String): org.apache.spark.sql.types.StructType =
-    schemaCache.computeIfAbsent(table, _ => spark.read.parquet(table).schema)
-
-  /** Delta-tail schema per table, inferred once and pinned: the tail is
-    * written by [[appendDelta]] with one stable schema per table, but
-    * re-inferring it costs a footer-read driver job on EVERY pruned read
-    * — per index stage per micro-batch. [[foldDelta]] doesn't invalidate:
-    * a post-fold tail comes from the same appender with the same schema;
-    * a build-time rewrite goes through [[invalidateSchema]]. */
-  private val tailSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-  /** Drop pinned schemas for every table under `prefix`. Index `build`s
-    * overwrite their sub-tables in place; without this, a rebuild with a
-    * changed schema in the same JVM would keep serving the stale pinned
-    * schema (pinned parquet reads silently null or drop changed columns).
-    * Mirrors `LshIndex.metaCache`'s refresh-on-build. */
-  def invalidateSchema(prefix: String): Unit = {
-    schemaCache.keySet.removeIf(_.startsWith(prefix))
-    tailSchemaCache.keySet.removeIf(_.startsWith(prefix))
-    ()
-  }
+    graft.core.Memo("index.schema", table, ())(spark.read.parquet(table).schema)
 
   /** Partition-pruned base ∪ delta tail, both filtered on `partCol`.
     *
@@ -165,9 +146,11 @@ object IndexMaintenance {
         // the directory-inferred one — e.g. a long bucket vs int dir
         // values; the union coerces as it always has) but only ONCE per
         // table: per-read inference was a footer-read driver job per
-        // stage per micro-batch
-        val ts = tailSchemaCache.computeIfAbsent(table,
-          _ => spark.read.parquet(files: _*).schema)
+        // stage per micro-batch. The tail is written by appendDelta with
+        // one stable schema per table, so foldDelta doesn't invalidate: a
+        // post-fold tail comes from the same appender with the same schema
+        val ts = graft.core.Memo("index.tail-schema", table, ())(
+          spark.read.parquet(files: _*).schema)
         base.unionByName(spark.read.schema(ts).parquet(files: _*)
           .filter(col(partCol).isInCollection(values)))
     }

@@ -62,7 +62,7 @@ object IvfIndex {
       iterations: Int = 5): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    IndexMaintenance.invalidateSchema(path)
+    graft.core.Memo.invalidate(path)
     val prepared = corpus.select(id.cast("long").as("id"), vec.as("vec"))
     val centroidDf =
       Similarity.trainCentroidsDf(prepared, nCells, sampleSize, iterations)

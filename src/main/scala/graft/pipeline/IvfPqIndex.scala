@@ -63,18 +63,14 @@ object IvfPqIndex {
     IvfPq.encode(corpus, id, vec, model)
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
-    modelCache.put(path, model) // a re-build must not serve the old model
-    IndexMaintenance.invalidateSchema(path)
+    graft.core.Memo.invalidate(path) // a re-build must not serve the old model
   }
 
   /** The stored model, reconstructed from the two centroid tables —
     * metadata-scale driver reads, memoized per path (the model is
-    * immutable after [[build]], which refreshes the entry). */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfPq.Model]()
-
+    * immutable after [[build]], which invalidates the memo). */
   def readModel(spark: SparkSession, path: String): IvfPq.Model =
-    modelCache.computeIfAbsent(path, _ => {
+    graft.core.Memo("ivfpq.model", path, ()) {
       val meta = spark.read.parquet(s"$path/meta")
         .select("dim", "n_cells", "m", "ksub").head()
       val (dim, nCells, m, ksub) =
@@ -90,7 +86,7 @@ object IvfPqIndex {
         pqRows.filter(_._1 == j).sortBy(_._2).map(_._3).toIndexedSeq
       }.toIndexedSeq
       IvfPq.Model(dim, nCells, coarse, Pq.Model(dim, m, ksub, pq))
-    })
+    }
 
   /** Append new vectors — encode against the stored model (no refit, no
     * corpus re-read), single-task write into the cell directories.

@@ -142,27 +142,23 @@ object LshIndex {
     Seq((shingleSize, numHashes, bands, numShards))
       .toDF("shingle_size", "num_hashes", "bands", "num_shards")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    metaCache.put(path, (shingleSize, numHashes, bands, numShards))
-    IndexMaintenance.invalidateSchema(path)
+    graft.core.Memo.invalidate(path)
     val sh = shingleSets(corpus, id, text, shingleSize)
     writeSignatures(sh, bandKeys(sh, numHashes, bands), numShards, path,
       "overwrite")
   }
 
   /** Band parameters per index path. Meta is immutable after [[build]]
-    * (which refreshes the entry), so caching it drops one driver
+    * (which invalidates the memo), so caching it drops one driver
     * round-trip — a whole Spark job — from EVERY probe/append: at a
     * streaming trigger of 500 ms that fixed overhead is a measurable
     * slice of the per-batch budget. */
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int, Int, Int)]()
-
   private def readMeta(spark: SparkSession, path: String): (Int, Int, Int, Int) =
-    metaCache.computeIfAbsent(path, _ => {
+    graft.core.Memo("lsh.meta", path, ()) {
       val m = spark.read.parquet(s"$path/meta")
         .select("shingle_size", "num_hashes", "bands", "num_shards").head()
       (m.getInt(0), m.getInt(1), m.getInt(2), m.getInt(3))
-    })
+    }
 
   /** Add a batch to the index — the steady-state ingest step. Touches
     * only the new documents; the existing index files are untouched

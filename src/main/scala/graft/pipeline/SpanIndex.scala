@@ -114,23 +114,18 @@ object SpanIndex {
     import spark.implicits._
     Seq((k, numShards)).toDF("k", "num_shards")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    metaCache.put(path, (k, numShards))
-    IndexMaintenance.invalidateSchema(path)
+    graft.core.Memo.invalidate(path)
     writeGrams(occurrences(corpus, id, text, k), numShards, path, "overwrite")
   }
 
   /** (k, numShards) per index path — immutable after [[build]] (which
-    * refreshes the entry), so caching drops the meta-read driver jobs
-    * (schema + head) from every probe/append; [[LshIndex.metaCache]]'s
-    * shape. */
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
-
+    * invalidates the memo), so caching drops the meta-read driver jobs
+    * (schema + head) from every probe/append. */
   private def readMeta(spark: SparkSession, path: String): (Int, Int) =
-    metaCache.computeIfAbsent(path, _ => {
+    graft.core.Memo("span.meta", path, ()) {
       val m = spark.read.parquet(s"$path/meta").select("k", "num_shards").head()
       (m.getInt(0), m.getInt(1))
-    })
+    }
 
   /** Add a batch's distinct gram fingerprints — steady-state ingest. */
   def append(batch: DataFrame, id: Column, text: Column, path: String): Unit = {

@@ -85,24 +85,20 @@ object SrpIndex {
     import spark.implicits._
     Seq((nBits, numShards)).toDF("n_bits", "num_shards")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    metaCache.put(path, (nBits, numShards))
-    IndexMaintenance.invalidateSchema(path)
+    graft.core.Memo.invalidate(path)
     writeSignatures(signatures(corpus, id, vec, nBits), numShards, path,
       "overwrite")
   }
 
   /** (nBits, numShards) per index path — immutable after [[build]]
-    * (which refreshes the entry); drops the meta-read driver jobs from
-    * every probe/append, [[LshIndex.metaCache]]'s shape. */
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
-
+    * (which invalidates the memo); drops the meta-read driver jobs from
+    * every probe/append. */
   private def readMeta(spark: SparkSession, path: String): (Int, Int) =
-    metaCache.computeIfAbsent(path, _ => {
+    graft.core.Memo("srp.meta", path, ()) {
       val m = spark.read.parquet(s"$path/meta")
         .select("n_bits", "num_shards").head()
       (m.getInt(0), m.getInt(1))
-    })
+    }
 
   /** Add a batch to the index — the steady-state ingest step. */
   def append(batch: DataFrame, id: Column, vec: Column, path: String): Unit = {

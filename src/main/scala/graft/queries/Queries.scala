@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Memo
 import graft.core.log.LogWriter
 import graft.core.groups.{RangeAssignor, RoundRobinAssignor, StickyAssignor}
 import graft.core.routing.PartitionRouter
@@ -20,6 +21,26 @@ object Queries {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
+
+  /** Every [[Fit]] declared below, in declaration order — the registry
+    * [[coldFits]] enumerates. */
+  private val fits = scala.collection.mutable.ArrayBuffer.empty[Fit[_]]
+
+  /** A fitted model, standing state per input dir: fitted on first use and
+    * refitted when the dir's listing changes ([[graft.core.Memo]]).
+    * Re-running a fit per query invocation re-pays its corpus passes and
+    * driver jobs for a bit-identical model. */
+  private final class Fit[M](val name: String)(fit: (SparkSession, String) => M) {
+    fits += this
+    def apply(spark: SparkSession, dir: String): M =
+      Memo(s"fit.$name", dir, Memo.listing(dir))(fit(spark, dir))
+  }
+
+  /** Standing on-disk state per input dir (an index, a warehouse): built
+    * by `build` into a fresh scratch dir on first use, rebuilt into
+    * another when the input dir's listing changes. */
+  private def standing[V](kind: String, dir: String)(build: String => V): V =
+    Memo(kind, dir, Memo.listing(dir))(build(Memo.scratchDir(s"graft-$kind")))
 
   /** events with `ts` as long epoch nanos, whichever physical type the
     * driver generated: TIMESTAMP(NANOS) parquet arrives as LongType already
@@ -172,8 +193,7 @@ object Queries {
     * same description from the routing function alone. */
   def describeTopic(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.catalog.{TopicCatalog, Warehouse}
-    val wh = Warehouse(
-      java.nio.file.Files.createTempDirectory("graft-admin").toString)
+    val wh = Warehouse(Memo.scratchDir("graft-admin"))
     TopicCatalog.createTopic(spark, wh, "events", 4)
     graft.core.log.LogWriter.append(spark, wh, "events",
       events(spark, dir).select(col("event_id"), col("props").as("value")),
@@ -720,23 +740,16 @@ object Queries {
     Dedup.repeatedSpanRemoval(t(spark, dir, "documents"),
       col("doc_id"), col("text"), k = 5, minCount = 2)
 
+  private val kmeansModel = new Fit("kmeans")((spark, dir) =>
+    graft.pipeline.Clustering.kmeansCentroids(
+      t(spark, dir, "embeddings"), col("vec_id"), col("embedding"),
+      k = 10, iters = 2))
+
   /** SemDeDup over the embeddings table: the SAME deterministic k-means as
     * `kmeans_clusters` (k=10, 2 Lloyd iterations), then within-cluster
     * cosine ≥ 0.35 drops the higher id (0.35 is this synthetic corpus's
     * near-dup band — the same threshold `dedup_embedding` uses). Survivors
     * only. */
-  private val kmeansModels = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[Seq[Double]]]()
-
-  // centroids are a fitted model — standing state per corpus, memoized
-  // like the PQ/IVF-PQ/lang/qfilter fits (re-running Lloyd per query
-  // invocation re-paid iters+1 identical corpus passes + driver jobs)
-  private def kmeansModel(spark: SparkSession, dir: String): Seq[Seq[Double]] =
-    kmeansModels.computeIfAbsent(dir, _ =>
-      graft.pipeline.Clustering.kmeansCentroids(
-        t(spark, dir, "embeddings"), col("vec_id"), col("embedding"),
-        k = 10, iters = 2))
-
   def dedupSemantic(spark: SparkSession, dir: String): DataFrame = {
     val emb = t(spark, dir, "embeddings")
     Dedup.semanticDedupWith(emb, col("vec_id"), col("embedding"),
@@ -751,9 +764,6 @@ object Queries {
       col("doc_id"), col("text"), shingleSize = 5,
       numHashes = 128, bands = 16, threshold = 0.6)
 
-  private val lshIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Incremental near-dup detection against a persisted LSH index: docs
     * with doc_id % 4 != 0 are the standing corpus (indexed once per input
     * dir, memoized), the rest arrive as the "new batch" and are probed
@@ -763,17 +773,12 @@ object Queries {
     * exact HUGEINT signature SQL with a corpus/batch split. */
   def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
-    val path = lshIndexes.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-lsh-idx")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try org.apache.spark.network.util.JavaUtils
-          .deleteRecursively(root.toFile)
-        catch { case _: Throwable => () }))
+    val path = standing("lsh-idx", dir) { root =>
       LshIndex.build(docs.filter(col("doc_id") % 4 =!= 0),
         col("doc_id"), col("text"),
-        root.toString, shingleSize = 5, numHashes = 128, bands = 16)
-      root.toString
-    })
+        root, shingleSize = 5, numHashes = 128, bands = 16)
+      root
+    }
     // the fused probe: one signing pass, intermediates cached within the
     // call and freed before return, result re-entering as a batch-bounded
     // local relation — 3 actions instead of 3 recomputing action chains
@@ -781,9 +786,6 @@ object Queries {
         col("doc_id"), col("text"), threshold = 0.6)
       .orderBy(col("batch_id"), col("corpus_id"))
   }
-
-  private val spanIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Incremental substring dedup against a persisted gram index: docs
     * with doc_id % 4 != 0 are the standing corpus (indexed once per
@@ -794,22 +796,14 @@ object Queries {
     * reuses its FNV gram SQL with a corpus/batch split. */
   def dedupSpansIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
-    val path = spanIndexes.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-span-idx")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try org.apache.spark.network.util.JavaUtils
-          .deleteRecursively(root.toFile)
-        catch { case _: Throwable => () }))
+    val path = standing("span-idx", dir) { root =>
       SpanIndex.build(docs.filter(col("doc_id") % 4 =!= 0),
-        col("doc_id"), col("text"), root.toString, k = 5)
-      root.toString
-    })
+        col("doc_id"), col("text"), root, k = 5)
+      root
+    }
     SpanIndex.probe(spark, path, docs.filter(col("doc_id") % 4 === 0),
       col("doc_id"), col("text"))
   }
-
-  private val curateIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Corpus-tuned config shared by the curate-pipeline query and its
     * index seed — the [[graft.streaming.Curation]] defaults with the
@@ -844,19 +838,18 @@ object Queries {
     * first use per input dir) — exposed so the bench's per-stage
     * breakdown probes the SAME index the composed query runs against. */
   private[graft] def ensureCurateIndex(spark: SparkSession, dir: String): String =
-    curateIndexes.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-curate-idx")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try org.apache.spark.network.util.JavaUtils
-          .deleteRecursively(root.toFile)
-        catch { case _: Throwable => () }))
-      LshIndex.build(
-        curateChunks(t(spark, dir, "documents")
-          .filter(col("doc_id") % 4 =!= 0)),
-        col("chunk_uid"), col("chunk_text"),
-        root.toString, shingleSize = 5, numHashes = 128, bands = 16)
-      root.toString
-    })
+    standing("curate-idx", dir)(root =>
+      chunkIndex(t(spark, dir, "documents"))(root))
+
+  /** A standing chunk index at `root` over the corpus docs (doc_id % 4 !=
+    * 0), gopher-passed and chunked. Each composite builds its own: appends
+    * from one must not leak into another's probe base. */
+  private def chunkIndex(docs: DataFrame)(root: String): String = {
+    LshIndex.build(curateChunks(docs.filter(col("doc_id") % 4 =!= 0)),
+      col("chunk_uid"), col("chunk_text"),
+      root, shingleSize = 5, numHashes = 128, bands = 16)
+    root
+  }
 
   /** The batch half's gopher + chunk front (the composed query's first
     * two stages) — bench-only view for the per-stage breakdown. */
@@ -900,9 +893,6 @@ object Queries {
     }
   }
 
-  private val dsirCurateState = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, graft.pipeline.Dsir.Model)]()
-
   /** [[curatePipeline]] with a FITTED model composed in through the
     * `extraFilter` hook ([[graft.streaming.CurationConfig.extraFilter]]):
     * a DSIR importance model (target = `lang = 'en'`, 256 buckets) is fit
@@ -917,18 +907,8 @@ object Queries {
     * whole composition in one statement. */
   def curatePipelineDsir(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
-    val (path, model) = dsirCurateState.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-curate-dsir")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try org.apache.spark.network.util.JavaUtils
-          .deleteRecursively(root.toFile)
-        catch { case _: Throwable => () }))
-      LshIndex.build(curateChunks(docs.filter(col("doc_id") % 4 =!= 0)),
-        col("chunk_uid"), col("chunk_text"),
-        root.toString, shingleSize = 5, numHashes = 128, bands = 16)
-      (root.toString,
-        Dsir.fit(docs, col("text"), col("lang") === "en", nBuckets = 256))
-    })
+    val path = standing("curate-dsir", dir)(chunkIndex(docs))
+    val model = dsirModel(spark, dir)
     graft.streaming.Curation.curateBatch(spark, path,
       docs.filter(col("doc_id") % 4 === 0),
       col("doc_id"), col("text"),
@@ -939,13 +919,10 @@ object Queries {
     }
   }
 
-  private val contamGates = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.pipeline.ContamGate]()
-  private def contamGate(spark: SparkSession, dir: String) =
-    contamGates.computeIfAbsent(dir, _ =>
-      graft.pipeline.Contamination.fitGate(
-        t(spark, dir, "documents").filter(col("source") === "src0"),
-        col("text"), n = 5))
+  private val contamGate = new Fit("contam_gate")((spark, dir) =>
+    graft.pipeline.Contamination.fitGate(
+      t(spark, dir, "documents").filter(col("source") === "src0"),
+      col("text"), n = 5))
 
   /** [[decontaminate]]'s overlap report computed by the ROW-LOCAL gate
     * ([[graft.pipeline.Contamination.fitGate]] — benchmark gram
@@ -963,9 +940,6 @@ object Queries {
       .orderBy(col("doc_id"))
   }
 
-  private val decontamCurateState = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, graft.pipeline.ContamGate)]()
-
   /** [[curatePipeline]] with benchmark DECONTAMINATION composed in through
     * the `extraFilter` hook: batch docs sharing ANY distinct word 5-gram
     * with the benchmark slice (`source = 'src0'`) drop after the gopher
@@ -977,17 +951,8 @@ object Queries {
     * [[CurateSql.curatePipelineDecontamSql]]. */
   def curatePipelineDecontam(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
-    val (path, gate) = decontamCurateState.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-curate-decon")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try org.apache.spark.network.util.JavaUtils
-          .deleteRecursively(root.toFile)
-        catch { case _: Throwable => () }))
-      LshIndex.build(curateChunks(docs.filter(col("doc_id") % 4 =!= 0)),
-        col("chunk_uid"), col("chunk_text"),
-        root.toString, shingleSize = 5, numHashes = 128, bands = 16)
-      (root.toString, contamGate(spark, dir))
-    })
+    val path = standing("curate-decon", dir)(chunkIndex(docs))
+    val gate = contamGate(spark, dir)
     graft.streaming.Curation.curateBatch(spark, path,
       docs.filter(col("doc_id") % 4 === 0),
       col("doc_id"), col("text"),
@@ -996,9 +961,6 @@ object Queries {
       survivors => curateSink(spark, "curate_pipeline_decontam", survivors)
     }
   }
-
-  private val qfilterCurateIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** [[curatePipeline]] with the TRAINED quality filter composed in
     * through the `extraFilter` hook: the [[graft.pipeline
@@ -1014,17 +976,7 @@ object Queries {
     * whole composition in one statement. */
   def curatePipelineQfilter(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
-    val path = qfilterCurateIndexes.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-curate-qf")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try org.apache.spark.network.util.JavaUtils
-          .deleteRecursively(root.toFile)
-        catch { case _: Throwable => () }))
-      LshIndex.build(curateChunks(docs.filter(col("doc_id") % 4 =!= 0)),
-        col("chunk_uid"), col("chunk_text"),
-        root.toString, shingleSize = 5, numHashes = 128, bands = 16)
-      root.toString
-    })
+    val path = standing("curate-qf", dir)(chunkIndex(docs))
     val m = qfilterModel(spark, dir)
     val Q = graft.pipeline.QualityClassifier
     graft.streaming.Curation.curateBatch(spark, path,
@@ -1037,9 +989,6 @@ object Queries {
     }
   }
 
-  private val spanCurateIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   /** [[curatePipeline]] with the SPAN-CUT stage composed in
     * ([[graft.streaming.Curation.curateBatch]] with `spanIndexPath`): the
     * standing state is the corpus chunk index PLUS a span index over the
@@ -1049,22 +998,8 @@ object Queries {
     * one statement. */
   def curatePipelineSpans(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
-    val (lshPath, spanPath) = spanCurateIndexes.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-curate-span")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try org.apache.spark.network.util.JavaUtils
-          .deleteRecursively(root.toFile)
-        catch { case _: Throwable => () }))
-      val corpus = docs.filter(col("doc_id") % 4 =!= 0)
-      LshIndex.build(curateChunks(corpus),
-        col("chunk_uid"), col("chunk_text"),
-        s"$root/lsh", shingleSize = 5, numHashes = 128, bands = 16)
-      graft.pipeline.SpanIndex.build(
-        corpus.filter(Quality.gopherPasses(col("text"),
-          curateCfg.minTokens, curateCfg.maxTokens)),
-        col("doc_id"), col("text"), s"$root/span", k = 5)
-      (s"$root/lsh", s"$root/span")
-    })
+    val (lshPath, spanPath) =
+      standing("curate-span", dir)(lshAndSpanIndexes(docs))
     graft.streaming.Curation.curateBatch(spark, lshPath,
       docs.filter(col("doc_id") % 4 === 0),
       col("doc_id"), col("text"),
@@ -1073,20 +1008,24 @@ object Queries {
     }
   }
 
-  private val fullCurateIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  /** The span and full composites' standing state under `root`: the
+    * corpus chunk index (`lsh`) plus a span index over the gopher-passed
+    * corpus docs' word 5-grams (`span`). */
+  private def lshAndSpanIndexes(docs: DataFrame)(root: String): (String, String) = {
+    val lsh = chunkIndex(docs)(s"$root/lsh")
+    graft.pipeline.SpanIndex.build(
+      docs.filter(col("doc_id") % 4 =!= 0).filter(Quality.gopherPasses(
+        col("text"), curateCfg.minTokens, curateCfg.maxTokens)),
+      col("doc_id"), col("text"), s"$root/span", k = 5)
+    (lsh, s"$root/span")
+  }
+
   /** The DSIR importance model (target = `lang = 'en'`, 256 buckets),
-    * fitted once per input dir and shared by dsir_weights, dsir_sample
-    * and the full curation composite — the fit is one map-side-combined
-    * aggregation, but re-running it per query invocation re-paid that
-    * corpus pass for an identical lambda table. */
-  private val dsirModels = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.pipeline.Dsir.Model]()
-  private def dsirModel(
-      spark: SparkSession, dir: String): graft.pipeline.Dsir.Model =
-    dsirModels.computeIfAbsent(dir, _ =>
-      Dsir.fit(t(spark, dir, "documents"), col("text"),
-        col("lang") === "en", nBuckets = 256))
+    * shared by dsir_weights, dsir_sample and the full curation
+    * composite. */
+  private val dsirModel = new Fit("dsir")((spark, dir) =>
+    Dsir.fit(t(spark, dir, "documents"), col("text"),
+      col("lang") === "en", nBuckets = 256))
 
   /** Named cold-fit triggers for the memoized per-corpus MODELS the
     * bench's untimed warm-up pass otherwise absorbs silently: each thunk
@@ -1097,15 +1036,8 @@ object Queries {
     * Index builds (LSH/span/SRP standing state) are not listed: their
     * cold cost is already visible as the composites' first-pass wall. */
   private[graft] def coldFits(
-      spark: SparkSession, dir: String): Seq[(String, () => Unit)] = Seq(
-    "bpe" -> (() => { bpeModel(spark, dir); () }),
-    "kmeans" -> (() => { kmeansModel(spark, dir); () }),
-    "dsir" -> (() => { dsirModel(spark, dir); () }),
-    "pq" -> (() => { pqModel(spark, dir); () }),
-    "ivfpq" -> (() => { ivfPqModel(spark, dir); () }),
-    "qfilter" -> (() => { qfilterModel(spark, dir); () }),
-    "lang" -> (() => { langModel(spark, dir); () }),
-    "contam_gate" -> (() => { contamGate(spark, dir); () }))
+      spark: SparkSession, dir: String): Seq[(String, () => Unit)] =
+    fits.toSeq.map(f => f.name -> (() => { f(spark, dir); () }))
 
   /** THE FULL COMPOSITION — every model-driven stage in one streaming
     * body: batch docs pass gopher, then the `extraFilter` conjunction of
@@ -1121,22 +1053,8 @@ object Queries {
     * ONE statement. */
   def curatePipelineFull(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
-    val (lshPath, spanPath) = fullCurateIndexes.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-curate-full")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try org.apache.spark.network.util.JavaUtils
-          .deleteRecursively(root.toFile)
-        catch { case _: Throwable => () }))
-      val corpus = docs.filter(col("doc_id") % 4 =!= 0)
-      LshIndex.build(curateChunks(corpus),
-        col("chunk_uid"), col("chunk_text"),
-        s"$root/lsh", shingleSize = 5, numHashes = 128, bands = 16)
-      graft.pipeline.SpanIndex.build(
-        corpus.filter(Quality.gopherPasses(col("text"),
-          curateCfg.minTokens, curateCfg.maxTokens)),
-        col("doc_id"), col("text"), s"$root/span", k = 5)
-      (s"$root/lsh", s"$root/span")
-    })
+    val (lshPath, spanPath) =
+      standing("curate-full", dir)(lshAndSpanIndexes(docs))
     val fullModel = dsirModel(spark, dir)
     val gate = contamGate(spark, dir)
     val qf = qfilterModel(spark, dir)
@@ -1167,9 +1085,6 @@ object Queries {
     Dedup.embeddingNearDupPairs(t(spark, dir, "embeddings"),
       col("vec_id"), col("embedding"), threshold = 0.35, nBits = 4)
 
-  private val srpIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Incremental embedding near-dup against a persisted SRP index —
     * [[dedupIncremental]]'s embedding-side sibling: vec_id % 4 != 0 is the
     * standing corpus (indexed once per input dir, memoized), the rest
@@ -1177,16 +1092,11 @@ object Queries {
     * oracle reuses its inlined-hyperplane SQL with a split tail. */
   def dedupEmbeddingIncremental(spark: SparkSession, dir: String): DataFrame = {
     val emb = t(spark, dir, "embeddings")
-    val path = srpIndexes.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-srp-idx")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try org.apache.spark.network.util.JavaUtils
-          .deleteRecursively(root.toFile)
-        catch { case _: Throwable => () }))
+    val path = standing("srp-idx", dir) { root =>
       SrpIndex.build(emb.filter(col("vec_id") % 4 =!= 0),
-        col("vec_id"), col("embedding"), root.toString, nBits = 4)
-      root.toString
-    })
+        col("vec_id"), col("embedding"), root, nBits = 4)
+      root
+    }
     SrpIndex.probe(spark, path, emb.filter(col("vec_id") % 4 === 0),
         col("vec_id"), col("embedding"), threshold = 0.35)
       .orderBy(col("batch_id"), col("corpus_id"))
@@ -1206,23 +1116,18 @@ object Queries {
     t(spark, dir, "documents").select(
       col("doc_id"), T.qualityScore(col("text")).as("quality"))
 
-  private val qfilterModels = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.pipeline.QualityClassifier.Model]()
-
-  /** The trained quality filter's model, fitted once per input dir:
-    * provenance-seeded labels (positives = the curated seed sources
-    * src0..src9, the fastText-filter setup), 30 full-batch GD
-    * iterations ([[graft.pipeline.QualityClassifier.fit]] — each ONE
+  /** The trained quality filter's model: provenance-seeded labels
+    * (positives = the curated seed sources src0..src9, the
+    * fastText-filter setup), 30 full-batch GD iterations
+    * ([[graft.pipeline.QualityClassifier.fit]] — each ONE
     * map-side-combined aggregate). */
-  private def qfilterModel(
-      spark: SparkSession, dir: String): graft.pipeline.QualityClassifier.Model =
-    qfilterModels.computeIfAbsent(dir, _ =>
-      graft.pipeline.QualityClassifier.fit(
-        t(spark, dir, "documents"),
-        graft.pipeline.QualityClassifier.features(col("text")),
-        when(substring(col("source"), 4, 8).cast("int") < 10, 1.0)
-          .otherwise(0.0),
-        iters = QfilterSql.Iters, lr = 0.5))
+  private val qfilterModel = new Fit("qfilter")((spark, dir) =>
+    graft.pipeline.QualityClassifier.fit(
+      t(spark, dir, "documents"),
+      graft.pipeline.QualityClassifier.features(col("text")),
+      when(substring(col("source"), 4, 8).cast("int") < 10, 1.0)
+        .otherwise(0.0),
+      iters = QfilterSql.Iters, lr = 0.5))
 
   /** The trained weights themselves (one row per feature, 1-based index)
     * — the oracle replays all 30 GD iterations in SQL and must land on
@@ -1247,9 +1152,6 @@ object Queries {
       .orderBy(col("doc_id"))
   }
 
-  private val langModels = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.functions.LangModel]()
-
   /** Cavnar–Trenkle rank-profile language ID
     * ([[graft.pipeline.LangProfile]]): char-trigram profiles fitted on
     * the labeled corpus (memoized per input dir — fit is one aggregation
@@ -1258,11 +1160,9 @@ object Queries {
     * replays fit + classify in one statement. ([[T.langId]], the
     * stopword heuristic this replaced, remains the cheap signal inside
     * [[pipelineClean]].) */
-  private def langModel(
-      spark: SparkSession, dir: String): graft.functions.LangModel =
-    langModels.computeIfAbsent(dir, _ =>
-      graft.pipeline.LangProfile.fit(
-        t(spark, dir, "documents"), col("text"), col("lang")))
+  private val langModel = new Fit("lang")((spark, dir) =>
+    graft.pipeline.LangProfile.fit(
+      t(spark, dir, "documents"), col("text"), col("lang")))
 
   def langId(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
@@ -1345,20 +1245,11 @@ object Queries {
     t(spark, dir, "documents").select(
       col("doc_id"), T.subwordCount(col("text")).as("subwords"))
 
-  private val bpeModels = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.pipeline.Bpe.BpeModel]()
-
-  /** The corpus-trained BPE model, fitted once per input dir — standing
-    * state like every other fitted model here (qfilter, lang profiles,
-    * PQ/IVF-PQ codebooks, contam gate): five queries train on identical
-    * ([[BpeSql.NumMerges]], [[BpeSql.MaxWords]]) parameters, and each
-    * re-fit re-paid the word-count corpus pass + driver merge loop for a
-    * bit-identical merge table. */
-  private def bpeModel(
-      spark: SparkSession, dir: String): graft.pipeline.Bpe.BpeModel =
-    bpeModels.computeIfAbsent(dir, _ =>
-      graft.pipeline.Bpe.train(t(spark, dir, "documents"), col("text"),
-        numMerges = BpeSql.NumMerges, maxWords = BpeSql.MaxWords))
+  /** The corpus-trained BPE model: five queries train on identical
+    * ([[BpeSql.NumMerges]], [[BpeSql.MaxWords]]) parameters. */
+  private val bpeModel = new Fit("bpe")((spark, dir) =>
+    graft.pipeline.Bpe.train(t(spark, dir, "documents"), col("text"),
+      numMerges = BpeSql.NumMerges, maxWords = BpeSql.MaxWords))
 
   /** Corpus-trained BPE merge table (rank, lft, rgt): the published
     * frequency-ranked pair-merge loop over the top-256 word types, 32
@@ -1524,20 +1415,16 @@ object Queries {
     Similarity.ivfTopK(queries, corpus, 5, nCells = 8, nProbe = 3)
   }
 
-  private val pqModels = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.pipeline.Pq.Model]()
-
   /** Product-quantization ANN ([[graft.pipeline.Pq]]): per-subspace
     * codebooks fit once per corpus, vectors encoded to m=8 4-bit-range
     * codes, top-5 by the ADC scan (per-query LUTs as ONE plan reference
     * object — the scan reads codes, never vectors). Fully oracled:
     * [[PqSql.annPqSql]] replays fit + encode + LUT + ADC in one
     * statement. */
-  private def pqModel(spark: SparkSession, dir: String): graft.pipeline.Pq.Model =
-    pqModels.computeIfAbsent(dir, _ =>
-      graft.pipeline.Pq.fit(t(spark, dir, "embeddings"),
-        col("vec_id"), col("embedding"),
-        dim = 64, m = PqSql.M, ksub = PqSql.Ksub, iters = 2))
+  private val pqModel = new Fit("pq")((spark, dir) =>
+    graft.pipeline.Pq.fit(t(spark, dir, "embeddings"),
+      col("vec_id"), col("embedding"),
+      dim = 64, m = PqSql.M, ksub = PqSql.Ksub, iters = 2))
 
   def annPq(spark: SparkSession, dir: String): DataFrame = {
     val emb = t(spark, dir, "embeddings")
@@ -1550,9 +1437,6 @@ object Queries {
       .orderBy(col("qid"), col("rank"))
   }
 
-  private val ivfPqModels = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.pipeline.IvfPq.Model]()
-
   /** IVF-PQ ANN ([[graft.pipeline.IvfPq]] — the IVFADC scheme, Jégou et
     * al. TPAMI 2011 §IV): coarse cells + product-quantized RESIDUALS;
     * each query ADC-scans the codes of its `nProbe` nearest cells only
@@ -1560,13 +1444,11 @@ object Queries {
     * are cell-partitioned). Fully oracled: [[IvfPqSql.annIvfPqSql]]
     * replays coarse fit + residuals + subspace fit + probe + LUT + ADC
     * in one statement. */
-  private def ivfPqModel(
-      spark: SparkSession, dir: String): graft.pipeline.IvfPq.Model =
-    ivfPqModels.computeIfAbsent(dir, _ =>
-      graft.pipeline.IvfPq.fit(t(spark, dir, "embeddings"),
-        col("vec_id"), col("embedding"),
-        dim = IvfPqSql.Dim, nCells = IvfPqSql.NCells, m = IvfPqSql.M,
-        ksub = IvfPqSql.Ksub, iters = 2))
+  private val ivfPqModel = new Fit("ivfpq")((spark, dir) =>
+    graft.pipeline.IvfPq.fit(t(spark, dir, "embeddings"),
+      col("vec_id"), col("embedding"),
+      dim = IvfPqSql.Dim, nCells = IvfPqSql.NCells, m = IvfPqSql.M,
+      ksub = IvfPqSql.Ksub, iters = 2))
 
   def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val emb = t(spark, dir, "embeddings")
@@ -1595,9 +1477,6 @@ object Queries {
       .orderBy(col("qid"), col("rank"))
   }
 
-  private val ivfPqIndexPaths = new java.util.concurrent.ConcurrentHashMap[
-    String, String]()
-
   /** [[annIvfPq]] through the PERSISTED index ([[graft.pipeline
     * .IvfPqIndex]]): build once (model tables + cell-partitioned CODES
     * on disk — the vectors are not stored), then the probe is a
@@ -1606,18 +1485,13 @@ object Queries {
     * ranking. */
   def annIvfPqIndex(spark: SparkSession, dir: String): DataFrame = {
     val emb = t(spark, dir, "embeddings")
-    val path = ivfPqIndexPaths.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-ivfpq-idx")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try org.apache.spark.network.util.JavaUtils
-          .deleteRecursively(root.toFile)
-        catch { case _: Throwable => () }))
+    val path = standing("ivfpq-idx", dir) { root =>
       graft.pipeline.IvfPqIndex.build(
-        emb, col("vec_id"), col("embedding"), root.toString,
+        emb, col("vec_id"), col("embedding"), root,
         dim = IvfPqSql.Dim, nCells = IvfPqSql.NCells, m = IvfPqSql.M,
         ksub = IvfPqSql.Ksub, iters = 2)
-      root.toString
-    })
+      root
+    }
     graft.pipeline.IvfPqIndex.topK(spark, path,
         emb.filter(col("vec_id") < 5), col("vec_id"), col("embedding"),
         k = IvfPqSql.TopK, nProbe = IvfPqSql.NProbe)
@@ -1663,7 +1537,7 @@ object Queries {
     * planted garbage ([[graft.sources.Jsonl.split]]). */
   def jsonlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-jsonl").toString
+    val tmp = Memo.scratchDir("graft-jsonl")
     graft.sources.Jsonl.write(
       t(spark, dir, "documents").select("doc_id", "text", "lang", "source"),
       s"$tmp/documents.jsonl")
@@ -1917,13 +1791,6 @@ object Queries {
         col("n_frames"), col("duration_ms"), col("amp_sum"), col("sq_sum"))
   }
 
-  // compact_topic warehouses, memoized per input dir: Bench/TimeQuery and
-  // repeated Verify calls invoke a query several times, and rebuilding the
-  // topic each call would leak a fresh on-disk temp warehouse per
-  // invocation. Built once per (dir, JVM), deleted on JVM exit.
-  private val compactWarehouses =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.core.catalog.Warehouse]()
-
   /** Kafka-style log compaction through the REAL storage path: ingest the
     * events table into an on-disk topic keyed by user_id (murmur2 routing),
     * run [[graft.core.log.LogRetention.compact]] (file rewrite + one-swap
@@ -1937,13 +1804,8 @@ object Queries {
   def compactTopic(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.catalog.{TopicCatalog, Warehouse}
     import graft.core.log.{LogReader, LogRetention}
-    val wh = compactWarehouses.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-compact-q")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try org.apache.spark.network.util.JavaUtils
-          .deleteRecursively(root.toFile)
-        catch { case _: Throwable => () }))
-      val w = Warehouse(root.toString)
+    val wh = standing("compact-q", dir) { root =>
+      val w = Warehouse(root)
       TopicCatalog.createTopic(spark, w, "ev", 4)
       // the log schema persists (key, value) — event_id rides in value
       LogWriter.append(spark, w, "ev",
@@ -1953,7 +1815,7 @@ object Queries {
         "event_id")
       LogRetention.compact(spark, w, "ev")
       w
-    })
+    }
     LogReader.scan(spark, wh, "ev")
       .select(col("key").cast("long").as("user_id"),
         col("value").cast("long").as("event_id"))

@@ -217,7 +217,7 @@ class CompactionSpec extends SparkSpec {
     // invalidate — the next read must see the new column, not nulls
     (0 until 10).map(i => (i.toLong, s"x$i", i % 2)).toDF("id", "extra", "shard")
       .write.mode("overwrite").partitionBy("shard").parquet(table)
-    graft.pipeline.IndexMaintenance.invalidateSchema(root)
+    graft.core.Memo.invalidate(root)
     val v2 = graft.pipeline.IndexMaintenance
       .readWithDelta(spark, table, "shard", Seq(0, 1))
     assert(v2.columns.toSet === Set("id", "extra", "shard"))
@@ -246,7 +246,7 @@ class CompactionSpec extends SparkSpec {
       .write.mode("overwrite").partitionBy("shard").parquet(table)
     graft.pipeline.IndexMaintenance.appendDelta(
       Seq((200L, "x200", 0)).toDF("id", "extra", "shard"), table)
-    graft.pipeline.IndexMaintenance.invalidateSchema(root)
+    graft.core.Memo.invalidate(root)
     val v2 = graft.pipeline.IndexMaintenance
       .readWithDelta(spark, table, "shard", Seq(0, 1))
     assert(v2.columns.toSet === Set("id", "extra", "shard"))

@@ -42,6 +42,31 @@ class GroupsStreamingSpec extends SparkSpec {
     assert(ConsumerGroup.committed(spark, wh, "g1", "t") === next1)
   }
 
+  test("a member committing its polled map never rewinds a peer's partitions") {
+    val wh = Warehouse(tmpDir("graft-grp-peer"))
+    TopicCatalog.createTopic(spark, wh, "t", 4)
+    // distinct keys, so every partition (both members' ranges) holds data
+    LogWriter.append(spark, wh, "t",
+      someRecords(400).withColumn("key", concat(lit("k"), col("id"))), "id")
+    val Seq(a, b) = ConsumerGroup.subscribe(spark, wh, "g", Seq(
+      Negotiation.Member("a", Seq("range")),
+      Negotiation.Member("b", Seq("range"))), Seq("t")).sortBy(_.memberId)
+    def pollCommit(m: ConsumerGroup.Membership): Unit = {
+      val (_, next) = ConsumerGroup.poll(spark, wh, "g", m, "t", max = 10)
+      ConsumerGroup.commit(spark, wh, "g", "t", next)
+    }
+    pollCommit(b) // the group's committed map now holds b's partitions
+    val (_, aNext) = ConsumerGroup.poll(spark, wh, "g", a, "t", max = 10)
+    pollCommit(b)
+    val bCommitted = ConsumerGroup.committed(spark, wh, "g", "t")
+      .filter { case (p, _) => b.assignment("t").contains(p) }
+    ConsumerGroup.commit(spark, wh, "g", "t", aNext)
+    val after = ConsumerGroup.committed(spark, wh, "g", "t")
+    assert(after.filter { case (p, _) => b.assignment("t").contains(p) } === bCommitted)
+    assert(bCommitted === b.assignment("t").map(_ -> 20L).toMap)
+    assert(aNext.keySet === a.assignment("t").toSet)
+  }
+
   test("offset-commit retention keeps the latest commit per partition; committed() unchanged") {
     val wh = Warehouse(tmpDir("graft-oret"))
     TopicCatalog.createTopic(spark, wh, "t", 2)
