@@ -78,8 +78,7 @@ object Verify {
       val victim = graft.core.log.IndexCache.entries(spark, wh, "t")
         .filter(e => e.isData && e.baseOffset == 50L).head
       val vp = new org.apache.hadoop.fs.Path(victim.file)
-      vp.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        .delete(vp, false)
+      graft.core.Fs(vp).delete(vp, false)
       val caught = Admin.verifyTopic(spark, wh, "t")
       System.err.println(
         s"[verify] integrity selftest: lifecycle_ok=${clean.ok} " +

@@ -5,7 +5,6 @@ import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardOpenOpti
 import java.util.concurrent.{ConcurrentHashMap, Executors, ScheduledFuture, TimeUnit}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReference}
 import java.util.concurrent.locks.ReentrantLock
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.core.catalog.Warehouse
 
@@ -285,7 +284,7 @@ object Locks {
   private def acquireFile(
       wh: Warehouse, name: String, deadline: Long, staleMs: Long): HeldFile = {
     val lock = lockPath(wh, name)
-    val fs = lock.getFileSystem(new Configuration())
+    val fs = Fs(lock)
     fs.mkdirs(lock.getParent)
     var held: HeldFile = null
     while (held == null) {

@@ -1,7 +1,6 @@
 package graft.core
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
 /** The one registry of memoized driver-side state: fitted models, standing
@@ -54,24 +53,18 @@ object Memo {
     ()
   }
 
-  private val conf = new Configuration()
-
   /** Fingerprint of a directory's listing — name, length and modification
     * time of each entry, skipping `_`- and `.`-prefixed names (commit
     * markers, staging and checksum debris that no reader opens). Empty for
     * a missing directory. One driver-side listing call, no Spark job. */
-  def listing(dir: String): String = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) ""
-    else fs.listStatus(p)
+  def listing(dir: String): String =
+    Fs.list(new Path(dir))
       .filterNot { s =>
         val n = s.getPath.getName
         n.startsWith("_") || n.startsWith(".")
       }
       .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
       .sorted.mkString(",")
-  }
 
   private val scratch = new ConcurrentLinkedQueue[java.io.File]()
 

@@ -2,6 +2,7 @@ package graft.core.admin
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import graft.core.Fs
 import graft.core.catalog.{TopicCatalog, Warehouse}
 import graft.core.log.IndexCache
 
@@ -179,9 +180,8 @@ object Admin {
       topic: String,
       deep: Boolean = false): TopicIntegrity = {
     TopicCatalog.topicInfo(spark, wh, topic) // throws UnknownTopicException
-    val conf = new org.apache.hadoop.conf.Configuration()
     val logDir = new org.apache.hadoop.fs.Path(wh.logDir(topic))
-    val fs = logDir.getFileSystem(conf)
+    val fs = Fs(logDir)
     val data = IndexCache.entries(spark, wh, topic).filter(_.isData)
 
     // 1. indexed-but-absent (THE hole ignoreMissingFiles masks)
@@ -210,8 +210,7 @@ object Admin {
     val indexedPaths =
       data.map(e => new org.apache.hadoop.fs.Path(e.file).toUri.getPath).toSet
     val orphans =
-      if (!fs.exists(logDir)) Seq.empty[String]
-      else fs.listStatus(logDir).toSeq
+      Fs.list(logDir).toSeq
         .filter(d => d.isDirectory && d.getPath.getName.startsWith("partition="))
         .flatMap(d => fs.listStatus(d.getPath).toSeq)
         .filter { f =>

@@ -77,9 +77,7 @@ object TopicCatalog {
     * even though the complete new registry sits in the rewrite dir. Called
     * on every catalog read path, like LogIndex.heal. */
   private def healCatalog(wh: Warehouse): Unit = {
-    val p = new org.apache.hadoop.fs.Path(wh.catalogDir)
-    graft.core.Swap.heal(
-      p.getFileSystem(new org.apache.hadoop.conf.Configuration()), wh.catalogDir)
+    graft.core.Swap.heal(Fs(wh.catalogDir), wh.catalogDir)
   }
 
   /** All registered topics. Reference: InMemoryTopicMetadataRepository.getActiveTopics. */
@@ -155,9 +153,8 @@ object TopicCatalog {
       throw new UnknownTopicException(s"unknown topic '$topic'")
     val n = numPartitions(spark, wh, topic)
     graft.core.Locks.withTopicLock(wh, topic, n) {
-      val conf = new org.apache.hadoop.conf.Configuration()
       val idx = new org.apache.hadoop.fs.Path(wh.indexDir(topic))
-      val fs = idx.getFileSystem(conf)
+      val fs = Fs(idx)
       // leftover rewrite staging goes FIRST: if we crashed after deleting the
       // live dir but before the stale staging, the next reader's heal() would
       // rename the staging back and resurrect the index of a deleted topic
@@ -175,9 +172,7 @@ object TopicCatalog {
     * ([[graft.core.Swap]]); crash mid-swap is finished by [[healCatalog]]. */
   private def rewriteDir(spark: SparkSession, df: DataFrame, dir: String): Unit = {
     df.coalesce(1).write.mode("overwrite").parquet(graft.core.Swap.rewriteDir(dir))
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
-    graft.core.Swap.install(fs, dir)
+    graft.core.Swap.install(Fs(dir), dir)
   }
 
   /** Register every topic as a SQL temp view named `topic_<name>`, backed by
@@ -191,9 +186,6 @@ object TopicCatalog {
     }
   }
 
-  private[graft] def dirExists(path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    fs.exists(p)
-  }
+  private[graft] def dirExists(path: String): Boolean =
+    Fs(path).exists(new org.apache.hadoop.fs.Path(path))
 }

@@ -3,6 +3,7 @@ package graft.core.groups
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.core.Fs
 import graft.core.catalog.{TopicCatalog, Warehouse}
 import graft.core.log.{LogIndex, LogReader}
 
@@ -53,9 +54,7 @@ object ConsumerGroup {
   /** Finish a crashed [[retainCommits]] swap of one group's shard. */
   private def healOffsets(wh: Warehouse, groupId: String): Unit = {
     val dir = groupDir(wh, groupId)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
-    graft.core.Swap.heal(fs, dir)
+    graft.core.Swap.heal(Fs(dir), dir)
   }
 
   case class Membership(
@@ -103,8 +102,7 @@ object ConsumerGroup {
       topic: String): Map[Int, Long] = {
     validateGroupId(groupId)
     val dir = groupDir(wh, groupId)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs(dir)
     def midSwap(): Boolean =
       fs.exists(new org.apache.hadoop.fs.Path(graft.core.Swap.rewriteDir(dir))) ||
         fs.exists(new org.apache.hadoop.fs.Path(graft.core.Swap.oldDir(dir)))
@@ -200,9 +198,8 @@ object ConsumerGroup {
       retentionMs: Long,
       nowMs: Long = System.currentTimeMillis()): Unit = {
     val base = new org.apache.hadoop.fs.Path(offsetsBase(wh))
-    val fs = base.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    if (!fs.exists(base)) return
-    val names = fs.listStatus(base)
+    val fs = Fs(base)
+    val names = Fs.list(base)
       .filter(_.isDirectory)
       .map(_.getPath.getName)
       .filterNot(_.startsWith("."))

@@ -5,10 +5,12 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
-import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import graft.core.Fs
 
 /** Driver-side parquet I/O for the per-topic offset index.
   *
@@ -26,12 +28,11 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
   * [[graft.core.Schemas.index]] columns, and every Spark read of the dir
   * pins that schema explicitly ([[LogIndex.forTopic]]).
   *
-  * LOCAL-FS ASSUMPTION (r18 advice, documented): these paths build a bare
-  * `new Configuration()` — consistent with the rest of the repo's
-  * driver-side FS access — so a warehouse on a filesystem configured via
-  * `spark.hadoop.*` session settings would need the session's
-  * `hadoopConfiguration` threaded through here (and through
-  * [[IndexCache]]) first.
+  * LOCAL-FS ASSUMPTION: every path here resolves through
+  * [[graft.core.Fs]], the driver's one shared Hadoop configuration, which
+  * carries the defaults. It is the single place a session's `spark.hadoop.*`
+  * settings would be threaded for a warehouse on a configured filesystem
+  * (that threading is not done: the warehouse is a local directory).
   */
 private[graft] object IndexIO {
 
@@ -62,10 +63,7 @@ private[graft] object IndexIO {
   /** Every row of every data file under `indexDir` — no Spark job; one
     * parallel driver pass over the (compaction-bounded) file list. */
   def readRows(indexDir: String): Array[IndexRow] = {
-    val dir = new Path(indexDir)
-    val fs = dir.getFileSystem(new Configuration())
-    if (!fs.exists(dir)) return Array.empty
-    val files = fs.listStatus(dir)
+    val files = Fs.list(new Path(indexDir))
       .map(_.getPath)
       .filter { p =>
         val n = p.getName
@@ -80,10 +78,9 @@ private[graft] object IndexIO {
 
   private def readFile(path: Path): Array[IndexRow] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[IndexRow]
-    val reader = ParquetReader
-      .builder(new GroupReadSupport(), path)
-      .withConf(new Configuration())
-      .build()
+    val reader = new ParquetReader.Builder[Group](Fs.inputFile(path)) {
+      override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport
+    }.build()
     try {
       var g: Group = reader.read()
       while (g != null) {
@@ -105,7 +102,8 @@ private[graft] object IndexIO {
 
   /** Write `rows` as ONE parquet file at `path` — no Spark job. */
   def writeFile(path: Path, rows: Seq[IndexRow]): Unit = {
-    val conf = new Configuration()
+    // a private copy: a writer builder may set keys on the conf it is handed
+    val conf = new Configuration(Fs.conf)
     val writer = ExampleParquetWriter
       .builder(HadoopOutputFile.fromPath(path, conf))
       .withType(WriteSchema)
@@ -128,8 +126,7 @@ private[graft] object IndexIO {
   /** Round-trip sanity surface for specs: the footer row count of one
     * file, read driver-side. */
   private[graft] def fileRowCount(path: Path): Long = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      HadoopInputFile.fromPath(path, new Configuration()))
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(Fs.inputFile(path))
     try reader.getRecordCount finally reader.close()
   }
 }

@@ -1,10 +1,9 @@
 package graft.core.log
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Schemas
+import graft.core.{Fs, Schemas}
 import graft.core.catalog.{TopicCatalog, Warehouse}
 
 /** The per-file offset index, one directory per topic.
@@ -43,8 +42,8 @@ object LogIndex {
   /** Finish a crashed [[replace]] — [[graft.core.Swap.heal]] over the
     * topic's index dir, called on every read path. */
   private[graft] def heal(wh: Warehouse, topic: String): Unit = {
-    val live = new Path(wh.indexDir(topic))
-    graft.core.Swap.heal(live.getFileSystem(new Configuration()), wh.indexDir(topic))
+    val dir = wh.indexDir(topic)
+    graft.core.Swap.heal(Fs(dir), dir)
   }
 
   private def empty(spark: SparkSession): DataFrame =
@@ -60,19 +59,14 @@ object LogIndex {
   /** Every topic's index rows — diagnostics surface; hot paths read per
     * topic. */
   def all(spark: SparkSession, wh: Warehouse): DataFrame = {
-    val base = new Path(wh.indexBase)
-    val fs = base.getFileSystem(new Configuration())
-    if (!fs.exists(base)) empty(spark)
-    else {
-      val topics = fs.listStatus(base)
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .filterNot(n => // swap staging/aside dirs are never topics
-          graft.core.Swap.isStagingName(n) || n.startsWith("."))
-      topics.map(forTopic(spark, wh, _))
-        .reduceOption(_ union _)
-        .getOrElse(empty(spark))
-    }
+    val topics = Fs.list(new Path(wh.indexBase))
+      .filter(_.isDirectory)
+      .map(_.getPath.getName)
+      .filterNot(n => // swap staging/aside dirs are never topics
+        graft.core.Swap.isStagingName(n) || n.startsWith("."))
+    topics.map(forTopic(spark, wh, _))
+      .reduceOption(_ union _)
+      .getOrElse(empty(spark))
   }
 
   /** Next offset to assign, per partition — the analog of initializing
@@ -124,8 +118,7 @@ object LogIndex {
       rows: DataFrame): Unit = {
     val dir = wh.indexDir(topic)
     rows.coalesce(1).write.mode("overwrite").parquet(graft.core.Swap.rewriteDir(dir))
-    val fs = new Path(dir).getFileSystem(new Configuration())
-    graft.core.Swap.install(fs, dir)
+    graft.core.Swap.install(Fs(dir), dir)
     IndexCache.invalidate(wh, topic)
   }
 

@@ -1,10 +1,9 @@
 package graft.core.log
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Locks
+import graft.core.{Fs, Locks}
 import graft.core.catalog.Warehouse
 
 /** Log retention + compaction — segment lifecycle management.
@@ -59,10 +58,9 @@ object LogRetention {
       java.util.Arrays.asList(hwmRows: _*), graft.core.Schemas.index)
     LogIndex.replace(spark, wh, topic, keptRows.unionByName(hwmDf))
 
-    val conf = new Configuration()
     drop.foreach { e =>
       val p = new Path(e.file)
-      p.getFileSystem(conf).delete(p, false)
+      Fs(p).delete(p, false)
     }
     drop.map(_.file).toSeq
   }
@@ -106,9 +104,8 @@ object LogRetention {
   def vacuum(spark: SparkSession, wh: Warehouse, topic: String): Seq[String] =
     Locks.withTopicLock(wh, topic,
         graft.core.catalog.TopicCatalog.numPartitions(spark, wh, topic)) {
-      val conf = new Configuration()
       val logDir = new Path(wh.logDir(topic))
-      val fs = logDir.getFileSystem(conf)
+      val fs = Fs(logDir)
       if (!fs.exists(logDir)) return Seq.empty
       val indexed = IndexCache.entries(spark, wh, topic).filter(_.isData)
         .map(e => new Path(e.file).toUri.getPath).toSet
@@ -117,13 +114,10 @@ object LogRetention {
       // parquet write and the rename-in): `.delta=<topic>=<uid>` dirs under
       // the index base. `=` cannot appear in a validated topic name, so the
       // prefix match can never claim another topic's in-flight delta.
-      val indexBase = new Path(wh.indexBase)
-      if (fs.exists(indexBase)) {
-        fs.listStatus(indexBase).foreach { d =>
-          if (d.isDirectory && d.getPath.getName.startsWith(s".delta=$topic=")) {
-            fs.delete(d.getPath, true)
-            deleted += d.getPath.toString
-          }
+      Fs.list(new Path(wh.indexBase)).foreach { d =>
+        if (d.isDirectory && d.getPath.getName.startsWith(s".delta=$topic=")) {
+          fs.delete(d.getPath, true)
+          deleted += d.getPath.toString
         }
       }
       fs.listStatus(logDir).foreach { top =>
@@ -195,10 +189,9 @@ object LogRetention {
         java.util.Arrays.asList((indexRows ++ hwmRows): _*),
         graft.core.Schemas.index))
 
-    val conf = new Configuration()
     dataEntries.foreach { e =>
       val p = new Path(e.file)
-      p.getFileSystem(conf).delete(p, false)
+      Fs(p).delete(p, false)
     }
   }
 }

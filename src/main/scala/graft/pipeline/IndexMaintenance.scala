@@ -2,9 +2,9 @@ package graft.pipeline
 
 import java.util.UUID
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.Fs
 
 /** Shared compaction for the partitioned on-disk indexes ([[LshIndex]],
   * [[SrpIndex]], [[IvfIndex]]).
@@ -48,8 +48,8 @@ object IndexMaintenance {
         filesRemoved + o.filesRemoved)
   }
 
-  private def dataFiles(fs: FileSystem, dir: Path): Seq[Path] =
-    fs.listStatus(dir).toSeq
+  private def dataFiles(dir: Path): Seq[Path] =
+    Fs.list(dir).toSeq
       .filter(s => !s.isDirectory)
       .map(_.getPath)
       .filter { p =>
@@ -69,12 +69,8 @@ object IndexMaintenance {
   // every probe tolerates by construction.
 
   /** Data files currently in `<table>_delta/` (empty if absent). */
-  def deltaFiles(spark: SparkSession, table: String): Seq[String] = {
-    val dir = new Path(s"${table}_delta")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else dataFiles(fs, dir).map(_.toString)
-  }
+  def deltaFiles(spark: SparkSession, table: String): Seq[String] =
+    dataFiles(new Path(s"${table}_delta")).map(_.toString)
 
   /** Append a batch-scale frame as ONE file to the delta tail. */
   def appendDelta(df: DataFrame, table: String): Unit =
@@ -108,9 +104,8 @@ object IndexMaintenance {
     import org.apache.spark.sql.functions.col
     val schema = tableSchema(spark, table)
     val root = new Path(table)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val want = values.map(v => s"$partCol=$v").toSet
-    val listing = fs.listStatus(root).toSeq
+    val listing = Fs(root).listStatus(root).toSeq
     val partitioned = listing.exists(st =>
       st.isDirectory && st.getPath.getName.startsWith(s"$partCol="))
     val dirs = listing
@@ -188,8 +183,7 @@ object IndexMaintenance {
         .dropDuplicates()
         .repartition(org.apache.spark.sql.functions.col(partCol))
         .write.mode("append").partitionBy(partCol).parquet(table)
-      val fs = new Path(s"${table}_delta")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = Fs(s"${table}_delta")
       files.foreach(f => fs.delete(new Path(f), false))
       CompactStats(1, files.size)
     }
@@ -206,13 +200,13 @@ object IndexMaintenance {
       dedupe: DataFrame => DataFrame,
       minFiles: Int = 2): CompactStats = {
     val root = new Path(table)
-    val fs = root.getFileSystem(new Configuration())
+    val fs = Fs(root)
     if (!fs.exists(root)) return CompactStats(0, 0)
     val partDirs = fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.contains("="))
       .map(_.getPath)
     def compactOne(dir: Path): CompactStats = {
-      val old = dataFiles(fs, dir)
+      val old = dataFiles(dir)
       if (old.size < minFiles) CompactStats(0, 0)
       else {
         val tag = UUID.randomUUID().toString.take(8)
@@ -221,7 +215,7 @@ object IndexMaintenance {
           dedupe(spark.read.parquet(old.map(_.toString): _*))
             .coalesce(1)
             .write.mode("overwrite").parquet(staging.toString)
-          val part = dataFiles(fs, staging).headOption.getOrElse(
+          val part = dataFiles(staging).headOption.getOrElse(
             throw new IllegalStateException(
               s"compact: staging write produced no data file under $staging"))
           val target = new Path(dir, s"part-00000-compact-$tag.parquet")

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
-import graft.core.ProducerConfig
+import graft.core.{Fs, ProducerConfig}
 import graft.core.catalog.Warehouse
 import graft.core.log.LogWriter
 
@@ -159,15 +159,11 @@ object StreamIngest {
   * identical range even though the log has grown since. */
 private[streaming] object ConsumeState {
   import java.nio.charset.StandardCharsets.UTF_8
-  import org.apache.hadoop.conf.Configuration
   import org.apache.hadoop.fs.{FileSystem, Path}
   import org.apache.spark.sql.functions._
   import graft.core.log.IndexCache
 
   private val Name = "^batch-(\\d+)$".r
-
-  private def fsOf(dir: String): FileSystem =
-    new Path(dir).getFileSystem(new Configuration())
 
   /** The `[start, end)` range per partition that batch `batchId` must read:
     * its own persisted intent when replaying, else previous end → current
@@ -179,10 +175,10 @@ private[streaming] object ConsumeState {
       stateDir: String,
       batchId: Long,
       maxPerPartition: Long): Map[Int, (Long, Long)] = {
-    val fs = fsOf(stateDir)
+    val fs = Fs(stateDir)
     fs.mkdirs(new Path(stateDir))
     read(fs, new Path(stateDir, s"batch-$batchId")).getOrElse {
-      val start: Map[Int, Long] = latestBefore(fs, stateDir, batchId)
+      val start: Map[Int, Long] = latestBefore(stateDir, batchId)
         .flatMap(id => read(fs, new Path(stateDir, s"batch-$id")))
         .map(_.map { case (p, (_, e)) => p -> e })
         .getOrElse(Map.empty)
@@ -239,21 +235,18 @@ private[streaming] object ConsumeState {
   /** Drop intent files older than the last few batches (replay only ever
     * reaches back one batch; a small tail is kept for debuggability). */
   def prune(stateDir: String, batchId: Long): Unit = {
-    val fs = fsOf(stateDir)
-    ids(fs, stateDir).filter(_ < batchId - 3)
+    val fs = Fs(stateDir)
+    ids(stateDir).filter(_ < batchId - 3)
       .foreach(id => fs.delete(new Path(stateDir, s"batch-$id"), false))
   }
 
-  private def ids(fs: FileSystem, stateDir: String): Seq[Long] = {
-    val p = new Path(stateDir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName).collect {
+  private def ids(stateDir: String): Seq[Long] =
+    Fs.list(new Path(stateDir)).toSeq.map(_.getPath.getName).collect {
       case Name(id) => id.toLong
     }
-  }
 
-  private def latestBefore(fs: FileSystem, stateDir: String, batchId: Long): Option[Long] =
-    ids(fs, stateDir).filter(_ < batchId) match {
+  private def latestBefore(stateDir: String, batchId: Long): Option[Long] =
+    ids(stateDir).filter(_ < batchId) match {
       case s if s.isEmpty => None
       case s => Some(s.max)
     }

@@ -4,23 +4,46 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Memoized state has one home, [[graft.core.Memo]]: a hand-rolled
-  * `computeIfAbsent` cache or a per-site temp-dir shutdown hook anywhere
-  * else under `src/main/scala` fails here. */
+/** Shared driver state has one home each, and a copy anywhere else under
+  * `src/main/scala` fails here:
+  *   - memoized state lives in [[graft.core.Memo]]: no hand-rolled
+  *     `computeIfAbsent` cache or per-site temp-dir shutdown hook;
+  *   - the Hadoop configuration lives in [[graft.core.Fs]]: no per-call
+  *     `Configuration` (each re-parses the default resources, 6–10 ms), no
+  *     `getFileSystem` / `HadoopInputFile` on a conf of its own, no path
+  *     based parquet reader builder (it parses a fresh default conf even
+  *     under `.withConf`), and no recursive Hadoop `listFiles` (the local
+  *     filesystem forks a process per returned file). */
 class MemoGuardSpec extends AnyFunSuite {
 
-  test("no hand-rolled cache or shutdown hook outside Memo") {
+  private def hits(home: String)(bad: String => Boolean): List[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root: $root")
-    val hits = Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        p.getFileName.toString != "Memo.scala")
+    Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != home)
       .flatMap { p =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (l, i) if l.contains("computeIfAbsent(") ||
-              l.contains("addShutdownHook(") => s"$p:${i + 1}: ${l.trim}"
+          case (l, i) if bad(l) => s"$p:${i + 1}: ${l.trim}"
         }
       }.toList
-    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no hand-rolled cache or shutdown hook outside Memo") {
+    val found = hits("Memo.scala")(l =>
+      l.contains("computeIfAbsent(") || l.contains("addShutdownHook("))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("no per-call Hadoop configuration or recursive listing outside Fs") {
+    val patterns = Seq(
+      """new Configuration\(\s*\)""",
+      """new org\.apache\.hadoop\.conf\.Configuration\(""",
+      """\.getFileSystem\(""",
+      """HadoopInputFile\.fromPath\(""",
+      """ParquetReader\s*\.builder\(""",
+      """\.builder\(new GroupReadSupport""",
+      """\.listFiles\([^)]*,\s*true\s*\)""").map(_.r)
+    val found = hits("Fs.scala")(l => patterns.exists(_.findFirstIn(l).isDefined))
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }
