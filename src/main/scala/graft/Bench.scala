@@ -34,20 +34,6 @@ import graft.queries.Queries
   */
 object Bench {
 
-  /** Every driver job this JVM starts (listener-bus fed; readers DRAIN
-    * the async bus before snapshotting — a fixed sleep can lose events
-    * under load, and a miscount here silently widens or narrows the
-    * contended-gate allowance AND benchcheck's drift model). Per-query
-    * deltas give each query's fixed round-trip count, which is
-    * plan-determined and stable across boots — the denominator of the
-    * scheduler-latency drift model (see `jobP50Ms`). */
-  private val allJobs = new java.util.concurrent.atomic.AtomicInteger()
-
-  private def jobsSnapshot(sc: org.apache.spark.SparkContext): Int = {
-    org.apache.spark.GraftScheduler.drainListeners(sc)
-    allJobs.get()
-  }
-
   private def time(body: => Unit): Double = {
     val t0 = System.nanoTime()
     body
@@ -131,23 +117,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadAtStart = loadAvg
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          allJobs.incrementAndGet()
-          ()
-        }
-      })
+    val spark = Sessions.local("graft-bench")
     import org.apache.spark.sql.functions._
 
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
@@ -198,9 +168,8 @@ object Bench {
     val sc = spark.sparkContext
     def minOf2Jobs(name: String)(pass1: => Unit)(pass2: => Unit): Double = {
       val t1 = time(pass1)
-      val jobsBefore = jobsSnapshot(sc)
-      val t2 = time(pass2)
-      queryJobs(name) = jobsSnapshot(sc) - jobsBefore
+      val (t2, js) = JobStats.measure(sc)(time(pass2))
+      queryJobs(name) = js.jobs
       math.min(t1, t2)
     }
     TopicCatalog.createTopic(spark, wh, "events2", 8)
@@ -252,9 +221,8 @@ object Bench {
     // prep excluded), so capture the job delta around the second call
     // rather than re-timing through minOf2Jobs
     val tPar1 = parallelAppend("par")
-    val jobsBeforePar = jobsSnapshot(sc)
-    val tPar2 = parallelAppend("par2")
-    queryJobs("ingest_parallel") = jobsSnapshot(sc) - jobsBeforePar
+    val (tPar2, parJobs) = JobStats.measure(sc)(parallelAppend("par2"))
+    queryJobs("ingest_parallel") = parJobs.jobs
     results("ingest_parallel") = math.min(tPar1, tPar2)
     val parRate = ingestRecords / results("ingest_parallel")
 
@@ -365,11 +333,11 @@ object Bench {
         if (CompositeRetry(name) || BAND.get(name).exists(_ > 0.3)) 1.5
         else 3.0
       val t1 = time(materialize(fn(spark, sfDir)))
-      val jobsBefore = jobsSnapshot(sc)
-      val t2 = time(materialize(fn(spark, sfDir)))
+      val (t2, js) = JobStats.measure(sc)(time(materialize(fn(spark, sfDir))))
       // driver jobs of one steady-state pass: the query's fixed
-      // round-trip count (plan-determined, stable across boots)
-      val nJobs = jobsSnapshot(sc) - jobsBefore
+      // round-trip count (plan-determined, stable across boots) — the
+      // denominator of the scheduler-latency drift model (see jobP50Ms)
+      val nJobs = js.jobs
       queryJobs(name) = nJobs
       var best = math.min(t1, t2)
       // Scheduler-latency allowance: bands were stamped on a ~12-15 ms
@@ -465,7 +433,7 @@ object Bench {
     val total = results.values.sum
     val contendedJson = contended.map("\"" + _ + "\"").mkString("[", ",", "]")
     val maxHeapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
-    val extra = f""""cold_fit_sec":$coldFitJson%s,"ingest_records":$ingestRecords,"ingest_records_per_sec":$ingestRate%.0f,"ingest_bulk_records":$bulkRecords,"ingest_bulk_records_per_sec":$bulkRate%.0f,"ingest_parallel_records_per_sec":$parRate%.0f,"poll_records_per_sec":$pollRate%.0f,"cores":$cpus,"contended":$contendedJson,"loadavg_start":$loadAtStart%.2f,"loadavg_end":$loadAvg%.2f,"query_loadavg":$loads%s,"max_heap_mb":$maxHeapMb,"job_p50_ms":$jobP50Ms%.1f,"timed_jobs":${queryJobs.values.sum}%d,"query_jobs":$jobsJson%s,$curateStagesJson%s,$curateFullStagesJson%s"""
+    val extra = f""""cold_fit_sec":$coldFitJson%s,"ingest_records":$ingestRecords,"ingest_records_per_sec":$ingestRate%.0f,"ingest_bulk_records":$bulkRecords,"ingest_bulk_records_per_sec":$bulkRate%.0f,"ingest_parallel_records_per_sec":$parRate%.0f,"poll_records_per_sec":$pollRate%.0f,"cores":${Sessions.cpus},"contended":$contendedJson,"loadavg_start":$loadAtStart%.2f,"loadavg_end":$loadAvg%.2f,"query_loadavg":$loads%s,"max_heap_mb":$maxHeapMb,"job_p50_ms":$jobP50Ms%.1f,"timed_jobs":${queryJobs.values.sum}%d,"query_jobs":$jobsJson%s,$curateStagesJson%s,$curateFullStagesJson%s"""
     val json =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs%s,"sf":"$sfDir%s",$extra%s}"""
     val compact = compactLine(total, results, sfDir,

@@ -50,8 +50,7 @@ object IvfPqIndex {
     val spark = corpus.sparkSession
     import spark.implicits._
     val model = IvfPq.fit(corpus, id, vec, dim, nCells, m, ksub, iters)
-    Seq((dim, nCells, m, ksub)).toDF("dim", "n_cells", "m", "ksub")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    IndexMeta.write(spark, path, "dim" -> dim, "n_cells" -> nCells, "m" -> m, "ksub" -> ksub)
     model.coarse.zipWithIndex
       .map { case (c, cell) => (cell, c) }.toDF("cell", "cvec")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
@@ -71,10 +70,7 @@ object IvfPqIndex {
     * immutable after [[build]], which invalidates the memo). */
   def readModel(spark: SparkSession, path: String): IvfPq.Model =
     graft.core.Memo("ivfpq.model", path, ()) {
-      val meta = spark.read.parquet(s"$path/meta")
-        .select("dim", "n_cells", "m", "ksub").head()
-      val (dim, nCells, m, ksub) =
-        (meta.getInt(0), meta.getInt(1), meta.getInt(2), meta.getInt(3))
+      val Seq(dim, nCells, m, ksub) = IndexMeta.read(spark, path, "dim", "n_cells", "m", "ksub")
       val coarse = spark.read.parquet(s"$path/coarse")
         .select("cell", "cvec").collect()
         .map(r => r.getInt(0) -> r.getSeq[Double](1).toIndexedSeq)

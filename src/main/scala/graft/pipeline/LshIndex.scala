@@ -137,27 +137,17 @@ object LshIndex {
       numHashes: Int = 128,
       bands: Int = 16,
       numShards: Int = 64): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    Seq((shingleSize, numHashes, bands, numShards))
-      .toDF("shingle_size", "num_hashes", "bands", "num_shards")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    graft.core.Memo.invalidate(path)
+    IndexMeta.write(corpus.sparkSession, path, "shingle_size" -> shingleSize,
+      "num_hashes" -> numHashes, "bands" -> bands, "num_shards" -> numShards)
     val sh = shingleSets(corpus, id, text, shingleSize)
     writeSignatures(sh, bandKeys(sh, numHashes, bands), numShards, path,
       "overwrite")
   }
 
-  /** Band parameters per index path. Meta is immutable after [[build]]
-    * (which invalidates the memo), so caching it drops one driver
-    * round-trip — a whole Spark job — from EVERY probe/append: at a
-    * streaming trigger of 500 ms that fixed overhead is a measurable
-    * slice of the per-batch budget. */
+  /** (shingleSize, numHashes, bands, numShards) of the index at `path`. */
   private def readMeta(spark: SparkSession, path: String): (Int, Int, Int, Int) =
-    graft.core.Memo("lsh.meta", path, ()) {
-      val m = spark.read.parquet(s"$path/meta")
-        .select("shingle_size", "num_hashes", "bands", "num_shards").head()
-      (m.getInt(0), m.getInt(1), m.getInt(2), m.getInt(3))
+    IndexMeta.read(spark, path, "shingle_size", "num_hashes", "bands", "num_shards") match {
+      case Seq(s, h, b, n) => (s, h, b, n)
     }
 
   /** Add a batch to the index — the steady-state ingest step. Touches

@@ -110,22 +110,13 @@ object SpanIndex {
       path: String,
       k: Int = 5,
       numShards: Int = 64): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    Seq((k, numShards)).toDF("k", "num_shards")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    graft.core.Memo.invalidate(path)
+    IndexMeta.write(corpus.sparkSession, path, "k" -> k, "num_shards" -> numShards)
     writeGrams(occurrences(corpus, id, text, k), numShards, path, "overwrite")
   }
 
-  /** (k, numShards) per index path — immutable after [[build]] (which
-    * invalidates the memo), so caching drops the meta-read driver jobs
-    * (schema + head) from every probe/append. */
+  /** (k, numShards) of the index at `path`. */
   private def readMeta(spark: SparkSession, path: String): (Int, Int) =
-    graft.core.Memo("span.meta", path, ()) {
-      val m = spark.read.parquet(s"$path/meta").select("k", "num_shards").head()
-      (m.getInt(0), m.getInt(1))
-    }
+    IndexMeta.read(spark, path, "k", "num_shards") match { case Seq(k, n) => (k, n) }
 
   /** Add a batch's distinct gram fingerprints — steady-state ingest. */
   def append(batch: DataFrame, id: Column, text: Column, path: String): Unit = {

@@ -81,24 +81,14 @@ object SrpIndex {
   def build(
       corpus: DataFrame, id: Column, vec: Column, path: String,
       nBits: Int = 8, numShards: Int = 64): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    Seq((nBits, numShards)).toDF("n_bits", "num_shards")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    graft.core.Memo.invalidate(path)
+    IndexMeta.write(corpus.sparkSession, path, "n_bits" -> nBits, "num_shards" -> numShards)
     writeSignatures(signatures(corpus, id, vec, nBits), numShards, path,
       "overwrite")
   }
 
-  /** (nBits, numShards) per index path — immutable after [[build]]
-    * (which invalidates the memo); drops the meta-read driver jobs from
-    * every probe/append. */
+  /** (nBits, numShards) of the index at `path`. */
   private def readMeta(spark: SparkSession, path: String): (Int, Int) =
-    graft.core.Memo("srp.meta", path, ()) {
-      val m = spark.read.parquet(s"$path/meta")
-        .select("n_bits", "num_shards").head()
-      (m.getInt(0), m.getInt(1))
-    }
+    IndexMeta.read(spark, path, "n_bits", "num_shards") match { case Seq(b, n) => (b, n) }
 
   /** Add a batch to the index — the steady-state ingest step. */
   def append(batch: DataFrame, id: Column, vec: Column, path: String): Unit = {

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import org.apache.spark.sql.SparkSession
+
 /** Opt-in wall-clock phase timers for the fused pipeline paths.
   *
   * The probe/dedup chain is deliberately ONE lazily-evaluated plan with a
@@ -10,31 +12,33 @@ package graft.pipeline
   * concurrent table appends, the survivor materialization — and those are
   * what these timers record.
   *
-  * Disabled by default (a hot path must not pay a map write per batch);
-  * [[graft.Bench]] enables it around one solo invocation to emit the
-  * per-stage breakdown next to the headline number. Not thread-safe
-  * across concurrent BATCHES (last writer wins per key) — the bench's
-  * solo invocation is single-batch by construction. */
+  * Disabled by default (a hot path must not pay a map write per batch):
+  * outside [[capture]], `timed` is a bare call of its body. Inside it,
+  * `timed` also sets the Spark local property [[PhaseProp]] on the calling
+  * thread, so every job the phase submits carries its name to
+  * [[graft.JobStats]] — per thread, so concurrent phases (the two index
+  * appends of [[LshIndex]]) tag their own jobs. The wall timers are not
+  * thread-safe across concurrent BATCHES (last writer wins per key) — the
+  * bench's solo invocation is single-batch by construction. */
 object StageTimers {
   @volatile private var enabled = false
   private val times =
     new java.util.concurrent.ConcurrentHashMap[String, Double]()
 
-  /** Innermost phase currently executing on the driver (diagnostics:
-    * lets a SparkListener attribute jobs to phases). Best-effort — single
-    * solo batch only, like the timers themselves. */
-  @volatile var currentPhase: String = ""
+  /** Local property naming the innermost phase a job was submitted in. */
+  val PhaseProp = "graft.phase"
 
   def timed[T](name: String)(body: => T): T =
     if (!enabled) body
     else {
-      val prev = currentPhase
-      currentPhase = name
+      val sc = SparkSession.active.sparkContext
+      val prev = sc.getLocalProperty(PhaseProp)
+      sc.setLocalProperty(PhaseProp, name)
       val t0 = System.nanoTime()
       try body
       finally {
         times.put(name, (System.nanoTime() - t0) / 1e9)
-        currentPhase = prev
+        sc.setLocalProperty(PhaseProp, prev)
       }
     }
 

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.functions.{TextFunctions => T}
 import graft.pipeline.{Dedup, Graphs}
 
@@ -37,13 +37,7 @@ object CcProbe {
     val dir = args(0)
     // floor at 3: a "min of 2" is just the min (r17 advice)
     val passes = math.max(3, args.lift(1).map(_.toInt).getOrElse(3))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-cc-probe")
     val loadStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     // this boot's scheduler floor (same probe as Bench.jobP50Ms): the CC

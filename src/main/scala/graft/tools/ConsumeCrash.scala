@@ -3,8 +3,8 @@ package graft.tools
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Sessions
 import graft.core.catalog.Warehouse
 import graft.streaming.StreamIngest
 
@@ -29,15 +29,7 @@ import graft.streaming.StreamIngest
 object ConsumeCrash {
   def main(args: Array[String]): Unit = {
     val Array(mode, whDir, ckpt, outFile) = args.take(4)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-consume-$mode")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(s"graft-consume-$mode", 2)
     val wh = Warehouse(whDir)
 
     def record(df: org.apache.spark.sql.DataFrame, id: Long): Unit = {

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.SparkSession
+import graft.Sessions
 import graft.core.catalog.Warehouse
 import graft.streaming.{Curation, CurationConfig, StreamIngest}
 
@@ -90,15 +91,7 @@ object CurateCrash {
     val spanIdx = args.lift(5).filter(_ != "-")
     val srpIdx = args.lift(6).filter(_ != "-")
     val dsirOn = args.lift(7).contains("dsir")
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-curate-$mode")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(s"graft-curate-$mode", 2)
     val wh = Warehouse(whDir)
 
     val cfg = TestConfig.copy(

@@ -1,64 +1,34 @@
 package graft.tools
 
-import graft.queries.Queries
-import org.apache.spark.sql.SparkSession
+import graft.{JobStats, Sessions}
+import graft.pipeline.StageTimers
 
-/** Dev probe: one warm + N timed solo runs of curate_pipeline with the
-  * StageTimers action split printed per run — aims the per-batch-overhead
-  * grind (the composed chain is ONE lazy plan; these are its real wall
-  * segments). Usage: runMain graft.tools.CurateProbe [sfDir] [n] */
+/** Dev probe: one warm + N timed solo runs of a composed curate query with
+  * the StageTimers action split and the driver jobs per phase printed per
+  * run — aims the per-batch-overhead grind (the composed chain is ONE lazy
+  * plan; these are its real wall segments, and the per-batch fixed
+  * overhead is its job COUNT). Usage:
+  * `runMain graft.tools.CurateProbe [sfDir] [n] [query]` (default
+  * curate_pipeline). */
 object CurateProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val n = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder()
-      .appName("graft-curate-probe").master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .getOrCreate()
-    // job-level trace (GRAFT_JOBTRACE=1): which driver jobs run, when,
-    // and the scheduling gaps between them — the per-batch fixed
-    // overhead is job COUNT, so this is the grind's instrument
-    val trace = sys.env.get("GRAFT_JOBTRACE").contains("1")
-    if (trace) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        private val starts =
-          new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val desc = Option(js.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .orElse(Option(js.properties)
-              .flatMap(p => Option(p.getProperty("callSite.short"))))
-            .getOrElse("?")
-          val phase = graft.pipeline.StageTimers.currentPhase
-          val stages = js.stageInfos.map(_.name.takeWhile(_ != '\n'))
-            .mkString(" | ")
-          starts.put(js.jobId, (js.time, s"[$phase] $desc :: $stages"))
-        }
-        override def onJobEnd(
-            je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          Option(starts.remove(je.jobId)).foreach { case (t0, desc) =>
-            println(f"  [job ${je.jobId}%3d] ${(je.time - t0) / 1e3}%7.3f s  $desc")
-          }
-        }
-      })
-    // third arg: which composed query to probe (default curate_pipeline)
     val query = args.drop(2).headOption.getOrElse("curate_pipeline")
+    val spark = Sessions.local("graft-curate-probe")
     val fn = graft.SparkEntry.queries(query)
     def once(): Unit = {
-      val t0 = System.nanoTime()
-      val (_, stages) = graft.pipeline.StageTimers.capture {
-        fn(spark, sfDir).count()
+      val ((total, stages), js) = JobStats.measure(spark.sparkContext) {
+        val t0 = System.nanoTime()
+        val (_, st) = StageTimers.capture(fn(spark, sfDir).count())
+        ((System.nanoTime() - t0) / 1e9, st)
       }
-      val total = (System.nanoTime() - t0) / 1e9
       val split = stages.toSeq.sortBy(-_._2)
         .map { case (k, v) => f"$k=$v%.3f" }.mkString(" ")
       val rest = total - stages.values.sum
       println(f"== $query%s total=$total%.3f rest=$rest%.3f $split")
+      println(s"== $query jobs=${js.jobs} " + js.perPhase
+        .map { case (p, c) => s"${if (p.isEmpty) "-" else p}=$c" }.mkString(" "))
     }
     once() // warm
     (1 to n).foreach(_ => once())

@@ -1,9 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.functions.{TextFunctions => T}
 import graft.pipeline.Skew
 
@@ -22,13 +23,7 @@ object FuzzyProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .appName("graft-fuzzy-probe").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-fuzzy-probe")
 
     def names: DataFrame = spark.read.parquet(s"$dir/part.parquet")
       .filter(col("p_size") <= 3 && length(col("p_name")) >= 9)

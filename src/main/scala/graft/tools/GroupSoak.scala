@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
+import graft.Sessions
 import graft.core.LivenessConfig
 import graft.streaming.Liveness
 
@@ -33,14 +33,7 @@ object GroupSoak {
   def main(args: Array[String]): Unit = {
     val members = args.lift(0).map(_.toInt).getOrElse(10000)
     val batches = args.lift(1).map(_.toInt).getOrElse(24)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-group-soak").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-group-soak")
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
 

@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.pipeline.{IndexMaintenance, LshIndex}
 
 /** Long-run soak of the LSM delta-tail + scheduled-compaction lifecycle
@@ -49,14 +50,7 @@ object IndexSoak {
     val startBatch = args.lift(3).map(_.toInt).getOrElse(0)
     val haltAt = args.lift(4).map(_.toInt).getOrElse(-1)
     val compactEvery = args.lift(5).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-index-soak").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-index-soak")
     import spark.implicits._
 
     val path = s"$stateDir/lsh"

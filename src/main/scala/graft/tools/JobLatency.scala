@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /** Diagnostic: fixed per-job driver/scheduler overhead on this box.
   *
@@ -21,13 +21,7 @@ object JobLatency {
   def main(args: Array[String]): Unit = {
     val nJobs = args.headOption.map(_.toInt).getOrElse(60)
     val nTasks = args.drop(1).headOption.map(_.toInt).getOrElse(32)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-job-latency")
     // warm-up: classloading, codegen, scheduler pools
     (1 to 5).foreach(_ => spark.range(nTasks.toLong, nTasks.toLong + nTasks, 1, nTasks).count())
     val times = (1 to nJobs).map { _ =>

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.core.catalog.{TopicCatalog, Warehouse}
 import graft.core.log.{LogReader, LogWriter}
 
@@ -59,12 +59,7 @@ object LockSoak {
   private def readerMain(args: Array[String]): Unit = {
     val stateDir = args(0)
     val rid = args(1).toInt
-    val spark = SparkSession.builder()
-      .appName(s"graft-lock-soak-r$rid").master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(s"graft-lock-soak-r$rid", 4)
     val wh = Warehouse(stateDir)
     val stop = java.nio.file.Paths.get(stateDir, StopFile)
     val out = java.nio.file.Paths.get(stateDir, s"reader_$rid.json")
@@ -107,12 +102,7 @@ object LockSoak {
     val stateDir = args(0)
     val wid = args(1).toInt
     val rounds = args(2).toInt
-    val spark = SparkSession.builder()
-      .appName(s"graft-lock-soak-w$wid").master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(s"graft-lock-soak-w$wid", 8)
     val wh = Warehouse(stateDir)
     for (r <- 0 until rounds) {
       val base = (wid.toLong * 1000000L + r.toLong) * 10000L
@@ -142,13 +132,7 @@ object LockSoak {
       java.nio.file.Files.createTempDirectory("graft-lock-soak").toString)
     val rounds = args.lift(1).map(_.toInt).getOrElse(24)
     val appenders = args.lift(2).map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName("graft-lock-soak").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-lock-soak")
     val wh = Warehouse(stateDir)
     TopicCatalog.createTopic(spark, wh, Topic, 2 * appenders)
 

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Sessions
 import graft.core.catalog.{TopicCatalog, Warehouse}
 import graft.core.log.{LogIndex, LogReader, LogWriter}
 
@@ -15,16 +15,7 @@ object LogDemo {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val whDir = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); read as long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-demo")
 
     val wh = Warehouse(whDir)
     println(s"== warehouse: $whDir")

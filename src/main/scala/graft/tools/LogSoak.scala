@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.core.catalog.{TopicCatalog, Warehouse}
 import graft.core.log.{LogReader, LogRetention, LogWriter}
 
@@ -66,14 +66,7 @@ object LogSoak {
     val batches = args.lift(1).map(_.toInt).getOrElse(100)
     val startBatch = args.lift(2).map(_.toInt).getOrElse(0)
     val haltAt = args.lift(3).map(_.toInt).getOrElse(-1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-log-soak").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-log-soak")
 
     val wh = Warehouse(stateDir)
     if (startBatch == 0) TopicCatalog.createTopic(spark, wh, Topic, Parts)

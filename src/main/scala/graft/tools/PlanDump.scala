@@ -1,15 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{Sessions, SparkEntry}
 
 /** Dump `.explain("formatted")` of named SparkEntry queries to files —
   * the before/after plan evidence for optimization rounds.
   *
   * {{{ sbt "runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> <query>..." }}}
   *
-  * Writes `outDir/<name>_<suffix>.txt` per query. Session mirrors
-  * [[graft.Bench]] (local[$SPARK_GRAFT_CPUS], shuffle partitions = cpus) so
+  * Writes `outDir/<name>_<suffix>.txt` per query. Session is
+  * [[graft.Bench]]'s ([[graft.Sessions.local]] at the default cores) so
   * the dumped plans are the plans the bench actually runs. Queries that
   * drive their own actions internally (the composed curate pipelines, the
   * eager LM scorer) still dump the plan of the frame they RETURN; their
@@ -21,15 +20,7 @@ object PlanDump {
     val out = args(1)
     val suffix = args(2)
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-plan-dump")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     names.foreach { name =>
       // capture pinned internal plans too: the eager pin/release

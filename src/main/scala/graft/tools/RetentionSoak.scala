@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.core.catalog.{TopicCatalog, Warehouse}
 import graft.core.log.{LogIndex, LogReader, LogRetention, LogWriter}
 
@@ -51,12 +51,7 @@ object RetentionSoak {
   private def readerMain(args: Array[String]): Unit = {
     val stateDir = args(0)
     val rid = args(1).toInt
-    val spark = SparkSession.builder()
-      .appName(s"graft-ret-soak-r$rid").master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(s"graft-ret-soak-r$rid", 4)
     val wh = Warehouse(stateDir)
     val stop = java.nio.file.Paths.get(stateDir, StopFile)
     val out = java.nio.file.Paths.get(stateDir, s"ret_reader_$rid.json")
@@ -100,13 +95,7 @@ object RetentionSoak {
     val stateDir = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-ret-soak").toString)
     val batches = args.lift(1).map(_.toInt).getOrElse(40)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName("graft-ret-soak").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-ret-soak")
     val wh = Warehouse(stateDir)
     TopicCatalog.createTopic(spark, wh, Topic, Partitions)
     java.nio.file.Files.deleteIfExists(

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.core.catalog.{TopicCatalog, Warehouse}
 import graft.core.log.LogWriter
 import graft.pipeline.LshIndex
@@ -56,15 +57,7 @@ object ScaleStress {
     val only: Set[String] =
       args.drop(2).headOption.map(_.split(",").toSet).getOrElse(Set.empty)
     def want(n: String): Boolean = only.isEmpty || only.contains(n)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-scale-stress")
 
     val work = java.nio.file.Files.createTempDirectory("graft-scale").toString
     val scaled = s"$work/scaled"

@@ -1,82 +1,39 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{JobStats, Sessions, SparkEntry}
 
 /** Dev probe: time named SparkEntry queries at a given sf dir.
   *
   * {{{ sbt "runMain graft.tools.TimeQuery /root/testdata/sf0.1 dup_clusters tfidf_topk" }}}
   *
   * Runs each query twice (warm-up + timed, same protocol as [[graft.Bench]])
-  * against the noop sink and prints one `name seconds rows` line per query.
+  * against the noop sink and prints one
+  * `== name sec rows jobs tasks taskrun cpu gc` line per query.
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val dir = args.head
     val names = args.tail.toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // driver-job + task counters: wall-clock on this box swings 2x with
-    // host scheduling weather (see JobLatency), but the JOB COUNT of a
-    // fixed query is deterministic — the honest metric when grinding
-    // driver round-trips out of a composed chain
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val tasks = new java.util.concurrent.atomic.AtomicInteger()
-    // summed executor-side metrics (TaskEnd): run time = occupied
-    // core-time, cpu = on-CPU ns, gc = JVM GC ms — the metrics that SHOW
-    // a cache-vs-recompute win (job/task counts stay flat when the same
-    // stages run cheaper) and that attribute the 8-vs-32-core inversion
-    // (GC share, per-task time inflation)
-    val runMs = new java.util.concurrent.atomic.AtomicLong()
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong()
-    val gcMs = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet()
-          ()
-        }
-        // EXECUTED tasks: a job-start's stageInfos include stages later
-        // skipped via cached/exchange reuse, so summing numTasks there
-        // overstates work and isn't comparable to what actually ran
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          tasks.incrementAndGet()
-          val m = te.taskMetrics
-          if (m != null) {
-            runMs.addAndGet(m.executorRunTime)
-            cpuNs.addAndGet(m.executorCpuTime)
-            gcMs.addAndGet(m.jvmGCTime)
-            ()
-          }
-          ()
-        }
-      })
+    val spark = Sessions.local("graft-time-query")
+    // wall-clock on this box swings 2x with host scheduling weather (see
+    // JobLatency), but the JOB COUNT of a fixed query is deterministic —
+    // the honest metric when grinding driver round-trips out of a composed
+    // chain. Summed executor run time (occupied core-time), CPU and GC are
+    // the metrics that SHOW a cache-vs-recompute win (job/task counts stay
+    // flat when the same stages run cheaper) and that attribute the
+    // 8-vs-32-core inversion (GC share, per-task time inflation).
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       fn(spark, dir).write.format("noop").mode("overwrite").save()
-      org.apache.spark.GraftScheduler.drainListeners(spark.sparkContext)
-      jobs.set(0); tasks.set(0); runMs.set(0); cpuNs.set(0); gcMs.set(0)
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // deterministic listener drain (a fixed sleep can lose events under
-      // load and misattribute them to the next query)
-      org.apache.spark.GraftScheduler.drainListeners(spark.sparkContext)
-      val (nj, nt) = (jobs.get(), tasks.get())
-      val (rm, cn, gm) = (runMs.get(), cpuNs.get(), gcMs.get())
+      val (sec, js) = JobStats.measure(spark.sparkContext) {
+        val t0 = System.nanoTime()
+        fn(spark, dir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
       val rows = fn(spark, dir).count()
-      println(f"== $name%-24s $sec%8.3f sec  $rows%d rows  $nj%d jobs  " +
-        f"$nt%d tasks  taskrun ${rm / 1e3}%.2fs  cpu ${cn / 1e9}%.2fs  " +
-        f"gc ${gm / 1e3}%.2fs")
+      println(f"== $name%-24s $sec%8.3f sec  $rows%d rows  ${js.jobs}%d jobs  " +
+        f"${js.tasks}%d tasks  taskrun ${js.runMs / 1e3}%.2fs  " +
+        f"cpu ${js.cpuNs / 1e9}%.2fs  gc ${js.gcMs / 1e3}%.2fs")
     }
     spark.stop()
   }

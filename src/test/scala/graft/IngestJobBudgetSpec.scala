@@ -24,37 +24,10 @@ import org.apache.spark.sql.functions._
 class IngestJobBudgetSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Driver jobs started while `body` runs (count + call sites).
-    * Listener delivery is async, so after the body returns we wait for
-    * the count to go quiet (all jobs in these chains are awaited inside
-    * the body — only the event delivery can lag, bounded by the poll
-    * below). */
+  /** Driver jobs started while `body` runs (count + call sites). */
   private def countJobs[T](body: => T): (Int, Seq[String]) = {
-    val sites =
-      new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        sites.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-          .getOrElse("?"))
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 10000) {
-        val cur = sites.size
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-        Thread.sleep(100); waited += 100
-      }
-      import scala.jdk.CollectionConverters._
-      (sites.size, sites.asScala.toSeq)
-    } finally { spark.sparkContext.removeSparkListener(listener); () }
+    val (_, js) = JobStats.measure(spark.sparkContext)(body)
+    (js.jobs, js.records.map(_.site))
   }
 
   private def docBatch(ids: Range) =

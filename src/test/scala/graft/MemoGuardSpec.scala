@@ -13,7 +13,9 @@ import scala.jdk.CollectionConverters._
   *     `getFileSystem` / `HadoopInputFile` on a conf of its own, no path
   *     based parquet reader builder (it parses a fresh default conf even
   *     under `.withConf`), and no recursive Hadoop `listFiles` (the local
-  *     filesystem forks a process per returned file). */
+  *     filesystem forks a process per returned file);
+  *   - a SparkSession is built only in [[graft.Sessions]] and a listener
+  *     is registered only in [[graft.JobStats]]. */
 class MemoGuardSpec extends AnyFunSuite {
 
   private def hits(home: String)(bad: String => Boolean): List[String] = {
@@ -45,5 +47,13 @@ class MemoGuardSpec extends AnyFunSuite {
       """\.listFiles\([^)]*,\s*true\s*\)""").map(_.r)
     val found = hits("Fs.scala")(l => patterns.exists(_.findFirstIn(l).isDefined))
     assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("no session builder outside Sessions, no listener outside JobStats") {
+    val builders = hits("Sessions.scala")(_.contains("SparkSession.builder("))
+    val listener = Seq("""addSparkListener\(""", """new\s+[\w.]*SparkListener\s*\{""",
+      """extends\s+[\w.]*SparkListener\b""").map(_.r)
+    val listeners = hits("JobStats.scala")(l => listener.exists(_.findFirstIn(l).isDefined))
+    assert(builders.isEmpty && listeners.isEmpty, (builders ++ listeners).mkString("\n"))
   }
 }
