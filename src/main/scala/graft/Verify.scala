@@ -66,7 +66,7 @@ object Verify {
       }
       LogRetention.expireBefore(spark, wh, "t", Map(0 -> 50L))
       val clean = Admin.verifyTopic(spark, wh, "t", deep = true)
-      val victim = graft.core.log.IndexCache.entries(spark, wh, "t")
+      val victim = graft.core.log.LogIndex.entries(spark, wh, "t")
         .filter(e => e.isData && e.baseOffset == 50L).head
       val vp = new org.apache.hadoop.fs.Path(victim.file)
       graft.core.Fs(vp).delete(vp, false)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import graft.core.Fs
 import graft.core.catalog.{TopicCatalog, Warehouse}
-import graft.core.log.IndexCache
+import graft.core.log.LogIndex
 
 /** Admin/metadata surface — the Spark-native analog of the reference's
   * FluxAdminClient + controller metadata lookups.
@@ -69,7 +69,7 @@ object Admin {
     * the driver-side index cache — no Spark job to compute. */
   def describeTopic(spark: SparkSession, wh: Warehouse, topic: String): DataFrame = {
     TopicCatalog.topicInfo(spark, wh, topic) // throws UnknownTopicException
-    val rows = IndexCache.entries(spark, wh, topic)
+    val rows = LogIndex.entries(spark, wh, topic)
       .groupBy(_.partition).toSeq
       .map { case (p, es) =>
         val data = es.filter(_.isData)
@@ -86,7 +86,7 @@ object Admin {
     * Driver-side index cache, no Spark job. */
   def beginningOffsets(spark: SparkSession, wh: Warehouse, topic: String): Map[Int, Long] = {
     val n = TopicCatalog.topicInfo(spark, wh, topic).numPartitions
-    val fromIndex = IndexCache.entries(spark, wh, topic)
+    val fromIndex = LogIndex.entries(spark, wh, topic)
       .groupBy(_.partition)
       .map { case (p, es) =>
         val data = es.filter(_.isData)
@@ -102,7 +102,7 @@ object Admin {
     * job. */
   def endOffsets(spark: SparkSession, wh: Warehouse, topic: String): Map[Int, Long] = {
     val n = TopicCatalog.topicInfo(spark, wh, topic).numPartitions
-    val fromIndex = IndexCache.nextOffsets(spark, wh, topic)
+    val fromIndex = LogIndex.nextOffsets(spark, wh, topic)
     (0 until n).map(p => p -> fromIndex.getOrElse(p, 0L)).toMap
   }
 
@@ -182,7 +182,7 @@ object Admin {
     TopicCatalog.topicInfo(spark, wh, topic) // throws UnknownTopicException
     val logDir = new org.apache.hadoop.fs.Path(wh.logDir(topic))
     val fs = Fs(logDir)
-    val data = IndexCache.entries(spark, wh, topic).filter(_.isData)
+    val data = LogIndex.entries(spark, wh, topic).filter(_.isData)
 
     // 1. indexed-but-absent (THE hole ignoreMissingFiles masks)
     val missing = data.iterator
@@ -253,7 +253,7 @@ object Admin {
     * per committed segment file with its offset range. */
   def placement(spark: SparkSession, wh: Warehouse, topic: String): DataFrame = {
     TopicCatalog.topicInfo(spark, wh, topic)
-    val rows = IndexCache.entries(spark, wh, topic)
+    val rows = LogIndex.entries(spark, wh, topic)
       .filter(_.isData)
       .map(e => Row(e.partition, e.file, e.baseOffset, e.endOffset, e.count))
       .toSeq

@@ -1,7 +1,6 @@
 package graft.core.catalog
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.core._
 
 /** Warehouse directory layout. One warehouse = one "cluster" of topics.
@@ -62,30 +61,32 @@ object TopicCatalog {
     if (replicationFactor < 0 || replicationFactor > MaxReplicationFactor)
       throw new InvalidTopicException(
         s"replicationFactor must be in [0, $MaxReplicationFactor], got $replicationFactor")
-    if (exists(spark, wh, topic))
-      throw new TopicAlreadyExistsException(s"topic '$topic' already exists")
-    val row = Row(topic, numPartitions, replicationFactor, System.currentTimeMillis())
-    spark.createDataFrame(java.util.List.of(row), Schemas.topics)
-      .coalesce(1)
-      .write.mode("append").parquet(wh.catalogDir)
+    // check and register under one lock: concurrent creates of one name
+    // must not both pass the check, and a concurrent delete's rewrite must
+    // not drop a registration that landed after its snapshot
+    withCatalogLock(wh) {
+      if (exists(spark, wh, topic))
+        throw new TopicAlreadyExistsException(s"topic '$topic' already exists")
+      MetaTable.append(wh.catalogDir, Schemas.topics,
+        Seq(Row(topic, numPartitions, replicationFactor, System.currentTimeMillis())))
+    }
     FluxTopic(topic, numPartitions, replicationFactor)
   }
 
-  /** Finish a crashed catalog swap ([[rewriteDir]]) — without this, a crash
-    * between the two renames would leave the ENTIRE topic registry
-    * invisible (every topic unknown, re-creates resurrecting stale data)
-    * even though the complete new registry sits in the rewrite dir. Called
-    * on every catalog read path, like LogIndex.heal. */
-  private def healCatalog(wh: Warehouse): Unit = {
-    graft.core.Swap.heal(Fs(wh.catalogDir), wh.catalogDir)
-  }
+  /** Serializes the catalog's writers (create, delete's rewrite). Taken
+    * innermost — after any topic lock — so the lock order stays acyclic. */
+  private def withCatalogLock[T](wh: Warehouse)(body: => T): T =
+    Locks.withLock(wh, "catalog")(body)
 
-  /** All registered topics. Reference: InMemoryTopicMetadataRepository.getActiveTopics. */
-  def topics(spark: SparkSession, wh: Warehouse): DataFrame = {
-    healCatalog(wh)
-    if (dirExists(wh.catalogDir)) spark.read.schema(Schemas.topics).parquet(wh.catalogDir)
-    else spark.createDataFrame(java.util.List.of[Row](), Schemas.topics)
-  }
+  /** All registered topics, as a local relation over the catalog rows.
+    * Reference: InMemoryTopicMetadataRepository.getActiveTopics. */
+  def topics(spark: SparkSession, wh: Warehouse): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(registry(wh): _*), Schemas.topics)
+
+  /** The catalog rows, read driver-side (the read finishes a crashed
+    * [[deleteTopic]] swap first). */
+  private def registry(wh: Warehouse): Array[Row] =
+    MetaTable.read(wh.catalogDir, Schemas.topics)
 
   def exists(spark: SparkSession, wh: Warehouse, topic: String): Boolean =
     cachedTopics(spark, wh).contains(topic)
@@ -116,12 +117,12 @@ object TopicCatalog {
   def removeListeners(wh: Warehouse): Unit = listeners.remove(wh.root)
 
   private def cachedTopics(spark: SparkSession, wh: Warehouse): Map[String, FluxTopic] = {
-    healCatalog(wh)
+    Swap.heal(Fs(wh.catalogDir), wh.catalogDir) // before the listing it is stamped with
     val fp = graft.core.Memo.listing(wh.catalogDir)
     cache.get(wh.root) match {
       case Some((f, m)) if f == fp => m
       case prev =>
-        val m = topics(spark, wh).collect()
+        val m = registry(wh)
           .map(r => r.getString(0) -> FluxTopic(r.getString(0), r.getInt(1), r.getInt(2)))
           .toMap
         cache.put(wh.root, (fp, m))
@@ -142,12 +143,14 @@ object TopicCatalog {
     topicInfo(spark, wh, topic).numPartitions
 
   /** Delete a topic under its topic lock: index dir first (readers go
-    * blind), then the data files, then the catalog row. A crash mid-way
-    * leaves a still-registered topic with a partial/empty log — re-running
-    * deleteTopic finishes the job — and never an unregistered name whose
-    * stale index/data a re-create would resurrect. The per-topic index dir
-    * makes this a plain recursive delete: no other topic's rows are ever
-    * rewritten (and so cannot be lost to a concurrent append). */
+    * blind), then the data files, then the catalog row — rewritten under
+    * the catalog lock, so concurrent creates and deletes of other topics are
+    * never lost to this rewrite. A crash mid-way leaves a still-registered
+    * topic with a partial/empty log — re-running deleteTopic finishes the
+    * job — and never an unregistered name whose stale index/data a
+    * re-create would resurrect. The per-topic index dir makes this a plain
+    * recursive delete: no other topic's rows are ever rewritten (and so
+    * cannot be lost to a concurrent append). */
   def deleteTopic(spark: SparkSession, wh: Warehouse, topic: String): Unit = {
     if (!exists(spark, wh, topic))
       throw new UnknownTopicException(s"unknown topic '$topic'")
@@ -161,31 +164,23 @@ object TopicCatalog {
       fs.delete(new org.apache.hadoop.fs.Path(s"${wh.indexDir(topic)}_rewrite"), true)
       fs.delete(new org.apache.hadoop.fs.Path(s"${wh.indexDir(topic)}_old"), true)
       fs.delete(idx, true)
-      graft.core.log.IndexCache.invalidate(wh, topic)
+      graft.core.log.LogIndex.invalidate(wh, topic)
       fs.delete(new org.apache.hadoop.fs.Path(wh.logDir(topic)), true)
-      val keptTopics = topics(spark, wh).filter(col("topic") =!= topic)
-      rewriteDir(spark, keptTopics, wh.catalogDir)
+      withCatalogLock(wh) {
+        MetaTable.replace(wh.catalogDir, Schemas.topics,
+          registry(wh).filter(_.getString(0) != topic).toSeq)
+      }
     }
-  }
-
-  /** Swap `dir` to the materialized `df` — the shared reader-safe protocol
-    * ([[graft.core.Swap]]); crash mid-swap is finished by [[healCatalog]]. */
-  private def rewriteDir(spark: SparkSession, df: DataFrame, dir: String): Unit = {
-    df.coalesce(1).write.mode("overwrite").parquet(graft.core.Swap.rewriteDir(dir))
-    graft.core.Swap.install(Fs(dir), dir)
   }
 
   /** Register every topic as a SQL temp view named `topic_<name>`, backed by
     * the indexed log scan — the engine's `spark.sql` surface over topics. */
   def registerViews(spark: SparkSession, wh: Warehouse): Seq[String] = {
     import graft.core.log.LogReader
-    topics(spark, wh).select("topic").collect().map(_.getString(0)).toSeq.map { t =>
+    registry(wh).map(_.getString(0)).toSeq.map { t =>
       val view = s"topic_$t"
       LogReader.scan(spark, wh, t).createOrReplaceTempView(view)
       view
     }
   }
-
-  private[graft] def dirExists(path: String): Boolean =
-    Fs(path).exists(new org.apache.hadoop.fs.Path(path))
 }

@@ -3,7 +3,7 @@ package graft.core.groups
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.Fs
+import graft.core.{Fs, MetaTable}
 import graft.core.catalog.{TopicCatalog, Warehouse}
 import graft.core.log.{LogIndex, LogReader}
 
@@ -18,7 +18,7 @@ import graft.core.log.{LogIndex, LogReader}
   * install the member's slice. The offset-commit surface the reference left
   * as a proto stub (SURVEY.md §2.7 Q6, src/main/proto/offset.proto:8-66)
   * is implemented as a committed-offsets table: last-commit-wins per
-  * (group, topic, partition), read back with a max-by-commit-ts aggregation.
+  * (group, topic, partition), read back as the last commit per partition.
   */
 object ConsumerGroup {
 
@@ -51,12 +51,6 @@ object ConsumerGroup {
     graft.core.Names.check(groupId).foreach(reason =>
       throw new IllegalArgumentException(s"group id '$groupId' $reason"))
 
-  /** Finish a crashed [[retainCommits]] swap of one group's shard. */
-  private def healOffsets(wh: Warehouse, groupId: String): Unit = {
-    val dir = groupDir(wh, groupId)
-    graft.core.Swap.heal(Fs(dir), dir)
-  }
-
   case class Membership(
       groupId: String,
       memberId: String,
@@ -88,62 +82,29 @@ object ConsumerGroup {
     }
   }
 
-  /** Committed next-read offsets for a group (last commit wins).
-    *
-    * Reads the shard unlocked; a concurrent [[retainCommits]] swap makes the
-    * dir transiently missing between its two renames (two metadata ops).
-    * Naively that window reads as "no commits" and a poll silently restarts
-    * from the log beginning — so a missing dir whose `_rewrite`/`_old`
-    * sibling exists is retried (heal + re-read) instead of trusted. */
+  /** Committed next-read offsets for a group: per partition, the last
+    * commit by `commit_ts`, ties going to the larger offset (the order
+    * [[retainCommits]] keeps). Read unlocked through the store, which
+    * re-checks the shard's transient live-missing window under a concurrent
+    * [[retainCommits]] swap instead of reading it as "no commits" (a poll
+    * would silently restart from the log beginning) and throws on a stuck
+    * swap. */
   def committed(
       spark: SparkSession,
       wh: Warehouse,
       groupId: String,
       topic: String): Map[Int, Long] = {
     validateGroupId(groupId)
-    val dir = groupDir(wh, groupId)
-    val fs = Fs(dir)
-    def midSwap(): Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(graft.core.Swap.rewriteDir(dir))) ||
-        fs.exists(new org.apache.hadoop.fs.Path(graft.core.Swap.oldDir(dir)))
-    var attempt = 0
-    while (true) {
-      healOffsets(wh, groupId)
-      attempt += 1
-      if (TopicCatalog.dirExists(dir)) {
-        try {
-          return spark.read.schema(offsetsSchema).parquet(dir)
-            .filter(col("topic") === topic)
-            .groupBy(col("partition"))
-            .agg(max_by(col("offset"), col("commit_ts")).as("offset"))
-            .collect()
-            .map(r => r.getInt(0) -> r.getLong(1))
-            .toMap
-        } catch {
-          // the swap deleted files under our read (list-then-read TOCTOU —
-          // by the time the job fails, the swap may already be fully done,
-          // so there is no state left to inspect): just re-list and re-read
-          case _: Exception if attempt <= 3 =>
-            Thread.sleep(10L * attempt)
-        }
-      } else if (!midSwap()) {
-        return Map.empty // genuinely no commits
-      } else if (attempt > 3) {
-        // Swap markers still present after heal + retries: the shard EXISTS
-        // but is unreadable, which a caller cannot distinguish from "no
-        // commits" — returning Map.empty here would silently restart the
-        // group from offset 0 and re-deliver everything. Fail loudly; the
-        // genuinely-no-commits case returned above.
-        throw new IllegalStateException(
-          s"group '$groupId': offsets shard swap is stuck after $attempt " +
-            s"attempts (markers under ${graft.core.Swap.rewriteDir(dir)} / " +
-            s"${graft.core.Swap.oldDir(dir)}) — refusing to report 'no commits'")
-      } else {
-        Thread.sleep(10L * attempt) // mid-swap blink: heal + re-check
-      }
-    }
-    Map.empty // unreachable
+    MetaTable.read(groupDir(wh, groupId), offsetsSchema)
+      .filter(_.getString(1) == topic)
+      .groupBy(_.getInt(2))
+      .map { case (p, rs) => p -> lastCommit(rs).getLong(3) }
   }
+
+  /** The winning row of one (group, topic, partition): greatest
+    * (`commit_ts`, `offset`). */
+  private def lastCommit(rows: Array[Row]): Row =
+    rows.maxBy(r => (r.getLong(4), r.getLong(3)))
 
   /** Append a commit row per partition (immutable log of commits; readers
     * take the latest — same append-only discipline as the data path). Runs
@@ -169,15 +130,12 @@ object ConsumerGroup {
     validateGroupId(groupId)
     if (offsets.forall(_._2.isEmpty)) return
     graft.core.Locks.withLock(wh, groupLock(groupId)) {
-      healOffsets(wh, groupId)
       val now = System.currentTimeMillis()
       val rows = for {
         (topic, perPart) <- offsets.toSeq
         (p, o) <- perPart.toSeq
       } yield Row(groupId, topic, p, o, now)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), offsetsSchema)
-        .coalesce(1)
-        .write.mode("append").parquet(groupDir(wh, groupId))
+      MetaTable.append(groupDir(wh, groupId), offsetsSchema, rows)
     }
   }
 
@@ -198,14 +156,13 @@ object ConsumerGroup {
       retentionMs: Long,
       nowMs: Long = System.currentTimeMillis()): Unit = {
     val base = new org.apache.hadoop.fs.Path(offsetsBase(wh))
-    val fs = Fs(base)
     val names = Fs.list(base)
       .filter(_.isDirectory)
       .map(_.getPath.getName)
       .filterNot(_.startsWith("."))
     // a group whose previous sweep crashed mid-swap exists ONLY as
-    // <g>_rewrite — derive its name too, so the per-group heal below
-    // reinstalls it instead of the group silently dropping out of every
+    // <g>_rewrite — derive its name too, so the per-group read below (which
+    // heals) reinstalls it instead of the group silently dropping out of every
     // sweep until some consumer touches it
     val groups = (names.filterNot(graft.core.Swap.isStagingName) ++
       names.filter(_.endsWith("_rewrite")).map(_.stripSuffix("_rewrite"))).distinct
@@ -214,21 +171,17 @@ object ConsumerGroup {
     // any other group's commit traffic
     groups.foreach { g =>
       graft.core.Locks.withLock(wh, groupLock(g)) {
-        healOffsets(wh, g)
         val dir = groupDir(wh, g)
-        if (TopicCatalog.dirExists(dir)) {
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("group_id"), col("topic"), col("partition"))
-            .orderBy(col("commit_ts").desc, col("offset").desc)
-          val kept = spark.read.schema(offsetsSchema).parquet(dir)
-            .withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1 || col("commit_ts") >= nowMs - retentionMs)
-            .drop("__rn")
+        val rows = MetaTable.read(dir, offsetsSchema)
+        if (rows.nonEmpty) {
+          val kept = rows.groupBy(r => (r.getString(1), r.getInt(2))).values.toSeq
+            .flatMap { rs =>
+              val last = lastCommit(rs)
+              last +: rs.filter(r => (r ne last) && r.getLong(4) >= nowMs - retentionMs)
+            }
           // reader-safe swap (graft.core.Swap): committed() probes from
           // OTHER threads see a missing shard only between two renames
-          kept.coalesce(1).write.mode("overwrite")
-            .parquet(graft.core.Swap.rewriteDir(dir))
-          graft.core.Swap.install(fs, dir)
+          MetaTable.replace(dir, offsetsSchema, kept)
         }
       }
     }
@@ -262,7 +215,7 @@ object ConsumerGroup {
     // past records the frame never held. A vanished-file retry re-reads
     // the snapshot for both.
     LogReader.retryOnceOnVanished {
-      val entries = graft.core.log.IndexCache.entries(spark, wh, topic)
+      val entries = LogIndex.entries(spark, wh, topic)
       val frames = parts.map { p =>
         LogReader.pollIn(spark, wh, topic, entries, p, from.getOrElse(p, 0L), max)
           .withColumn("partition", lit(p))
@@ -337,7 +290,7 @@ object ConsumerGroup {
     val from = committed(spark, wh, groupId, topic)
     val parts = membership.assignment.getOrElse(topic, Seq.empty)
     def available(): Boolean = {
-      val es = graft.core.log.IndexCache.entries(spark, wh, topic)
+      val es = LogIndex.entries(spark, wh, topic)
       parts.exists { p =>
         val start = from.getOrElse(p, 0L)
         es.exists(e => e.isData && e.partition == p && e.endOffset >= start)

@@ -1,10 +1,8 @@
 package graft.core.log
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.core.{Fs, Schemas}
-import graft.core.catalog.{TopicCatalog, Warehouse}
+import org.apache.spark.sql.{Row, SparkSession}
+import graft.core.{Fs, Memo, MetaTable, Schemas, Swap}
+import graft.core.catalog.Warehouse
 
 /** The per-file offset index, one directory per topic.
   *
@@ -20,14 +18,30 @@ import graft.core.catalog.{TopicCatalog, Warehouse}
   * this index spans every committed file, which is the intent the reference's
   * own tests assume.
   *
-  * The index is itself a log: each append lands one small delta file, and
-  * [[compactIndex]] periodically rewrites a topic's rows into one file so
-  * neither the reload nor the staleness fingerprint ever walks an unbounded
-  * file list. Rewrites use a write-tmp → delete-live → rename protocol whose
-  * crash window (live missing, tmp complete) is closed by [[heal]] on the
-  * next read. All rewrites require the topic lock.
+  * The index is a [[graft.core.MetaTable]]: each append lands one small
+  * delta file ([[appendDelta]]), and [[compactIndex]] periodically rewrites
+  * a topic's rows into one file so neither the reload nor the staleness
+  * fingerprint ever walks an unbounded file list. A rewrite's crash window
+  * (live missing, rewrite complete) is closed by [[heal]] on the next read.
+  * All rewrites require the topic lock.
+  *
+  * The rows are loaded once and pruned in-driver — the in-memory analog of
+  * the reference's per-segment index map (IndexEntries.java:17-26, consulted
+  * on every fetch at LogSegment.java:286-300) — so every `poll` is a single
+  * Spark job over just the matching files. The loaded entries are a
+  * [[graft.core.Memo]] stamped with the index directory's listing: one
+  * cheap listing per read instead of a reload.
   */
 object LogIndex {
+
+  /** One index row; the topic is the directory's. */
+  final case class Entry(
+      partition: Int, file: String, baseOffset: Long, endOffset: Long,
+      count: Long, batchId: Option[Long] = None) {
+    /** High-watermark tombstones ([[HwmFile]]) carry offsets but reference
+      * no data file. */
+    def isData: Boolean = count > 0
+  }
 
   /** Synthetic row marking a partition's high-watermark after retention
     * removed its LAST data file: `count == 0`, `end_offset` = last committed
@@ -36,50 +50,29 @@ object LogIndex {
     * the log-end offset outlives its segments, as in the reference/Kafka. */
   val HwmFile = "__hwm__"
 
-  def hwmRow(topic: String, partition: Int, lastOffset: Long): Row =
-    Row(topic, partition, HwmFile, lastOffset + 1, lastOffset, 0L, null)
+  def hwm(partition: Int, lastOffset: Long): Entry =
+    Entry(partition, HwmFile, lastOffset + 1, lastOffset, 0L)
 
   /** Finish a crashed [[replace]] — [[graft.core.Swap.heal]] over the
     * topic's index dir, called on every read path. */
   private[graft] def heal(wh: Warehouse, topic: String): Unit = {
     val dir = wh.indexDir(topic)
-    graft.core.Swap.heal(Fs(dir), dir)
+    Swap.heal(Fs(dir), dir)
   }
 
-  private def empty(spark: SparkSession): DataFrame =
-    spark.createDataFrame(java.util.List.of[Row](), Schemas.index)
-
-  def forTopic(spark: SparkSession, wh: Warehouse, topic: String): DataFrame = {
+  /** Entries of one topic, reloaded only when the topic's index dir changed
+    * (per-topic dir: the listing is a handful of files, bounded by the
+    * writer's auto-compaction). `spark` is unused: the reload is a
+    * driver-side read. */
+  def entries(spark: SparkSession, wh: Warehouse, topic: String): Array[Entry] = {
     heal(wh, topic)
     val dir = wh.indexDir(topic)
-    if (TopicCatalog.dirExists(dir)) spark.read.schema(Schemas.index).parquet(dir)
-    else empty(spark)
+    Memo("log.index", dir, Memo.listing(dir)) {
+      MetaTable.read(dir, Schemas.index).map(r =>
+        Entry(r.getInt(1), r.getString(2), r.getLong(3), r.getLong(4), r.getLong(5),
+          if (r.isNullAt(6)) None else Some(r.getLong(6))))
+    }
   }
-
-  /** Every topic's index rows — diagnostics surface; hot paths read per
-    * topic. */
-  def all(spark: SparkSession, wh: Warehouse): DataFrame = {
-    val topics = Fs.list(new Path(wh.indexBase))
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filterNot(n => // swap staging/aside dirs are never topics
-        graft.core.Swap.isStagingName(n) || n.startsWith("."))
-    topics.map(forTopic(spark, wh, _))
-      .reduceOption(_ union _)
-      .getOrElse(empty(spark))
-  }
-
-  /** Next offset to assign, per partition — the analog of initializing
-    * `Partition.currentOffset` from `log.getLogEndOffset()`
-    * (reference: src/main/java/server/internal/storage/Partition.java:18).
-    * High-watermark tombstones participate: a fully-expired partition keeps
-    * its end offset. */
-  def nextOffsets(idx: DataFrame): Map[Int, Long] =
-    idx.groupBy(col("partition"))
-      .agg(max("end_offset").as("end"))
-      .collect()
-      .map(r => r.getInt(0) -> (r.getLong(1) + 1L))
-      .toMap
 
   /** Whether `batchId` already landed rows — optionally scoped to a
     * partition set. The scope matters for declared-partition appends: their
@@ -87,39 +80,45 @@ object LogIndex {
     * must also LOOK at only those partitions (a same-batchId append to a
     * disjoint set is a different unit of work, and its rows — which may
     * commit concurrently — must not mask this one's replay detection). */
-  def hasBatch(idx: DataFrame, batchId: Long, partitions: Option[Seq[Int]] = None): Boolean = {
-    val scoped = partitions match {
-      case Some(ps) => idx.filter(col("partition").isInCollection(ps))
-      case None => idx
-    }
-    scoped.filter(col("batch_id") === batchId).limit(1).count() > 0
-  }
-
-  /** Committed end offset (exclusive) per partition of a topic. */
-  def endOffsets(spark: SparkSession, wh: Warehouse, topic: String): Map[Int, Long] =
-    nextOffsets(forTopic(spark, wh, topic))
-
-  /** Replace a topic's index rows wholesale. The new rows are materialized
-    * into the rewrite dir BEFORE the live dir is touched (the write action
-    * forces the read), so the swap never reads what it is deleting. The
-    * swap itself is rename-aside → rename-in → delete-aside: unlocked
-    * READERS see a missing index only between the two renames (two metadata
-    * ops), never for the duration of a recursive delete — at millions of
-    * segments that delete is long, and "index briefly empty" would read as
-    * "topic empty". Crash between the renames is repaired by [[heal]];
-    * leftover `_old`/`_rewrite` dirs are cleared by the next replace.
-    * CALLERS MUST HOLD THE TOPIC LOCK — the swap is not atomic against a
-    * concurrent append's delta write (its rows would land in the doomed
-    * live dir and be lost). */
-  private[graft] def replace(
+  def hasBatch(
       spark: SparkSession,
       wh: Warehouse,
       topic: String,
-      rows: DataFrame): Unit = {
-    val dir = wh.indexDir(topic)
-    rows.coalesce(1).write.mode("overwrite").parquet(graft.core.Swap.rewriteDir(dir))
-    graft.core.Swap.install(Fs(dir), dir)
-    IndexCache.invalidate(wh, topic)
+      batchId: Long,
+      partitions: Option[Seq[Int]] = None): Boolean =
+    entries(spark, wh, topic).exists { e =>
+      e.batchId.contains(batchId) && partitions.forall(_.contains(e.partition))
+    }
+
+  /** Next offset to assign, per partition — the analog of initializing
+    * `Partition.currentOffset` from `log.getLogEndOffset()`
+    * (reference: src/main/java/server/internal/storage/Partition.java:18).
+    * High-watermark tombstones participate: a fully-expired partition keeps
+    * its end offset. */
+  def nextOffsets(spark: SparkSession, wh: Warehouse, topic: String): Map[Int, Long] =
+    entries(spark, wh, topic)
+      .groupBy(_.partition)
+      .map { case (p, es) => p -> (es.map(_.endOffset).max + 1L) }
+
+  def invalidate(wh: Warehouse, topic: String): Unit =
+    Memo.invalidate(wh.indexDir(topic))
+
+  /** Land one append's rows as one delta file. Concurrent appends to
+    * disjoint partition sets land their deltas independently. */
+  private[log] def appendDelta(wh: Warehouse, topic: String, rows: Seq[Entry]): Unit = {
+    MetaTable.append(wh.indexDir(topic), Schemas.index, rows.map(toRow(topic, _)))
+    invalidate(wh, topic)
+  }
+
+  /** Replace a topic's index rows wholesale through the reader-safe swap
+    * ([[graft.core.MetaTable.replace]]): unlocked readers see a missing
+    * index only between two renames, never for the duration of a recursive
+    * delete. CALLERS MUST HOLD THE TOPIC LOCK — the swap is not atomic
+    * against a concurrent append's delta (its rows would land in the doomed
+    * live dir and be lost). */
+  private[graft] def replace(wh: Warehouse, topic: String, rows: Seq[Entry]): Unit = {
+    MetaTable.replace(wh.indexDir(topic), Schemas.index, rows.map(toRow(topic, _)))
+    invalidate(wh, topic)
   }
 
   /** Rewrite a topic's index into a single file. Bounds the reload and
@@ -127,5 +126,9 @@ object LogIndex {
     * index is a log, so it gets compacted like one. Requires the topic
     * lock. */
   private[graft] def compactIndex(spark: SparkSession, wh: Warehouse, topic: String): Unit =
-    replace(spark, wh, topic, forTopic(spark, wh, topic))
+    replace(wh, topic, entries(spark, wh, topic).toSeq)
+
+  private def toRow(topic: String, e: Entry): Row =
+    Row(topic, e.partition, e.file, e.baseOffset, e.endOffset, e.count,
+      e.batchId.map(Long.box).orNull)
 }

@@ -31,7 +31,7 @@ object LogReader {
       partition: Int,
       fromOffset: Long,
       max: Long): DataFrame = retryOnceOnVanished {
-    pollIn(spark, wh, topic, IndexCache.entries(spark, wh, topic),
+    pollIn(spark, wh, topic, LogIndex.entries(spark, wh, topic),
       partition, fromOffset, max)
   }
 
@@ -43,7 +43,7 @@ object LogReader {
       spark: SparkSession,
       wh: Warehouse,
       topic: String,
-      entries: Array[IndexCache.Entry],
+      entries: Array[LogIndex.Entry],
       partition: Int,
       fromOffset: Long,
       max: Long): DataFrame = {
@@ -101,7 +101,7 @@ object LogReader {
     * returned frame is the topic "table" the query layer runs over. */
   def scan(spark: SparkSession, wh: Warehouse, topic: String): DataFrame =
     retryOnceOnVanished {
-    val files = IndexCache.entries(spark, wh, topic).filter(_.isData).map(_.file)
+    val files = LogIndex.entries(spark, wh, topic).filter(_.isData).map(_.file)
     if (files.isEmpty) emptyLog(spark, wh, topic)
     else segmentFiles(spark, wh, topic, files.toIndexedSeq)
   }
@@ -113,7 +113,7 @@ object LogReader {
       wh: Warehouse,
       topic: String,
       from: Map[Int, Long]): DataFrame = retryOnceOnVanished {
-    val files = IndexCache.entries(spark, wh, topic)
+    val files = LogIndex.entries(spark, wh, topic)
       .filter(e => e.isData && e.endOffset >= from.getOrElse(e.partition, 0L))
       .map(_.file)
     if (files.isEmpty) emptyLog(spark, wh, topic)

@@ -1,7 +1,7 @@
 package graft.core.log
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.{Fs, Locks}
 import graft.core.catalog.Warehouse
@@ -36,7 +36,7 @@ object LogRetention {
       keepFrom: Map[Int, Long]): Seq[String] =
     Locks.withTopicLock(wh, topic,
         graft.core.catalog.TopicCatalog.numPartitions(spark, wh, topic)) {
-    val entries = IndexCache.entries(spark, wh, topic)
+    val entries = LogIndex.entries(spark, wh, topic)
     val (drop, keep) = entries.filter(_.isData).partition(e =>
       e.endOffset < keepFrom.getOrElse(e.partition, 0L))
     if (drop.isEmpty) return Seq.empty
@@ -44,19 +44,10 @@ object LogRetention {
     // partitions losing their last data file get (or keep) a high-watermark
     // tombstone carrying max(end_offset) over everything the partition had
     val keptParts = keep.map(_.partition).toSet
-    val hwmRows = entries.groupBy(_.partition).collect {
-      case (p, es) if !keptParts.contains(p) =>
-        LogIndex.hwmRow(topic, p, es.map(_.endOffset).max)
-    }.toSeq
-
-    val keepFiles = keep.map(_.file).toSet
-    val keptRows = LogIndex.forTopic(spark, wh, topic)
-      .filter(col("count") > 0 &&
-        (if (keepFiles.isEmpty) lit(false)
-         else col("file").isInCollection(keepFiles.toSeq)))
-    val hwmDf = spark.createDataFrame(
-      java.util.Arrays.asList(hwmRows: _*), graft.core.Schemas.index)
-    LogIndex.replace(spark, wh, topic, keptRows.unionByName(hwmDf))
+    val hwms = entries.groupBy(_.partition).collect {
+      case (p, es) if !keptParts.contains(p) => LogIndex.hwm(p, es.map(_.endOffset).max)
+    }
+    LogIndex.replace(wh, topic, keep.toSeq ++ hwms)
 
     drop.foreach { e =>
       val p = new Path(e.file)
@@ -86,7 +77,7 @@ object LogRetention {
         graft.core.catalog.TopicCatalog.numPartitions(spark, wh, topic)) {
       val threshold = nowMs - retentionMs
       val keepFrom = LogReader.offsetsForTimes(spark, wh, topic, threshold)
-      val ends = IndexCache.nextOffsets(spark, wh, topic) // cached, no job
+      val ends = LogIndex.nextOffsets(spark, wh, topic) // cached, no job
       val full = ends.map { case (p, end) => p -> keepFrom.getOrElse(p, end) }
       expireBefore(spark, wh, topic, full)
     }
@@ -107,10 +98,10 @@ object LogRetention {
       val logDir = new Path(wh.logDir(topic))
       val fs = Fs(logDir)
       if (!fs.exists(logDir)) return Seq.empty
-      val indexed = IndexCache.entries(spark, wh, topic).filter(_.isData)
+      val indexed = LogIndex.entries(spark, wh, topic).filter(_.isData)
         .map(e => new Path(e.file).toUri.getPath).toSet
       val deleted = Seq.newBuilder[String]
-      // crashed index-delta staging (writeIndexDelta died between its
+      // crashed index-delta staging (LogIndex.appendDelta died between its
       // parquet write and the rename-in): `.delta=<topic>=<uid>` dirs under
       // the index base. `=` cannot appear in a validated topic name, so the
       // prefix match can never claim another topic's in-flight delta.
@@ -153,7 +144,7 @@ object LogRetention {
       topic: String): Unit =
     Locks.withTopicLock(wh, topic,
         graft.core.catalog.TopicCatalog.numPartitions(spark, wh, topic)) {
-    val entries = IndexCache.entries(spark, wh, topic)
+    val entries = LogIndex.entries(spark, wh, topic)
     val dataEntries = entries.filter(_.isData)
     if (dataEntries.isEmpty) return
     val before = LogReader.scan(spark, wh, topic)
@@ -173,21 +164,14 @@ object LogRetention {
       .write.mode("overwrite").partitionBy("partition").parquet(staging)
     val moved = LogWriter.commitStaged(staging, logDir)
 
-    val movedParts = scala.collection.mutable.Set.empty[Int]
-    val indexRows: Seq[Row] = moved.map { f =>
-      val st = LogWriter.footerStats(f)
-      movedParts += st.partition
-      Row(topic, st.partition, st.file, st.baseOffset, st.endOffset, st.count, null)
+    val indexRows = moved.map { f =>
+      val st = LogWriter.readFooterStats(f)
+      LogIndex.Entry(st.partition, st.file, st.baseOffset, st.endOffset, st.count)
     }
     // tombstones of partitions with no compacted data survive the rewrite
-    val hwmRows = entries.collect {
-      case e if !e.isData && !movedParts.contains(e.partition) =>
-        LogIndex.hwmRow(topic, e.partition, e.endOffset)
-    }.toSeq
-    LogIndex.replace(spark, wh, topic,
-      spark.createDataFrame(
-        java.util.Arrays.asList((indexRows ++ hwmRows): _*),
-        graft.core.Schemas.index))
+    val movedParts = indexRows.map(_.partition).toSet
+    val hwms = entries.filter(e => !e.isData && !movedParts.contains(e.partition))
+    LogIndex.replace(wh, topic, indexRows ++ hwms)
 
     dataEntries.foreach { e =>
       val p = new Path(e.file)

@@ -209,13 +209,12 @@ object LogWriter {
     }
     val result = graft.core.Locks.withPartitionLocks(wh, topic, locked) {
       batchId.foreach { id =>
-        // cache-based replay check (driver-side index read): the DataFrame
-        // form cost one Spark job per batch-keyed append — fixed scheduler
-        // overhead on every streaming micro-batch
-        if (IndexCache.hasBatch(spark, wh, topic, id, partitions))
+        // replay check against the cached driver-side index: no Spark job
+        // on every streaming micro-batch
+        if (LogIndex.hasBatch(spark, wh, topic, id, partitions))
           return AppendResult(topic, batchId, Map.empty, 0L)
       }
-      val bases = IndexCache.nextOffsets(spark, wh, topic)
+      val bases = LogIndex.nextOffsets(spark, wh, topic)
       val explicitP =
         if (records.columns.contains("explicit_partition")) col("explicit_partition")
         else lit(null).cast("int")
@@ -285,16 +284,8 @@ object LogWriter {
           .collect(java.util.stream.Collectors.toList[FileStats]).asScala.toSeq
       }
       val ranges: Map[Int, (Long, Long)] = if (stats.isEmpty) Map.empty else {
-        val indexRows = stats.map { s =>
-          IndexIO.IndexRow(
-            topic, s.partition, s.file, s.baseOffset, s.endOffset,
-            s.count, batchId)
-        }
-        writeIndexDelta(wh, topic, indexRows)
-        IndexCache.invalidate(wh, topic)
-        // compaction rewrites EVERY partition's index rows, so it may only
-        // run while holding every partition lock
-        if (locked.size == n) maybeCompactIndex(spark, wh, topic)
+        LogIndex.appendDelta(wh, topic, stats.map(s =>
+          LogIndex.Entry(s.partition, s.file, s.baseOffset, s.endOffset, s.count, batchId)))
         stats.groupBy(_.partition).map { case (p, ss) =>
           p -> (ss.map(_.baseOffset).min, ss.map(_.endOffset).max)
         }
@@ -302,25 +293,9 @@ object LogWriter {
       AppendResult(topic, batchId,
         ranges, stats.map(_.count).sum)
     }
-    // a declared-partition append cannot compact inline (it holds only its
-    // own locks); once the delta count crosses the bound, escalate to the
-    // full topic lock AFTER releasing — index growth stays bounded even for
-    // workloads that only ever do explicit-partition appends
-    if (locked.size < n && indexNeedsCompaction(wh, topic))
-      graft.core.Locks.withTopicLock(wh, topic, n) {
-        if (indexNeedsCompaction(wh, topic)) LogIndex.compactIndex(spark, wh, topic)
-      }
+    compactIndexIfNeeded(spark, wh, topic, n)
     result
   }
-
-  /** Convenience produce path for `Dataset[ProducerRecord]`-shaped input. */
-  def produce(
-      spark: SparkSession,
-      wh: Warehouse,
-      topic: String,
-      records: DataFrame,
-      ordCol: String): AppendResult =
-    append(spark, wh, topic, records, ordCol)
 
   private[log] case class FileStats(
       partition: Int, file: String, baseOffset: Long, endOffset: Long, count: Long)
@@ -329,9 +304,7 @@ object LogWriter {
     * footer column statistics (the `offset` column is LongType and always
     * present, so min/max are exact). Partition id parses from the
     * `partition=<p>` directory. */
-  private[log] def footerStats(file: String): FileStats = readFooterStats(file)
-
-  private def readFooterStats(file: String): FileStats = {
+  private[log] def readFooterStats(file: String): FileStats = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import scala.jdk.CollectionConverters._
     val path = new Path(file)
@@ -370,38 +343,18 @@ object LogWriter {
     Fs.list(new Path(wh.indexDir(topic)))
       .count(s => !s.getPath.getName.startsWith("_")) > MaxIndexFiles
 
-  private def maybeCompactIndex(
-      spark: SparkSession, wh: Warehouse, topic: String): Unit =
-    if (indexNeedsCompaction(wh, topic)) LogIndex.compactIndex(spark, wh, topic)
-
-  /** Land one append's index delta atomically: write to a private staging
-    * dir, then rename the single part-file into the topic's index dir under
-    * a unique name. `mode("append")` into a shared dir is NOT safe under
-    * concurrency — both jobs stage under `<dir>/_temporary/0` and one
-    * committer's cleanup deletes the other's in-flight attempt files (the
-    * exact corruption the round-3 concurrent-append failure exposed). With
-    * staging private per append, deltas from concurrent disjoint-partition
-    * appends land independently. */
-  private def writeIndexDelta(
-      wh: Warehouse, topic: String, rows: Seq[IndexIO.IndexRow]): Unit = {
-    // `=` separators: topic names cannot contain `=`, so vacuum's
-    // prefix-match on `.delta=<topic>=` can never claim a DIFFERENT topic's
-    // in-flight delta (`.delta-a-...` would be a prefix of `.delta-a-b-...`).
-    // The delta is metadata-scale (one row per new file) and is written
-    // DRIVER-SIDE (IndexIO) — the old `coalesce(1)` Spark write was one
-    // whole driver job of fixed overhead per append; the stage-then-rename
-    // crash protocol is unchanged.
-    val uid = java.util.UUID.randomUUID().toString.take(12)
-    val staging = s"${wh.indexBase}/.delta=$topic=$uid"
-    val stagedFile = new Path(staging, s"delta-$uid.parquet")
-    val fs = Fs(stagedFile)
-    IndexIO.writeFile(stagedFile, rows)
-    val dest = new Path(wh.indexDir(topic), s"delta-$uid.parquet")
-    fs.mkdirs(dest.getParent)
-    if (!fs.rename(stagedFile, dest))
-      throw new IllegalStateException(s"failed to land index delta for '$topic'")
-    fs.delete(new Path(staging), true)
-  }
+  /** Compact the topic's index once its delta count crosses the bound.
+    * Runs after the append released its locks and takes the full topic
+    * lock: compaction rewrites EVERY partition's rows, and a
+    * declared-partition append holds only its own — so index growth stays
+    * bounded even for workloads that only ever do explicit-partition
+    * appends. */
+  private def compactIndexIfNeeded(
+      spark: SparkSession, wh: Warehouse, topic: String, numPartitions: Int): Unit =
+    if (indexNeedsCompaction(wh, topic))
+      graft.core.Locks.withTopicLock(wh, topic, numPartitions) {
+        if (indexNeedsCompaction(wh, topic)) LogIndex.compactIndex(spark, wh, topic)
+      }
 
   /** Move every staged data file into its live `partition=<p>` dir and drop
     * the staging dir; returns the final paths. Spark part-file names embed

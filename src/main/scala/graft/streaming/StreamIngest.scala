@@ -18,7 +18,7 @@ import graft.core.log.LogWriter
   * accumulator/drain machinery becomes the micro-batch itself, and the
   * ack/retry protocol (FluxProducer.java:191-239) becomes exactly-once
   * delivery via (checkpoint + batchId-keyed skip in the index table) — a
-  * replayed micro-batch after a crash hits `IndexCache.hasBatch` (the
+  * replayed micro-batch after a crash hits `LogIndex.hasBatch` (the
   * driver-side cached index read) and no-ops.
   */
 object StreamIngest {
@@ -161,7 +161,7 @@ private[streaming] object ConsumeState {
   import java.nio.charset.StandardCharsets.UTF_8
   import org.apache.hadoop.fs.{FileSystem, Path}
   import org.apache.spark.sql.functions._
-  import graft.core.log.IndexCache
+  import graft.core.log.LogIndex
 
   private val Name = "^batch-(\\d+)$".r
 
@@ -182,7 +182,7 @@ private[streaming] object ConsumeState {
         .flatMap(id => read(fs, new Path(stateDir, s"batch-$id")))
         .map(_.map { case (p, (_, e)) => p -> e })
         .getOrElse(Map.empty)
-      val committed = IndexCache.nextOffsets(spark, wh, topic)
+      val committed = LogIndex.nextOffsets(spark, wh, topic)
       val ranges = committed.map { case (p, n) =>
         val s = start.getOrElse(p, 0L)
         // saturating cap: maxPerPartition bounds one batch's bite
@@ -210,7 +210,7 @@ private[streaming] object ConsumeState {
       topic: String,
       ranges: Map[Int, (Long, Long)]): org.apache.spark.sql.DataFrame =
     graft.core.log.LogReader.retryOnceOnVanished {
-    val files = IndexCache.entries(spark, wh, topic)
+    val files = LogIndex.entries(spark, wh, topic)
       .filter { e =>
         ranges.get(e.partition).exists { case (s, end) =>
           e.isData && e.endOffset >= s && e.baseOffset < end

@@ -30,7 +30,7 @@ object LogDemo {
     println(s"== appended ${res.records} records; per-partition ranges: ${res.ranges.toSeq.sortBy(_._1)}")
 
     println("== committed end offsets: " +
-      LogIndex.endOffsets(spark, wh, "events").toSeq.sortBy(_._1))
+      LogIndex.nextOffsets(spark, wh, "events").toSeq.sortBy(_._1))
 
     val polled = LogReader.poll(spark, wh, "events", 0, 5, 8)
     println("== poll(events, p=0, from=5, max=8):")

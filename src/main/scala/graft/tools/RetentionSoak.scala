@@ -133,7 +133,7 @@ object RetentionSoak {
         concat(lit(s"b$b:"), col("id")).as("value"))
       LogWriter.append(spark, wh, Topic, df, "ord")
       if (b % ExpireEvery == ExpireEvery - 1) {
-        val keepFrom = LogIndex.endOffsets(spark, wh, Topic)
+        val keepFrom = LogIndex.nextOffsets(spark, wh, Topic)
           .map { case (p, end) => p -> math.max(0L, end - KeepWindow) }
         deletedFiles += LogRetention
           .expireBefore(spark, wh, Topic, keepFrom).size
@@ -157,7 +157,7 @@ object RetentionSoak {
       .agg(count(lit(1)).as("n"), min("offset").as("lo"),
         max("offset").as("hi"), countDistinct("offset").as("d"))
       .collect()
-    val appended = LogIndex.endOffsets(spark, wh, Topic)
+    val appended = LogIndex.nextOffsets(spark, wh, Topic)
     val windowOk = perPart.nonEmpty && perPart.forall { r =>
       val (p, n, lo, hi, d) =
         (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))

@@ -2,14 +2,14 @@ package graft
 
 import java.util.concurrent.{Callable, Executors}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.Row
 import scala.jdk.CollectionConverters._
 
-import graft.core.{Fs, Memo}
+import graft.core.{Fs, Memo, MetaTable, Schemas}
 import graft.core.admin.Admin
 import graft.core.catalog.{TopicCatalog, Warehouse}
 import graft.core.groups.ConsumerGroup
-import graft.core.log.{IndexIO, LogWriter}
-import graft.core.log.IndexIO.IndexRow
+import graft.core.log.{LogIndex, LogWriter}
 
 /** The shared Hadoop configuration ([[graft.core.Fs]]) is read by every
   * caller on every thread, so nothing may write into it: a library that
@@ -39,12 +39,12 @@ class FsSpec extends SparkSpec {
     LogWriter.append(spark, wh, "t", records(50), "id")
     val before = entries(Fs.conf)
 
-    val dir = tmpDir("graft-fs-index")
-    val rows = Seq(IndexRow("t", 0, "f0.parquet", 0L, 9L, 10L, Some(1L)))
-    IndexIO.writeFile(new Path(s"$dir/delta-a.parquet"), rows)
-    assert(IndexIO.readRows(dir).toSeq === rows)
+    val dir = tmpDir("graft-fs-index") + "/t"
+    val rows = Seq(Row("t", 0, "f0.parquet", 0L, 9L, 10L, 1L))
+    MetaTable.append(dir, Schemas.index, rows)
+    assert(MetaTable.read(dir, Schemas.index).toSeq === rows)
     LogWriter.append(spark, wh, "t", records(200, 50), "id")
-    val next = graft.core.log.IndexCache.nextOffsets(spark, wh, "t")
+    val next = LogIndex.nextOffsets(spark, wh, "t")
     ConsumerGroup.commit(spark, wh, "g", "t", next)
     assert(Admin.verifyTopic(spark, wh, "t", deep = true).ok)
 
@@ -95,6 +95,6 @@ class FsSpec extends SparkSpec {
     Fs(dir).delete(new Path(dir), true)
     assert(Memo.listing(dir) === "")
     assert(Fs.list(new Path(dir)).isEmpty)
-    assert(IndexIO.readRows(dir).isEmpty)
+    assert(MetaTable.read(dir, Schemas.index).isEmpty)
   }
 }

@@ -90,6 +90,31 @@ class GroupsStreamingSpec extends SparkSpec {
     assert(ConsumerGroup.committed(spark, wh, "g1", "t") === before)
   }
 
+  test("committed() racing retainCommits swaps returns the pre-sweep map") {
+    val wh = Warehouse(tmpDir("graft-sweep-race"))
+    (1 to 3).foreach(i =>
+      ConsumerGroup.commit(spark, wh, "g", "t", Map(0 -> 10L * i, 1 -> 5L * i)))
+    val before = ConsumerGroup.committed(spark, wh, "g", "t")
+    assert(before === Map(0 -> 30L, 1 -> 15L))
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    // the first sweep drops the superseded rows, every later one rewrites
+    // the same two: each opens the live-missing window between its renames
+    val sweeps = Future {
+      (0 until 20).foreach(_ => ConsumerGroup.retainCommits(spark, wh, retentionMs = 0,
+        nowMs = System.currentTimeMillis() + 3600 * 1000))
+    }
+    var reads = 0
+    while (!sweeps.isCompleted) {
+      assert(ConsumerGroup.committed(spark, wh, "g", "t") === before, s"read $reads")
+      reads += 1
+    }
+    Await.result(sweeps, 120.seconds)
+    assert(reads > 0, "no read overlapped the sweeps")
+    assert(ConsumerGroup.committed(spark, wh, "g", "t") === before)
+  }
+
   test("committed(): heals a crashed swap; a STUCK swap throws, never 'no commits'") {
     val wh = Warehouse(tmpDir("graft-stuckswap"))
     TopicCatalog.createTopic(spark, wh, "t", 1)

@@ -47,7 +47,7 @@ class IntegritySpec extends SparkSpec {
     val stalePoll = LogReader.poll(spark, wh, "t", 0, 100, 100)
     // delete the file covering [100,199] OUT-OF-BAND (not retention:
     // the index row stays)
-    val victim = graft.core.log.IndexCache.entries(spark, wh, "t")
+    val victim = graft.core.log.LogIndex.entries(spark, wh, "t")
       .filter(e => e.isData && e.baseOffset == 100L)
     assert(victim.length === 1)
     val p = new org.apache.hadoop.fs.Path(victim.head.file)
@@ -77,10 +77,10 @@ class IntegritySpec extends SparkSpec {
   test("a mid-log INDEX hole (row lost, file present) trips the chain check") {
     val wh = Warehouse(tmpDir("graft-integrity-idxhole"))
     fourFiles(wh, "t")
-    val idx = LogIndex.forTopic(spark, wh, "t")
-    val pruned = idx.filter(!(col("base_offset") === 100L && col("count") > 0))
+    val idx = LogIndex.entries(spark, wh, "t")
+    val pruned = idx.filterNot(e => e.baseOffset == 100L && e.count > 0)
     graft.core.Locks.withTopicLock(wh, "t", 1) {
-      LogIndex.replace(spark, wh, "t", pruned)
+      LogIndex.replace(wh, "t", pruned.toSeq)
     }
     val r = Admin.verifyTopic(spark, wh, "t")
     assert(!r.ok)
@@ -115,7 +115,7 @@ class IntegritySpec extends SparkSpec {
     assert(r.ok, r.summary)
     // and a truncated compacted file still trips the DEEP count check:
     // rewrite one data file with a subset of its rows
-    val e = graft.core.log.IndexCache.entries(spark, wh, "t")
+    val e = graft.core.log.LogIndex.entries(spark, wh, "t")
       .filter(_.isData).head
     // read as-is (physical columns only) so the rewritten file keeps the
     // original physical schema — `partition` stays a directory key

@@ -86,7 +86,7 @@ class LogSpec extends SparkSpec {
     val wh = freshWarehouse()
     TopicCatalog.createTopic(spark, wh, "t", 2)
     LogWriter.append(spark, wh, "t", someRecords(100), "id")
-    val ends1 = LogIndex.endOffsets(spark, wh, "t")
+    val ends1 = LogIndex.nextOffsets(spark, wh, "t")
     LogWriter.append(spark, wh, "t", someRecords(100), "id")
     val all = LogReader.scan(spark, wh, "t")
     assert(all.count() === 200)
@@ -160,12 +160,10 @@ class LogSpec extends SparkSpec {
         .filterNot(n => n.startsWith("_") || n.startsWith("."))
     }
     assert(indexFiles().size === 5, "one delta file per append")
-    val entriesBefore = graft.core.log.LogIndex.forTopic(spark, wh, "t")
-      .collect().map(_.toSeq).toSet
+    val entriesBefore = graft.core.log.LogIndex.entries(spark, wh, "t").toSet
     graft.core.log.LogIndex.compactIndex(spark, wh, "t")
     assert(indexFiles().size === 1, "compacted to a single file")
-    val entriesAfter = graft.core.log.LogIndex.forTopic(spark, wh, "t")
-      .collect().map(_.toSeq).toSet
+    val entriesAfter = graft.core.log.LogIndex.entries(spark, wh, "t").toSet
     assert(entriesAfter === entriesBefore)
     assert(LogReader.scan(spark, wh, "t").count() === 200)
     // appends keep working and continue offsets after the rewrite
@@ -194,8 +192,7 @@ class LogSpec extends SparkSpec {
     // junk is not in the index, not read, not disturbed
     assert(LogReader.scan(spark, wh, "t").count() === 200)
     assert(!LogReader.scan(spark, wh, "t").inputFiles.exists(_.contains("junk")))
-    assert(LogIndex.forTopic(spark, wh, "t")
-      .filter(col("file").contains("junk")).count() === 0)
+    assert(LogIndex.entries(spark, wh, "t").count(_.file.contains("junk")) === 0)
     assert(fs.exists(junk))
   }
 
@@ -242,8 +239,8 @@ class LogSpec extends SparkSpec {
       LogWriter.append(spark, wh, "t",
         someRecords(100).withColumn("explicit_partition", lit(0)), "id")
     }
-    val idx = LogIndex.forTopic(spark, wh, "t")
-    assert(idx.count() === 5)
+    val idx = LogIndex.entries(spark, wh, "t")
+    assert(idx.length === 5)
     // polling offsets [250, 260) must touch only the file covering 200-299
     val polled = LogReader.poll(spark, wh, "t", 0, 250, 10)
     assert(polled.count() === 10)

@@ -15,7 +15,10 @@ import scala.jdk.CollectionConverters._
   *     under `.withConf`), and no recursive Hadoop `listFiles` (the local
   *     filesystem forks a process per returned file);
   *   - a SparkSession is built only in [[graft.Sessions]] and a listener
-  *     is registered only in [[graft.JobStats]]. */
+  *     is registered only in [[graft.JobStats]];
+  *   - the metadata tables (offset index, topic catalog, group offsets) are
+  *     read and written only through [[graft.core.MetaTable]]: no Spark read
+  *     or write of their dirs, no parquet-mr reader or writer elsewhere. */
 class MemoGuardSpec extends AnyFunSuite {
 
   private def hits(home: String)(bad: String => Boolean): List[String] = {
@@ -55,5 +58,14 @@ class MemoGuardSpec extends AnyFunSuite {
       """extends\s+[\w.]*SparkListener\b""").map(_.r)
     val listeners = hits("JobStats.scala")(l => listener.exists(_.findFirstIn(l).isDefined))
     assert(builders.isEmpty && listeners.isEmpty, (builders ++ listeners).mkString("\n"))
+  }
+
+  test("metadata tables are read and written only through MetaTable") {
+    val patterns = Seq(
+      """\.read\.schema\(\s*(graft\.core\.)?(Schemas\.(index|topics)|(ConsumerGroup\.)?offsetsSchema)\s*\)""",
+      """\.parquet\(.*(catalogDir|indexDir|groupDir|Swap\.rewriteDir)""",
+      """ExampleParquetWriter|ParquetReader\.Builder""").map(_.r)
+    val found = hits("MetaTable.scala")(l => patterns.exists(_.findFirstIn(l).isDefined))
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }

@@ -20,7 +20,7 @@ class RetentionSpec extends SparkSpec {
       LogWriter.append(spark, wh, "t",
         recs(100, from = i * 100).withColumn("explicit_partition", lit(0)), "id")
     }
-    assert(LogIndex.forTopic(spark, wh, "t").count() === 4)
+    assert(LogIndex.entries(spark, wh, "t").length === 4)
     val dropped = LogRetention.expireBefore(spark, wh, "t", Map(0 -> 250L))
     // files covering [0,99] and [100,199] go; [200,299] straddles -> kept
     assert(dropped.size === 2)
@@ -135,7 +135,7 @@ class RetentionSpec extends SparkSpec {
     assert(!TopicCatalog.exists(spark, wh, "dropme"))
     assert(TopicCatalog.exists(spark, wh, "keepme"))
     assert(LogReader.scan(spark, wh, "keepme").count() === 50)
-    assert(LogIndex.forTopic(spark, wh, "dropme").count() === 0)
+    assert(LogIndex.entries(spark, wh, "dropme").length === 0)
     intercept[UnknownTopicException] {
       TopicCatalog.deleteTopic(spark, wh, "dropme")
     }
@@ -150,7 +150,7 @@ class RetentionSpec extends SparkSpec {
     assert(dropped.nonEmpty)
     assert(LogReader.scan(spark, wh, "t").count() === 0)
     // next offset survives via the tombstone: appends continue at 100, not 0
-    assert(LogIndex.endOffsets(spark, wh, "t") === Map(0 -> 100L))
+    assert(LogIndex.nextOffsets(spark, wh, "t") === Map(0 -> 100L))
     val r = LogWriter.append(spark, wh, "t",
       recs(10, from = 500).withColumn("explicit_partition", lit(0)), "id")
     assert(r.ranges(0)._1 === 100L)
@@ -158,7 +158,7 @@ class RetentionSpec extends SparkSpec {
     // compaction keeps the tombstone of the still-empty partition? no —
     // partition 0 has data again, so the watermark rides on the data rows
     LogRetention.compact(spark, wh, "t")
-    assert(LogIndex.endOffsets(spark, wh, "t") === Map(0 -> 110L))
+    assert(LogIndex.nextOffsets(spark, wh, "t") === Map(0 -> 110L))
   }
 
   test("compaction of a fully-expired topic keeps tombstones (offsets stay monotonic)") {
@@ -168,7 +168,7 @@ class RetentionSpec extends SparkSpec {
       recs(50).withColumn("explicit_partition", lit(0)), "id")
     LogRetention.expireBefore(spark, wh, "t", Map(0 -> 100L))
     LogRetention.compact(spark, wh, "t") // nothing to compact; must not lose the hwm
-    assert(LogIndex.endOffsets(spark, wh, "t") === Map(0 -> 50L))
+    assert(LogIndex.nextOffsets(spark, wh, "t") === Map(0 -> 50L))
   }
 
   test("assignment codec round-trips the reference wire format") {
@@ -235,7 +235,7 @@ class RetentionSpec extends SparkSpec {
       retentionMs = 1, nowMs = 1700000000000L + 10000)
     assert(all.nonEmpty)
     assert(LogReader.scan(spark, wh, "t").count() === 0)
-    assert(LogIndex.endOffsets(spark, wh, "t") === Map(0 -> 400L))
+    assert(LogIndex.nextOffsets(spark, wh, "t") === Map(0 -> 400L))
   }
 
   test("beginning/end offsets and consumer lag track retention and commits") {
@@ -364,7 +364,7 @@ class RetentionSpec extends SparkSpec {
     val r = LogWriter.append(spark, wh, "t", recs(2000), "id",
       conf = ProducerConfig(maxRecordsPerFile = 25))
     assert(r.records === 2000)
-    assert(LogIndex.forTopic(spark, wh, "t").count() >= 60, "many segments committed")
+    assert(LogIndex.entries(spark, wh, "t").length >= 60, "many segments committed")
     val all = LogReader.scan(spark, wh, "t")
     assert(all.count() === 2000)
     val perPart = all.groupBy($"partition")
