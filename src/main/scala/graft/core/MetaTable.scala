@@ -46,11 +46,14 @@ private[graft] object MetaTable {
     *
     * Safe against a concurrent [[replace]]: each attempt first finishes a
     * crashed install ([[Swap.heal]]); a file that vanishes between the
-    * listing and its read re-lists and re-reads; and a table that is
-    * missing while a swap marker (`_rewrite`/`_old`) exists is the swap's
-    * live-missing blink — re-checked, never read as "no rows". Markers
-    * that outlast the retries are a stuck swap, which throws: an empty
-    * answer would read as "no commits" or "no topics". */
+    * listing and its read re-lists and re-reads; and an empty listing is
+    * trusted only for a table that is absent with no swap marker
+    * (`_rewrite`/`_old`) beside it. Otherwise it is the swap's blink — the
+    * live dir renamed aside mid-listing (the local filesystem then lists it
+    * as empty) or missing between the two renames — and is re-checked,
+    * never read as "no rows". Markers that outlast the retries with no live
+    * dir are a stuck swap, which throws: an empty answer would read as "no
+    * commits" or "no topics". */
   def read(dir: String, schema: StructType): Array[Row] = {
     val live = new Path(dir)
     val fs = Fs(live)
@@ -60,27 +63,30 @@ private[graft] object MetaTable {
     while (true) {
       attempt += 1
       Swap.heal(fs, dir)
-      val listed =
-        try Some(fs.listStatus(live).map(_.getPath).filter(p => visible(p.getName)))
-        catch { case _: FileNotFoundException => None }
-      listed match {
-        case Some(files) =>
-          try {
-            return java.util.Arrays.stream(files).parallel()
-              .map[Seq[Row]](p => readFile(p, schema))
-              .collect(java.util.stream.Collectors.toList[Seq[Row]])
-              .asScala.toArray.flatten
-          } catch {
-            case e: Exception if attempt <= Retries && vanished(e) => ()
-          }
-        // missing: genuinely absent, unless it is back already (a swap
-        // completed after the listing) or a swap is between its renames
-        case None if !fs.exists(live) && !marked => return Array.empty
-        case None if attempt > Retries && marked =>
-          throw new IllegalStateException(
-            s"$dir: swap is stuck after $attempt attempts (markers under " +
-              s"${Swap.rewriteDir(dir)} / ${Swap.oldDir(dir)}) — refusing to read it as empty")
-        case None => ()
+      var listError: Option[java.io.IOException] = None
+      val files =
+        try fs.listStatus(live).map(_.getPath).filter(p => visible(p.getName))
+        catch { case e: java.io.IOException => listError = Some(e); Array.empty[Path] }
+      if (files.nonEmpty) {
+        try {
+          return java.util.Arrays.stream(files).parallel()
+            .map[Seq[Row]](p => readFile(p, schema))
+            .collect(java.util.stream.Collectors.toList[Seq[Row]])
+            .asScala.toArray.flatten
+        } catch {
+          case e: Exception if attempt <= Retries && vanished(e) => ()
+        }
+      } else {
+        val present = fs.exists(live)
+        if (!present && !marked) return Array.empty // genuinely absent
+        if (attempt > Retries) {
+          if (!present)
+            throw new IllegalStateException(
+              s"$dir: swap is stuck after $attempt attempts (markers under " +
+                s"${Swap.rewriteDir(dir)} / ${Swap.oldDir(dir)}) — refusing to read it as empty")
+          listError.foreach(e => throw e)
+          return Array.empty // an existing dir with no data file
+        }
       }
       Thread.sleep(10L * attempt)
     }

@@ -68,12 +68,17 @@ object Swap {
   /** Finish a crashed [[install]]: live missing + rewrite present means the
     * crash hit between the renames and the rewrite is complete (it is only
     * ever renamed aside after being fully written). Idempotent; one exists
-    * check on the happy path. */
+    * check on the happy path. A rename that throws lost the race to the
+    * install itself (or to another reader's heal), which moved the rewrite
+    * first — LocalFileSystem throws FileNotFound when the source vanished;
+    * readers re-check the dir after healing. */
   def heal(fs: FileSystem, dir: String): Unit = {
     val live = new Path(dir)
     if (!fs.exists(live)) {
       val tmp = new Path(rewriteDir(dir))
-      if (fs.exists(tmp)) fs.rename(tmp, live)
+      if (fs.exists(tmp))
+        try fs.rename(tmp, live)
+        catch { case _: java.io.IOException => () }
     }
   }
 }
