@@ -1,59 +1,38 @@
 package graft
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Row
 
 import graft.core.Schemas
-import graft.core.log.IndexIO
-import graft.core.log.IndexIO.IndexRow
+import graft.core.catalog.Warehouse
+import graft.core.log.LogIndex
+import graft.core.log.LogIndex.Entry
 
-/** Driver-side index parquet I/O (round-18 optimization: the per-append
-  * index reload / delta write / batch-replay check stopped being Spark
-  * jobs). Pins the two interop directions — Spark must read what IndexIO
-  * writes, IndexIO must read what Spark writes — and the null handling of
-  * `batch_id`, because a silent mismatch here would corrupt offset
-  * assignment rather than crash. */
+/** The offset index's driver-side read path over files Spark wrote: a
+  * warehouse written before the index moved to the driver holds a
+  * Spark-compacted index plus Spark-appended deltas, and
+  * [[graft.core.log.LogIndex.entries]] must decode both, `batch_id` nulls
+  * included, or offset assignment would silently restart. */
 class IndexIOSpec extends SparkSpec {
 
-  private val rows = Seq(
-    IndexRow("t", 0, "f0.parquet", 0L, 99L, 100L, None),
-    IndexRow("t", 1, "f1.parquet", 0L, 49L, 50L, Some(7L)),
-    IndexRow("t", 0, "__hwm__", 100L, 99L, 0L, None))
+  private val compacted = Seq(
+    Entry(0, "f0.parquet", 0L, 99L, 100L),
+    Entry(0, LogIndex.HwmFile, 100L, 99L, 0L))
+  private val delta = Seq(Entry(1, "f1.parquet", 0L, 49L, 50L, Some(7L)))
 
-  test("IndexIO round-trip: writeFile rows come back via readRows") {
-    val dir = tmpDir("graft-indexio-rt")
-    IndexIO.writeFile(new Path(s"$dir/delta-a.parquet"), rows)
-    val back = IndexIO.readRows(dir).toSet
-    assert(back === rows.toSet)
-  }
-
-  test("Spark reads an IndexIO-written delta under the pinned index schema") {
-    val dir = tmpDir("graft-indexio-spark")
-    IndexIO.writeFile(new Path(s"$dir/delta-a.parquet"), rows)
-    val got = spark.read.schema(Schemas.index).parquet(dir)
-      .collect()
-      .map(r => IndexRow(r.getString(0), r.getInt(1), r.getString(2),
-        r.getLong(3), r.getLong(4), r.getLong(5),
-        if (r.isNullAt(6)) None else Some(r.getLong(6))))
-      .toSet
-    assert(got === rows.toSet)
-  }
+  private def toRow(e: Entry): Row =
+    Row("t", e.partition, e.file, e.baseOffset, e.endOffset, e.count,
+      e.batchId.map(Long.box).orNull)
 
   test("IndexIO reads a Spark-written index file (legacy deltas, compacted indexes)") {
-    val dir = tmpDir("graft-indexio-legacy")
-    val sparkRows = rows.map(r => Row(r.topic, r.partition, r.file,
-      r.baseOffset, r.endOffset, r.count, r.batchId.map(Long.box).orNull))
-    spark.createDataFrame(java.util.Arrays.asList(sparkRows: _*), Schemas.index)
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    assert(IndexIO.readRows(dir).toSet === rows.toSet)
-  }
-
-  test("readRows skips dot/underscore files and handles a missing dir") {
-    val dir = tmpDir("graft-indexio-skip")
-    IndexIO.writeFile(new Path(s"$dir/delta-a.parquet"), rows.take(1))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/_SUCCESS"), "")
-    assert(IndexIO.readRows(dir).length === 1)
-    assert(IndexIO.readRows(s"$dir/never-created").isEmpty)
+    val wh = Warehouse(tmpDir("graft-indexio-legacy"))
+    def sparkWrite(mode: String, es: Seq[Entry]): Unit =
+      spark.createDataFrame(java.util.Arrays.asList(es.map(toRow): _*), Schemas.index)
+        .coalesce(1).write.mode(mode).parquet(wh.indexDir("t"))
+    sparkWrite("overwrite", compacted)
+    assert(LogIndex.entries(spark, wh, "t").toSet === compacted.toSet)
+    sparkWrite("append", delta)
+    assert(LogIndex.entries(spark, wh, "t").toSet === (compacted ++ delta).toSet)
+    assert(LogIndex.nextOffsets(spark, wh, "t") === Map(0 -> 100L, 1 -> 50L))
+    assert(LogIndex.hasBatch(spark, wh, "t", 7L))
   }
 }
