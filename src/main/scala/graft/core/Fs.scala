@@ -1,9 +1,11 @@
 package graft.core
 
 import java.io.FileNotFoundException
+import java.nio.file.{Files, NoSuchFileException}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import scala.jdk.CollectionConverters._
 
 /** The one Hadoop configuration of driver-side filesystem and parquet
   * metadata access.
@@ -33,10 +35,24 @@ object Fs {
 
   /** Entries of `dir`, empty when it does not exist — one metadata call
     * where `exists` + `listStatus` took two, and no window for the dir to
-    * vanish between them (a [[Swap]]'s rename-aside → rename-in). */
+    * vanish between them. */
   def list(dir: Path): Array[FileStatus] =
     try apply(dir).listStatus(dir)
     catch { case _: FileNotFoundException => Array.empty }
+
+  /** Names in `dir`, None when it does not exist. On the local filesystem
+    * one read of the directory: Hadoop's local `listStatus` stats each name
+    * afterwards and drops one whose file was deleted in between, so racing
+    * a rename-in plus delete it could miss both the new file and the old. */
+  def names(dir: Path): Option[Seq[String]] =
+    try Some(apply(dir) match {
+      case local: LocalFileSystem =>
+        val s = Files.newDirectoryStream(local.pathToFile(dir).toPath)
+        try s.iterator.asScala.map(_.getFileName.toString).toVector
+        finally s.close()
+      case fs => fs.listStatus(dir).toSeq.map(_.getPath.getName)
+    })
+    catch { case _: FileNotFoundException | _: NoSuchFileException => None }
 
   def inputFile(path: Path): HadoopInputFile = HadoopInputFile.fromPath(path, conf)
 }

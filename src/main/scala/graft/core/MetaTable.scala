@@ -31,6 +31,21 @@ import scala.jdk.CollectionConverters._
   * Writers hold the table's lock (topic partition locks for the index, the
   * `catalog` lock, the group's offsets lock); readers take none.
   *
+  * Only files are renamed, never dirs — the rule of Structured Streaming's
+  * offset log and Spark's `CompactibleFileStreamLog`. A table is its
+  * newest snapshot `snap-<gen>.parquet` plus the deltas
+  * `delta-<gen>-<uid>.parquet` named after it; any other data file
+  * (Spark's `part-*`, older versions' deltas) is generation 0. An append
+  * and a replace of one table never overlap (every append holds a lock
+  * every replace holds), so a delta's generation cannot go stale as it lands.
+  *
+  * A reader's listing is one read of the directory ([[Fs.names]]), which
+  * the local filesystem orders against each rename and unlink of a
+  * [[replace]]: it shows the dir before the snapshot rename or after it
+  * (the new snapshot then wins over any covered file still left), never a
+  * torn set. The one retry rule: a file deleted after the listing, or
+  * missing from it (a delta newer than every listed snapshot), re-lists.
+  *
   * LOCAL-FS ASSUMPTION: every path here resolves through [[Fs]], the
   * driver's one shared Hadoop configuration, which carries the defaults.
   * It is the single place a session's `spark.hadoop.*` settings would be
@@ -39,76 +54,109 @@ import scala.jdk.CollectionConverters._
   */
 private[graft] object MetaTable {
 
-  private val Retries = 3
+  /** Bound on re-lists: each needs a replace to finish inside one read. */
+  private val Retries = 8
 
-  /** Every row of every data file under `dir` (`_`/`.` names skipped), read
-    * in one parallel driver pass; empty for a missing table.
+  private val Snapshot = """snap-(\d+)\.parquet""".r
+  private val Delta = """delta-(\d+)-[0-9a-f]{16}\.parquet""".r
+  private val SnapshotTemp = """\.snap-.*\.parquet""".r
+
+  /** A data file of a table dir and the snapshot generation it belongs to. */
+  private final case class DataFile(name: String, gen: Long, snapshot: Boolean)
+
+  /** The data files among a dir's names (`_`/`.` names skipped). */
+  private def dataFiles(names: Seq[String]): Seq[DataFile] =
+    names.filter(visible).map {
+      case n @ Snapshot(g) => DataFile(n, g.toLong, snapshot = true)
+      case n @ Delta(g) => DataFile(n, g.toLong, snapshot = false)
+      case n => DataFile(n, 0L, snapshot = false)
+    }
+
+  /** Generation of the newest snapshot, 0 when there is none. */
+  private def newest(files: Seq[DataFile]): Long =
+    files.filter(_.snapshot).map(_.gen).maxOption.getOrElse(0L)
+
+  private def files(dir: String): Seq[DataFile] = dataFiles(listing(dir).getOrElse(Nil))
+
+  /** Names in `dir`; None for an absent table.
     *
-    * Safe against a concurrent [[replace]]: each attempt first finishes a
-    * crashed install ([[Swap.heal]]); a file that vanishes between the
-    * listing and its read re-lists and re-reads; and an empty listing is
-    * trusted only for a table that is absent with no swap marker
-    * (`_rewrite`/`_old`) beside it. Otherwise it is the swap's blink — the
-    * live dir renamed aside mid-listing (the local filesystem then lists it
-    * as empty) or missing between the two renames — and is re-checked,
-    * never read as "no rows". Markers that outlast the retries with no live
-    * dir are a stuck swap, which throws: an empty answer would read as "no
-    * commits" or "no topics". */
-  def read(dir: String, schema: StructType): Array[Row] = {
+    * Legacy rule, run only when the dir is missing: older versions
+    * rewrote a table by renaming the dir aside and `<dir>_rewrite` in. A
+    * crash between those renames left the complete rewrite and no dir, so
+    * the rewrite is renamed in and the aside copy deleted; a rename lost to
+    * another reader, like a dir that reappeared, re-lists. An aside copy
+    * alone is a stuck swap, which throws: reading it as empty would read as
+    * "no commits" or "no topics". */
+  private def listing(dir: String): Option[Seq[String]] = {
     val live = new Path(dir)
     val fs = Fs(live)
-    def marked: Boolean =
-      fs.exists(new Path(Swap.rewriteDir(dir))) || fs.exists(new Path(Swap.oldDir(dir)))
-    var attempt = 0
+    val rewrite = new Path(Swap.rewriteDir(dir))
+    val old = new Path(Swap.oldDir(dir))
     while (true) {
-      attempt += 1
-      Swap.heal(fs, dir)
-      var listError: Option[java.io.IOException] = None
-      val files =
-        try fs.listStatus(live).map(_.getPath).filter(p => visible(p.getName))
-        catch { case e: java.io.IOException => listError = Some(e); Array.empty[Path] }
-      if (files.nonEmpty) {
-        try {
-          return java.util.Arrays.stream(files).parallel()
-            .map[Seq[Row]](p => readFile(p, schema))
-            .collect(java.util.stream.Collectors.toList[Seq[Row]])
-            .asScala.toArray.flatten
-        } catch {
-          case e: Exception if attempt <= Retries && vanished(e) => ()
-        }
-      } else {
-        val present = fs.exists(live)
-        if (!present && !marked) return Array.empty // genuinely absent
-        if (attempt > Retries) {
-          if (!present)
+      Fs.names(live) match {
+        case found @ Some(_) => return found
+        case None if fs.exists(rewrite) =>
+          val renamed =
+            try fs.rename(rewrite, live)
+            catch { case _: java.io.IOException => false }
+          if (renamed) fs.delete(old, true)
+        case None if !fs.exists(live) =>
+          if (fs.exists(old))
             throw new IllegalStateException(
-              s"$dir: swap is stuck after $attempt attempts (markers under " +
-                s"${Swap.rewriteDir(dir)} / ${Swap.oldDir(dir)}) — refusing to read it as empty")
-          listError.foreach(e => throw e)
-          return Array.empty // an existing dir with no data file
-        }
+              s"$dir: swap is stuck (only ${Swap.oldDir(dir)} is left) — refusing to read it as empty")
+          return None
+        case None => ()
       }
-      Thread.sleep(10L * attempt)
     }
     throw new IllegalStateException("unreachable")
   }
 
-  /** Land `rows` as ONE new file of the table: written into a private
-    * staging dir beside it (`.delta=<table>=<uid>`), then renamed in under
-    * a unique name. Never a shared `_temporary` dir — concurrent writers
-    * staging there delete each other's in-flight files. A crash leaves the
-    * staging dir, which no reader lists; `=` cannot appear in a validated
-    * topic or group name, so a prefix match on `.delta=<name>=` (the
-    * index's vacuum) never claims another table's staging. */
+  /** Every row of the table at `dir` — its newest snapshot plus the deltas
+    * that follow it, read in one parallel driver pass; empty for a missing
+    * table. */
+  def read(dir: String, schema: StructType): Array[Row] = {
+    var attempt = 0
+    while (true) {
+      attempt += 1
+      val listed = files(dir)
+      val gen = newest(listed)
+      try {
+        if (listed.exists(_.gen > gen))
+          throw new FileNotFoundException(s"$dir: snapshot ${gen + 1} is not listed")
+        return java.util.Arrays.stream(listed.filter(_.gen == gen).toArray).parallel()
+          .map[Seq[Row]](f => readFile(new Path(dir, f.name), schema))
+          .collect(java.util.stream.Collectors.toList[Seq[Row]])
+          .asScala.toArray.flatten
+      } catch {
+        case e: Exception if attempt <= Retries && vanished(e) => ()
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** Deltas the newest snapshot does not cover — the files a [[replace]]
+    * would fold into one. */
+  def uncompacted(dir: String): Int = {
+    val listed = files(dir)
+    val gen = newest(listed)
+    listed.count(f => !f.snapshot && f.gen == gen)
+  }
+
+  /** Land `rows` as ONE new delta of the table: written into a private
+    * staging dir beside it (`.delta=<table>=<uid>`), then renamed in as
+    * `delta-<gen>-<uid>.parquet` after the newest snapshot. Never a shared
+    * `_temporary` dir — concurrent writers staging there delete each
+    * other's in-flight files. A crash leaves the staging dir, which no
+    * reader lists; `=` cannot appear in a validated topic or group name, so
+    * a prefix match on `.delta=<name>=` (the index's vacuum) never claims
+    * another table's staging. */
   def append(dir: String, schema: StructType, rows: Seq[Row]): Unit = {
     val live = new Path(dir)
     val fs = Fs(live)
-    // a crashed swap must be finished first: a fresh live dir would shadow
-    // the complete rewrite and the rows in it would be lost
-    Swap.heal(fs, dir)
-    val uid = java.util.UUID.randomUUID().toString.take(12)
+    val gen = newest(files(dir))
+    val uid = uid16()
     val staging = new Path(live.getParent, s".delta=${live.getName}=$uid")
-    val staged = new Path(staging, s"delta-$uid.parquet")
+    val staged = new Path(staging, s"delta-$gen-$uid.parquet")
     writeFile(staged, schema, rows)
     fs.mkdirs(live)
     if (!fs.rename(staged, new Path(live, staged.getName)))
@@ -116,21 +164,33 @@ private[graft] object MetaTable {
     fs.delete(staging, true)
   }
 
-  /** Replace the table's rows wholesale: one file written into
-    * `<dir>_rewrite`, then the reader-safe [[Swap.install]]. */
+  /** Replace the table's rows with one snapshot: written as a dot-file,
+    * renamed in as `snap-<gen+1>.parquet`, then every file the listing held
+    * is deleted, older snapshots first (a listing spread over several
+    * directory reads that missed a delta deleted meanwhile then finds its
+    * snapshot gone), plus crashed replaces' dot-files. Spark reading the
+    * dir as plain parquet then sees exactly the table again. */
   def replace(dir: String, schema: StructType, rows: Seq[Row]): Unit = {
-    val fs = Fs(dir)
-    val rewrite = new Path(Swap.rewriteDir(dir))
-    fs.delete(rewrite, true) // a crashed replace's partial rewrite
-    writeFile(new Path(rewrite, s"part-${java.util.UUID.randomUUID()}.parquet"), schema, rows)
-    Swap.install(fs, dir)
+    val live = new Path(dir)
+    val fs = Fs(live)
+    val names = listing(dir).getOrElse(Nil)
+    val covered = dataFiles(names)
+    val gen = newest(covered) + 1
+    val temp = new Path(live, s".snap-$gen-${uid16()}.parquet")
+    writeFile(temp, schema, rows)
+    if (!fs.rename(temp, new Path(live, s"snap-$gen.parquet")))
+      throw new IllegalStateException(s"failed to install snapshot $gen in $dir")
+    (covered.sortBy(!_.snapshot).map(_.name) ++ names.filter(SnapshotTemp.matches))
+      .foreach(n => fs.delete(new Path(live, n), false))
   }
+
+  private def uid16(): String = java.util.UUID.randomUUID().toString.replace("-", "").take(16)
 
   private def visible(name: String): Boolean =
     !name.startsWith("_") && !name.startsWith(".")
 
   /** A file (or its checksum sidecar, opened through java.nio) that a
-    * swap removed after the listing. */
+    * replace removed after the listing, or that the listing missed. */
   private def vanished(e: Throwable): Boolean =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
       case _: FileNotFoundException | _: java.nio.file.NoSuchFileException => true

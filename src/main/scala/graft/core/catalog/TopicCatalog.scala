@@ -41,9 +41,9 @@ object TopicCatalog {
   /** Topic names become warehouse directory names, so they must be
     * path-safe (no separators, no leading `.`/`_` that Spark's file listing
     * or the warehouse layout treats specially) and must not collide with
-    * the `*_rewrite`/`*_old` swap-staging suffixes — a topic literally
-    * named `X_rewrite` would share topic X's staging dir and could have its
-    * index destroyed by X's next rewrite. One policy shared with group ids
+    * the `*_rewrite`/`*_old` dirs of older versions' swaps
+    * ([[graft.core.Swap]]) — topic `X_rewrite`'s index would be deleted
+    * with topic X, or renamed in as X's. One policy shared with group ids
     * ([[graft.core.Names]]). */
   private[graft] def validateName(topic: String): Unit =
     graft.core.Names.check(topic).foreach(reason =>
@@ -83,8 +83,7 @@ object TopicCatalog {
   def topics(spark: SparkSession, wh: Warehouse): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(registry(wh): _*), Schemas.topics)
 
-  /** The catalog rows, read driver-side (the read finishes a crashed
-    * [[deleteTopic]] swap first). */
+  /** The catalog rows, read driver-side. */
   private def registry(wh: Warehouse): Array[Row] =
     MetaTable.read(wh.catalogDir, Schemas.topics)
 
@@ -117,7 +116,6 @@ object TopicCatalog {
   def removeListeners(wh: Warehouse): Unit = listeners.remove(wh.root)
 
   private def cachedTopics(spark: SparkSession, wh: Warehouse): Map[String, FluxTopic] = {
-    Swap.heal(Fs(wh.catalogDir), wh.catalogDir) // before the listing it is stamped with
     val fp = graft.core.Memo.listing(wh.catalogDir)
     cache.get(wh.root) match {
       case Some((f, m)) if f == fp => m
@@ -158,11 +156,11 @@ object TopicCatalog {
     graft.core.Locks.withTopicLock(wh, topic, n) {
       val idx = new org.apache.hadoop.fs.Path(wh.indexDir(topic))
       val fs = Fs(idx)
-      // leftover rewrite staging goes FIRST: if we crashed after deleting the
-      // live dir but before the stale staging, the next reader's heal() would
-      // rename the staging back and resurrect the index of a deleted topic
-      fs.delete(new org.apache.hadoop.fs.Path(s"${wh.indexDir(topic)}_rewrite"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"${wh.indexDir(topic)}_old"), true)
+      // an older version's swap dirs go FIRST: with the live dir gone,
+      // MetaTable's legacy rule would rename a stale rewrite in, or read a
+      // re-created topic's index as a stuck swap
+      fs.delete(new org.apache.hadoop.fs.Path(Swap.rewriteDir(wh.indexDir(topic))), true)
+      fs.delete(new org.apache.hadoop.fs.Path(Swap.oldDir(wh.indexDir(topic))), true)
       fs.delete(idx, true)
       graft.core.log.LogIndex.invalidate(wh, topic)
       fs.delete(new org.apache.hadoop.fs.Path(wh.logDir(topic)), true)

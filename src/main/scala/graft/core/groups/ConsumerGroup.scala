@@ -33,8 +33,8 @@ object ConsumerGroup {
     * `_groups/offsets/<group>/` — with a per-group lock, so unrelated
     * groups' commits run fully in parallel; only a commit and a retention
     * sweep of the SAME group exclude each other (the one pair that must:
-    * the sweep's snapshot-rewrite-swap would otherwise erase a commit that
-    * landed after its snapshot). Layout v2: pre-shard warehouses (flat
+    * the sweep's snapshot would otherwise erase a commit that landed after
+    * it read the rows). Layout v2: pre-shard warehouses (flat
     * parquet files directly under `_groups/offsets/`) are not read — this
     * engine has no cross-revision warehouse persistence contract; re-commit
     * offsets after upgrading a long-lived warehouse. */
@@ -84,11 +84,10 @@ object ConsumerGroup {
 
   /** Committed next-read offsets for a group: per partition, the last
     * commit by `commit_ts`, ties going to the larger offset (the order
-    * [[retainCommits]] keeps). Read unlocked through the store, which
-    * re-checks the shard's transient live-missing window under a concurrent
-    * [[retainCommits]] swap instead of reading it as "no commits" (a poll
-    * would silently restart from the log beginning) and throws on a stuck
-    * swap. */
+    * [[retainCommits]] keeps). Read unlocked through the store: a
+    * concurrent [[retainCommits]] snapshot shows either the rows before it
+    * or after it, never "no commits" (a poll would silently restart from
+    * the log beginning). */
   def committed(
       spark: SparkSession,
       wh: Warehouse,
@@ -148,27 +147,22 @@ object ConsumerGroup {
     * the append-only commit log grows with every commit ever made — at one
     * commit per partition per second that is the difference between a
     * bounded metadata table and an unbounded scan on every `committed()`.
-    * Same index-first swap discipline as the data path (tmp + rename,
-    * healed on next read). */
+    * Each group's rows are rewritten as one snapshot file of the store. */
   def retainCommits(
       spark: SparkSession,
       wh: Warehouse,
       retentionMs: Long,
       nowMs: Long = System.currentTimeMillis()): Unit = {
     val base = new org.apache.hadoop.fs.Path(offsetsBase(wh))
-    val names = Fs.list(base)
+    // swap dirs an older version left are not groups; a group that exists
+    // only as one is renamed in by its next read and swept after that
+    val groups = Fs.list(base)
       .filter(_.isDirectory)
       .map(_.getPath.getName)
-      .filterNot(_.startsWith("."))
-    // a group whose previous sweep crashed mid-swap exists ONLY as
-    // <g>_rewrite — derive its name too, so the per-group read below (which
-    // heals) reinstalls it instead of the group silently dropping out of every
-    // sweep until some consumer touches it
-    val groups = (names.filterNot(graft.core.Swap.isStagingName) ++
-      names.filter(_.endsWith("_rewrite")).map(_.stripSuffix("_rewrite"))).distinct
+      .filterNot(n => n.startsWith(".") || graft.core.Swap.isStagingName(n))
     // one group at a time, each under ITS lock only: the sweep excludes that
-    // group's commits (snapshot-rewrite-swap safety) without ever pausing
-    // any other group's commit traffic
+    // group's commits (the snapshot covers only the rows it read) without
+    // ever pausing any other group's commit traffic
     groups.foreach { g =>
       graft.core.Locks.withLock(wh, groupLock(g)) {
         val dir = groupDir(wh, g)
@@ -179,8 +173,6 @@ object ConsumerGroup {
               val last = lastCommit(rs)
               last +: rs.filter(r => (r ne last) && r.getLong(4) >= nowMs - retentionMs)
             }
-          // reader-safe swap (graft.core.Swap): committed() probes from
-          // OTHER threads see a missing shard only between two renames
           MetaTable.replace(dir, offsetsSchema, kept)
         }
       }

@@ -1,7 +1,7 @@
 package graft.core.log
 
 import org.apache.spark.sql.{Row, SparkSession}
-import graft.core.{Fs, Memo, MetaTable, Schemas, Swap}
+import graft.core.{Memo, MetaTable, Schemas}
 import graft.core.catalog.Warehouse
 
 /** The per-file offset index, one directory per topic.
@@ -19,10 +19,10 @@ import graft.core.catalog.Warehouse
   * own tests assume.
   *
   * The index is a [[graft.core.MetaTable]]: each append lands one small
-  * delta file ([[appendDelta]]), and [[compactIndex]] periodically rewrites
-  * a topic's rows into one file so neither the reload nor the staleness
-  * fingerprint ever walks an unbounded file list. A rewrite's crash window
-  * (live missing, rewrite complete) is closed by [[heal]] on the next read.
+  * delta file ([[appendDelta]]), and [[compactIndex]] periodically folds a
+  * topic's rows into one snapshot file so neither the reload nor the
+  * staleness fingerprint ever walks an unbounded file list. A snapshot is
+  * one file renamed in, so a crash at any point leaves a readable index.
   * All rewrites require the topic lock.
   *
   * The rows are loaded once and pruned in-driver — the in-memory analog of
@@ -53,19 +53,11 @@ object LogIndex {
   def hwm(partition: Int, lastOffset: Long): Entry =
     Entry(partition, HwmFile, lastOffset + 1, lastOffset, 0L)
 
-  /** Finish a crashed [[replace]] — [[graft.core.Swap.heal]] over the
-    * topic's index dir, called on every read path. */
-  private[graft] def heal(wh: Warehouse, topic: String): Unit = {
-    val dir = wh.indexDir(topic)
-    Swap.heal(Fs(dir), dir)
-  }
-
   /** Entries of one topic, reloaded only when the topic's index dir changed
     * (per-topic dir: the listing is a handful of files, bounded by the
     * writer's auto-compaction). `spark` is unused: the reload is a
     * driver-side read. */
   def entries(spark: SparkSession, wh: Warehouse, topic: String): Array[Entry] = {
-    heal(wh, topic)
     val dir = wh.indexDir(topic)
     Memo("log.index", dir, Memo.listing(dir)) {
       MetaTable.read(dir, Schemas.index).map(r =>
@@ -110,18 +102,17 @@ object LogIndex {
     invalidate(wh, topic)
   }
 
-  /** Replace a topic's index rows wholesale through the reader-safe swap
-    * ([[graft.core.MetaTable.replace]]): unlocked readers see a missing
-    * index only between two renames, never for the duration of a recursive
-    * delete. CALLERS MUST HOLD THE TOPIC LOCK — the swap is not atomic
-    * against a concurrent append's delta (its rows would land in the doomed
-    * live dir and be lost). */
+  /** Replace a topic's index rows wholesale with one snapshot
+    * ([[graft.core.MetaTable.replace]]): unlocked readers see the old rows
+    * or the new ones, never a gap. CALLERS MUST HOLD THE TOPIC LOCK — the
+    * snapshot covers only the deltas its caller read, and deletes every
+    * delta it listed. */
   private[graft] def replace(wh: Warehouse, topic: String, rows: Seq[Entry]): Unit = {
     MetaTable.replace(wh.indexDir(topic), Schemas.index, rows.map(toRow(topic, _)))
     invalidate(wh, topic)
   }
 
-  /** Rewrite a topic's index into a single file. Bounds the reload and
+  /** Fold a topic's index into a single snapshot file. Bounds the reload and
     * fingerprint cost of the index however many appends have run — the
     * index is a log, so it gets compacted like one. Requires the topic
     * lock. */

@@ -340,8 +340,7 @@ object LogWriter {
   private val MaxIndexFiles = 64
 
   private def indexNeedsCompaction(wh: Warehouse, topic: String): Boolean =
-    Fs.list(new Path(wh.indexDir(topic)))
-      .count(s => !s.getPath.getName.startsWith("_")) > MaxIndexFiles
+    MetaTable.uncompacted(wh.indexDir(topic)) > MaxIndexFiles
 
   /** Compact the topic's index once its delta count crosses the bound.
     * Runs after the append released its locks and takes the full topic

@@ -23,10 +23,10 @@ import graft.core.log.{LogReader, LogWriter}
   * one of them SIGKILLed while appends are still live. Every successful
   * poll must observe only dense committed prefixes: per-partition offsets
   * dense and gapless from 0 (a torn read of an in-flight append — a
-  * staged file visible early, a half-installed index swap, a reader-heal
-  * racing a compaction's rename-aside — would gap or duplicate), and the
+  * staged file visible early, an index listing torn by a compaction's
+  * snapshot rename and deletes — would gap or duplicate), and the
   * per-partition high watermark never regresses across polls (committed
-  * data must never transiently vanish while an index rewrite swaps).
+  * data must never transiently vanish while an index snapshot installs).
   *
   * Post-run, the parent oracle-checks the merged log:
   *
@@ -78,7 +78,7 @@ object LockSoak {
           (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
         // dense committed prefix: 0..n-1, no collisions
         if (!(lo == 0L && hi == n - 1 && d == n)) bad = true
-        // committed data never regresses (an index swap must never show
+        // committed data never regresses (an index rewrite must never show
         // a shorter log than an earlier poll saw)
         if (hi < prevHi.getOrElse(p, -1L)) bad = true
         prevHi(p) = math.max(hi, prevHi.getOrElse(p, -1L))

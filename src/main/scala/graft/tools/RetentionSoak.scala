@@ -22,7 +22,7 @@ import graft.core.log.{LogIndex, LogReader, LogRetention, LogWriter}
   *     of a half-applied expiry or a partially visible append would gap
   *     or duplicate);
   *   - the high watermark `hi` never regresses across polls (committed
-  *     data never transiently vanishes while an index swap installs);
+  *     data never transiently vanishes while an index snapshot installs);
   *   - the low watermark `lo` never regresses (expired data never
   *     reappears).
   *

@@ -172,6 +172,29 @@ class LogSpec extends SparkSpec {
     assert(LogReader.scan(spark, wh, "t").count() === 240)
   }
 
+  test("index auto-compaction: past 64 uncompacted deltas, checksum sidecars not counted") {
+    val wh = freshWarehouse()
+    TopicCatalog.createTopic(spark, wh, "t", 1)
+    val dir = new java.io.File(wh.indexDir("t"))
+    def deltas(): Int = dir.list().count(n => n.startsWith("delta-") && n.endsWith(".parquet"))
+    def appendOne(): Unit = LogWriter.append(spark, wh, "t", someRecords(1), "id")
+    (1 to 40).foreach(_ => appendOne())
+    // the local filesystem lands a `.delta-*.parquet.crc` beside each delta
+    assert(dir.list().count(_.endsWith(".crc")) >= 40)
+    assert(deltas() === 40, "40 one-record appends leave 40 uncompacted deltas")
+    assert(MetaTable.uncompacted(wh.indexDir("t")) === 40)
+    (41 to 64).foreach(_ => appendOne())
+    assert(deltas() === 64, "64 deltas are still within the bound")
+    appendOne()
+    assert(deltas() === 0 && MetaTable.uncompacted(wh.indexDir("t")) === 0,
+      "the 65th delta compacts the index")
+    assert(LogIndex.entries(spark, wh, "t").length === 65)
+    // the snapshot the compaction left is not a delta
+    appendOne()
+    assert(deltas() === 1 && MetaTable.uncompacted(wh.indexDir("t")) === 1)
+    assert(LogReader.scan(spark, wh, "t").count() === 66)
+  }
+
   test("append commit is staging-scoped: unindexed files in the topic tree stay invisible") {
     val wh = freshWarehouse()
     TopicCatalog.createTopic(spark, wh, "t", 1)

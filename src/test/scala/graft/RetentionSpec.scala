@@ -313,23 +313,6 @@ class RetentionSpec extends SparkSpec {
     assert(LogReader.scan(spark, wh, "t").count() === 50)
   }
 
-  test("install raced by an unlocked heal completes instead of throwing") {
-    val wh = Warehouse(tmpDir("graft-swap-race"))
-    val dir = s"${wh.root}/swapped"
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-    def touch(p: String): Unit = fs.create(new org.apache.hadoop.fs.Path(p), true).close()
-    fs.mkdirs(new org.apache.hadoop.fs.Path(dir)); touch(s"$dir/v1")
-    fs.mkdirs(new org.apache.hadoop.fs.Path(Swap.rewriteDir(dir))); touch(s"${Swap.rewriteDir(dir)}/v2")
-    // inject the racing reader-side heal exactly in install's live-missing
-    // window: heal completes the install, install's own rename then fails —
-    // which must be recognized as success, not thrown as a phantom failure
-    Swap.install(fs, dir, () => Swap.heal(fs, dir))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/v2")), "rewrite content is live")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(Swap.rewriteDir(dir))), "rewrite consumed")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(Swap.oldDir(dir))), "aside cleaned up")
-  }
-
   test("committed() never reads empty during concurrent retention swaps") {
     val wh = Warehouse(tmpDir("graft-committed-race"))
     graft.core.groups.ConsumerGroup.commit(spark, wh, "g", "t", Map(0 -> 5L, 1 -> 9L))
