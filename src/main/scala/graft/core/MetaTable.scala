@@ -100,6 +100,8 @@ private[graft] object MetaTable {
             try fs.rename(rewrite, live)
             catch { case _: java.io.IOException => false }
           if (renamed) fs.delete(old, true)
+          else if (!fs.exists(live))
+            throw new IllegalStateException(s"$dir: failed to rename ${Swap.rewriteDir(dir)} in")
         case None if !fs.exists(live) =>
           if (fs.exists(old))
             throw new IllegalStateException(
