@@ -1,8 +1,17 @@
 package graft.core.log
 
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{
+  Ascending, BoundReference, GenericInternalRow, InterpretedOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 import graft.core._
 import graft.core.catalog.{TopicCatalog, Warehouse}
 import graft.core.routing.PartitionRouter
@@ -32,6 +41,18 @@ case class AppendResult(
   *   - The offset→byte index (IndexEntries.java:17-53) becomes a per-FILE
   *     offset-range table; Parquet row-group stats (tight, because each file
   *     is sorted by offset) do the intra-file seeking.
+  *
+  * Two paths route, number and write a batch, chosen by the plan's shape
+  * alone. When the routed projection of the input optimizes to a
+  * `LocalRelation` — the rows are already in driver memory, as a
+  * producer's batch is — the driver path sorts, numbers and writes them
+  * with no Spark job, like the reference broker appending a batch to its
+  * local segment (Log.java:93-103); four jobs of per-job overhead would
+  * otherwise dominate a small batch. Every other frame takes the Spark
+  * path, [[assignOffsets]] plus a partitioned parquet write, so a
+  * distributed frame is never collected. Both paths stage the same
+  * `partition=<p>/` layout through Spark's parquet writer and share one
+  * commit.
   *
   * Readers only see files through the index, and the index row is written
   * after the data: a crashed append leaves orphan files that are never read,
@@ -81,7 +102,9 @@ object LogWriter {
     *
     * The result is exactly the window semantics — dense offsets in `ord`
     * order per partition — with no single-task funnel anywhere. The returned
-    * frame is eagerly numbered (the count pass runs at call time).
+    * frame is eagerly numbered (the count pass runs at call time), and a
+    * record that routes to no partition fails that pass with an
+    * `IllegalArgumentException`.
     *
     * @param df      input records
     * @param explicitPartition explicit-partition column (null when absent)
@@ -125,7 +148,9 @@ object LogWriter {
         var cur = Int.MinValue
         var c = 0L
         it.foreach { r =>
-          val p = r.getInt(pIdx)
+          // a null route (no key, no in-range explicit partition, null
+          // ord) counts as partition -1; `getInt` would read it as 0
+          val p = if (r.isNullAt(pIdx)) -1 else r.getInt(pIdx)
           if (p != cur) { if (c > 0) runs += ((cur, c)); cur = p; c = 0L }
           c += 1
         }
@@ -133,6 +158,7 @@ object LogWriter {
         Iterator((i, runs.toArray))
       }
       .collect().sortBy(_._1).map(_._2)
+    if (counts.exists(_.exists(_._1 < 0))) throw nullRoute(ord.toString)
     val running = scala.collection.mutable.Map.empty[Int, Long]
     bases.foreach { case (p, b) => running(p) = b }
     val starts: Array[Map[Int, Long]] = counts.map { runs =>
@@ -174,6 +200,19 @@ object LogWriter {
     * Input columns: `ts` (long millis), `key` (string, nullable), `value`
     * (string), optional `headers`, optional `explicit_partition` (int), and
     * an ordering column named by `ordCol`.
+    *
+    * The input is projected once to (partition, ord, ts, key, value,
+    * headers). When that projection's optimized plan is a `LocalRelation`
+    * (a `createDataFrame` or `toDF` of driver-side rows), its rows are
+    * routed, sorted by `ord` with Spark's ordering, numbered and written on
+    * the driver with no Spark job ([[writeLocal]]). Any other plan — a
+    * parquet scan, `spark.range`, a join — takes [[assignOffsets]] and a
+    * partitioned Spark write; a plan with a non-local leaf goes there
+    * without being optimized twice. Either way the staged files commit through
+    * the same tail: stray check, rename, index delta. A record that routes
+    * to no partition (no key, no in-range explicit partition and a null
+    * ord) fails the append with an `IllegalArgumentException` before
+    * anything is staged.
     *
     * @param partitions when given, the append declares it only writes these
     *                   partitions and takes ONLY those partitions' locks —
@@ -220,17 +259,14 @@ object LogWriter {
         else lit(null).cast("int")
       val keyCol =
         if (records.columns.contains("key")) col("key") else lit(null).cast("string")
-      val assigned = assignOffsets(
-        records, explicitP, keyCol, col(ordCol), n, bases)
-        .withColumn("ts",
-          if (records.columns.contains("ts")) col("ts").cast("long")
-          else lit(System.currentTimeMillis()))
-        .withColumn("key", keyCol.cast("string"))
-        .withColumn("headers",
-          if (records.columns.contains("headers")) col("headers")
-          else lit(null).cast(Schemas.headers))
-        .select(col("partition"), col("offset"), col("ts"), col("key"),
-          col("value").cast("string"), col("headers"))
+      // the stored columns after (partition, ord) or (partition, offset)
+      val stored = Seq(
+        (if (records.columns.contains("ts")) col("ts").cast("long")
+         else lit(System.currentTimeMillis())).as("ts"),
+        keyCol.cast("string").as("key"),
+        col("value").cast("string").as("value"),
+        (if (records.columns.contains("headers")) col("headers")
+         else lit(null).cast(Schemas.headers)).as("headers"))
 
       val logDir = wh.logDir(topic)
       // Stage into a dot-dir inside the topic dir, then rename the files
@@ -238,34 +274,52 @@ object LogWriter {
       // staging dir — O(files in this batch), not O(files ever written).
       val staging =
         s"$logDir/.staging-${java.util.UUID.randomUUID().toString.take(8)}"
-      // No re-shuffle before the write: assignOffsets left the rows range-
-      // grouped and sorted by (partition, offset), so each task streams its
-      // contiguous offset runs straight into the dynamic-partition writer —
-      // a big single-partition batch writes from MANY tasks in parallel
-      // (disjoint offset ranges per file keep the index exact), where a
-      // `repartition(n, partition)` here would funnel it back into one.
-      assigned
-        .sortWithinPartitions(col("partition"), col("offset"))
-        .write
-        .mode("overwrite")
-        .option("maxRecordsPerFile", conf.maxRecordsPerFile)
-        .option("compression", conf.compression)
-        .partitionBy("partition")
-        .parquet(staging)
+      val routed = records.select(
+        PartitionRouter.route(explicitP, keyCol, col(ordCol), n).as("partition") +:
+          col(ordCol).as("ord") +: stored: _*)
+      // Only a plan whose leaves are all local can optimize to driver-side
+      // rows (an empty result aside, which the Spark path writes the same),
+      // so any other frame — a curation join — skips that optimizer pass.
+      val local: Option[LocalRelation] = Some(routed.queryExecution)
+        .filter(_.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]))
+        .map(_.optimizedPlan).collect { case l: LocalRelation => l }
+      // the driver path knows its files' offset ranges; the Spark path's
+      // come from the footers after the commit
+      val written: Option[Seq[FileStats]] = local match {
+        case Some(l) =>
+          Some(writeLocal(spark, l, ordCol, bases, staging, logDir, conf))
+        case None =>
+          // No re-shuffle before the write: assignOffsets left the rows
+          // range-grouped and sorted by (partition, offset), so each task
+          // streams its contiguous offset runs straight into the dynamic-
+          // partition writer — a big single-partition batch writes from
+          // MANY tasks in parallel (disjoint offset ranges per file keep the
+          // index exact), where a `repartition(n, partition)` here would
+          // funnel it back into one.
+          assignOffsets(records, explicitP, keyCol, col(ordCol), n, bases)
+            .select(col("partition") +: col("offset") +: stored: _*)
+            .sortWithinPartitions(col("partition"), col("offset"))
+            .write
+            .mode("overwrite")
+            .option("maxRecordsPerFile", conf.maxRecordsPerFile)
+            .option("compression", conf.compression)
+            .partitionBy("partition")
+            .parquet(staging)
+          None
+      }
       // a declared-partition append must not have routed anything outside
       // its locked set; reject BEFORE the staged files become visible
       partitions.foreach { _ =>
         val sp = new Path(staging)
-        val sfs = Fs(sp)
         val lockedSet = locked.toSet
-        // non-numeric dirs (e.g. a null route's __HIVE_DEFAULT_PARTITION__)
-        // are strays by definition — never let a parse failure skip cleanup
-        val stray = sfs.listStatus(sp).map(_.getPath.getName)
+        // non-numeric dirs are strays by definition — never let a parse
+        // failure skip cleanup
+        val stray = Fs.list(sp).map(_.getPath.getName)
           .filter(_.startsWith("partition="))
           .filterNot(n => scala.util.Try(
             n.substring("partition=".length).toInt).toOption.exists(lockedSet))
         if (stray.nonEmpty) {
-          sfs.delete(sp, true)
+          Fs(sp).delete(sp, true)
           throw new IllegalArgumentException(
             s"records routed to ${stray.sorted.mkString(",")} outside " +
               s"the declared partition set ${locked.mkString(",")} — nothing was committed")
@@ -273,16 +327,11 @@ object LogWriter {
       }
       val newFiles = commitStaged(staging, logDir)
 
-      // Index the new files from their parquet FOOTERS (offset column
-      // min/max + row count) — no Spark job, no data re-read; files are
-      // written offset-sorted so the footer stats are exact. One footer
+      // Index the Spark path's files from their parquet FOOTERS (offset
+      // column min/max + row count) — no Spark job, no data re-read; files
+      // are written offset-sorted so the footer stats are exact. One footer
       // read per new file, parallelized on the driver.
-      val stats: Seq[FileStats] = {
-        import scala.jdk.CollectionConverters._
-        java.util.Arrays.stream(newFiles.toArray).parallel()
-          .map[FileStats](f => readFooterStats(f))
-          .collect(java.util.stream.Collectors.toList[FileStats]).asScala.toSeq
-      }
+      val stats = written.getOrElse(inParallel(newFiles)(readFooterStats))
       val ranges: Map[Int, (Long, Long)] = if (stats.isEmpty) Map.empty else {
         LogIndex.appendDelta(wh, topic, stats.map(s =>
           LogIndex.Entry(s.partition, s.file, s.baseOffset, s.endOffset, s.count, batchId)))
@@ -297,6 +346,82 @@ object LogWriter {
     result
   }
 
+  /** The driver path of [[append]]: `local` holds the routed projection's
+    * rows (partition, ord, ts, key, value, headers), already evaluated by
+    * the optimizer, so nothing here runs a Spark job. Each partition's rows
+    * are sorted by `ord` with Spark's ordering for its type (ascending,
+    * nulls first, as `sortWithinPartitions`), numbered from `bases`, and
+    * cut into files of at most `maxRecordsPerFile` rows. The files are
+    * written in parallel through Spark's own parquet writer
+    * (`ParquetFileFormat.prepareWrite`), so they carry the Spark path's
+    * file layout, into `staging/partition=<p>/`. Returns each file's index
+    * stats under its committed path, so no footer is read back. */
+  private def writeLocal(
+      spark: SparkSession,
+      local: LocalRelation,
+      ordCol: String,
+      bases: Map[Int, Long],
+      staging: String,
+      logDir: String,
+      conf: ProducerConfig): Seq[FileStats] = {
+    val rows = local.data
+    if (rows.exists(_.isNullAt(0))) throw nullRoute(ordCol)
+    val fields = local.schema.fields
+    val byOrd = new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(1, fields(1).dataType, nullable = true), Ascending)))
+    val perFile =
+      if (conf.maxRecordsPerFile > 0) math.min(conf.maxRecordsPerFile, Int.MaxValue).toInt
+      else Int.MaxValue
+    // (partition, first offset, rows) per file
+    val chunks: Seq[(Int, Long, Seq[InternalRow])] =
+      rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).flatMap { case (p, ps) =>
+        val base = bases.getOrElse(p, 0L)
+        ps.sorted(byOrd).grouped(perFile).zipWithIndex.map { case (c, i) =>
+          (p, base + i.toLong * perFile, c)
+        }
+      }
+    // the stored columns: offset, then the projection's ts, key, value, headers
+    val dataSchema = StructType(StructField("offset", LongType, nullable = false) +:
+      fields.drop(2).toSeq)
+    val types = dataSchema.fields.map(_.dataType)
+    // Job copies the shared conf; prepareWrite sets the parquet keys on the copy
+    val job = Job.getInstance(Fs.conf)
+    val factory = new ParquetFileFormat().prepareWrite(
+      spark, job, Map("compression" -> conf.compression), dataSchema)
+    val uuid = java.util.UUID.randomUUID()
+    inParallel(chunks.zipWithIndex) { case ((p, first, rs), i) =>
+      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+        new TaskAttemptID("graft", 0, TaskType.MAP, i, 0))
+      val name = f"part-$i%05d-$uuid.c000${factory.getFileExtension(ctx)}"
+      val writer = factory.newInstance(s"$staging/partition=$p/$name", dataSchema, ctx)
+      try {
+        val out = new GenericInternalRow(types.length)
+        var offset = first
+        rs.foreach { r =>
+          out.update(0, offset)
+          var c = 1
+          while (c < types.length) {
+            out.update(c, if (r.isNullAt(c + 1)) null else r.get(c + 1, types(c)))
+            c += 1
+          }
+          writer.write(out)
+          offset += 1
+        }
+      } finally writer.close()
+      FileStats(p, new Path(s"$logDir/partition=$p/$name").toString,
+        first, first + rs.size - 1, rs.size.toLong)
+    }
+  }
+
+  private def nullRoute(ord: String) = new IllegalArgumentException(
+    s"a record with no key, no in-range explicit_partition and a null `$ord` " +
+      "routes to no partition — nothing was staged")
+
+  /** `f` over `xs` on the common fork-join pool, results in input order. */
+  private def inParallel[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+    xs.asJava.parallelStream().map[B](a => f(a))
+      .collect(java.util.stream.Collectors.toList[B]).asScala.toSeq
+
   private[log] case class FileStats(
       partition: Int, file: String, baseOffset: Long, endOffset: Long, count: Long)
 
@@ -306,7 +431,6 @@ object LogWriter {
     * `partition=<p>` directory. */
   private[log] def readFooterStats(file: String): FileStats = {
     import org.apache.parquet.hadoop.ParquetFileReader
-    import scala.jdk.CollectionConverters._
     val path = new Path(file)
     val partition = path.getParent.getName match {
       case s if s.startsWith("partition=") => s.substring("partition=".length).toInt

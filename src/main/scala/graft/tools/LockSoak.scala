@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 import graft.Sessions
 import graft.core.catalog.{TopicCatalog, Warehouse}
@@ -17,7 +18,9 @@ import graft.core.log.{LogReader, LogWriter}
   *     `explicit_partition` — these appends may run fully in parallel),
   *   - OVERLAPPING free-routed appends (every worker locks every
   *     partition — serialized by the per-partition locks, the reference's
-  *     `PartitionWriteManager` semantics lifted across JVMs).
+  *     `PartitionWriteManager` semantics lifted across JVMs); every other
+  *     overlapping round hands its rows over as a local frame, so both
+  *     append paths (Spark and driver) run under contention.
   *
   * Two READER JVMs poll the topic THROUGHOUT (unlocked, as readers are),
   * one of them SIGKILLed while appends are still live. Every successful
@@ -119,8 +122,12 @@ object LockSoak {
           "ord", partitions = Some(Seq(2 * wid, 2 * wid + 1)))
       else
         // overlapping leg: free hash routing — every partition locked,
-        // the full-contention shape
-        LogWriter.append(spark, wh, Topic, df, "ord")
+        // the full-contention shape. Every other time the same rows come
+        // as a local frame, so the driver append path runs under
+        // contention too.
+        LogWriter.append(spark, wh, Topic,
+          if (r % 4 == 3) spark.createDataFrame(df.collect().toSeq.asJava, df.schema) else df,
+          "ord")
       ()
     }
     spark.stop()
@@ -146,7 +153,6 @@ object LockSoak {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar",
     ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    import scala.jdk.CollectionConverters._
     // clear stale reader/stop state from a reused dir
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(stateDir, StopFile))

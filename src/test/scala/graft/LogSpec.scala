@@ -128,6 +128,55 @@ class LogSpec extends SparkSpec {
     spread.values.foreach(v => assert(v === 25L))
   }
 
+  test("a keyless record with a null ord fails before anything is staged, on both paths") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(Seq(StructField("id", LongType), StructField("ts", LongType),
+      StructField("key", StringType), StructField("value", StringType)))
+    val rows = Seq(Row(1L, 1L, "k", "a"), Row(null, 2L, null, "b"), Row(3L, 3L, null, "c"))
+    Seq("driver" -> spark.createDataFrame(rows.asJava, schema),
+      "spark" -> spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema))
+      .foreach { case (path, df) =>
+        val wh = freshWarehouse()
+        TopicCatalog.createTopic(spark, wh, "t", 2)
+        val e = intercept[IllegalArgumentException](LogWriter.append(spark, wh, "t", df, "id"))
+        assert(e.getMessage.contains("null `id`"), s"$path path: ${e.getMessage}")
+        val staged = Option(new java.io.File(wh.logDir("t")).list()).toSeq.flatten
+          .filter(_.startsWith("partition="))
+        assert(staged.isEmpty, s"$path path left $staged")
+        assert(LogIndex.entries(spark, wh, "t").isEmpty)
+      }
+  }
+
+  test("a local batch appends with no Spark job; parquet and range frames take the Spark path") {
+    def rows(wh: Warehouse, topic: String) =
+      LogReader.scan(spark, wh, topic)
+        .select("partition", "offset", "ts", "key", "value").as[(Int, Long, Long, String, String)]
+        .collect().sorted.toSeq
+    val wh = freshWarehouse()
+    val local = someRecords(10000)
+    TopicCatalog.createTopic(spark, wh, "local", 4)
+    val (res, stats) = JobStats.measure(spark.sparkContext)(
+      LogWriter.append(spark, wh, "local", local, "id"))
+    assert(res.records === 10000)
+    assert(stats.jobs === 0, s"the local append ran ${stats.jobs} jobs")
+    val expected = rows(wh, "local")
+
+    val dir = tmpDir("graft-append-input")
+    local.write.mode("overwrite").parquet(dir)
+    val range = spark.range(0, 10000).select(col("id"), (lit(1700000000000L) + col("id")).as("ts"),
+      concat(lit("k"), (col("id") % 7).cast("string")).as("key"),
+      concat(lit("v"), col("id").cast("string")).as("value"))
+    Seq("parquet" -> spark.read.parquet(dir), "range" -> range).foreach { case (topic, df) =>
+      TopicCatalog.createTopic(spark, wh, topic, 4)
+      val (r, s) = JobStats.measure(spark.sparkContext)(LogWriter.append(spark, wh, topic, df, "id"))
+      assert(s.jobs > 0, s"the $topic frame ran no Spark job")
+      assert(r === res.copy(topic = topic))
+      assert(rows(wh, topic) === expected, s"$topic rows differ from the driver path's")
+    }
+  }
+
   test("driver contract: entry() returns rows on sf0.001; every query has distinct column names") {
     assert(SparkEntry.entry(spark).count() > 0)
     // driver's compare sorts columns by name — duplicate names would break it
