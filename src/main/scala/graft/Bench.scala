@@ -98,15 +98,18 @@ object Bench {
 
   /** Stable emission order for the StageTimers action split (both curate
     * variants; a variant only emits the keys its config exercises —
-    * span_cut/srp_embed appear when the stage is wired). Round 19:
-    * `sink_mat` (one persisted-materialization count) replaces the
-    * removed `sink_surv` instrumentation count and the driver-side
-    * `sink_collect` — those keys stay listed so an older StageTimers
-    * capture still emits them, but the current sink never records them. */
+    * span_cut/srp_embed appear when the stage is wired). */
   private val StageKeys = Seq("srp_embed", "span_cut", "front_plan",
     "lsh_sign_shards", "lsh_candgen", "lsh_cand_shards", "lsh_verdict",
-    "lsh_selfgen", "lsh_append", "lsh_survgen", "lsh_survivors",
-    "sink_surv", "sink_collect", "sink_mat")
+    "lsh_selfgen", "lsh_append", "lsh_survgen", "lsh_survivors", "sink_mat")
+
+  /** `"k":sec` pairs of a StageTimers capture: [[StageKeys]] first, in
+    * their order, then any other captured phase, sorted — no phase a
+    * capture recorded is dropped. */
+  private def stageSplit(stages: Map[String, Double]): String =
+    (StageKeys.filter(stages.contains) ++
+      (stages.keySet -- StageKeys).toSeq.sorted)
+      .map(k => f""""$k":${stages(k)}%.3f""").mkString(",")
 
   /** Queries whose band is multiple seconds wide — their retry guard
     * fires at 1.5x band (see the headline loop comment). */
@@ -398,9 +401,7 @@ object Bench {
       val (w1, s1) = capturedSplit()
       val (w2, s2) = capturedSplit()
       val stages = if (w1 <= w2) s1 else s2
-      val actionSplit = StageKeys
-        .flatMap(k => stages.get(k).map(v => f""""$k":$v%.3f"""))
-        .mkString(",")
+      val actionSplit = stageSplit(stages)
       f""""curate_stages":{"front":$tFront%.3f,"probe":$tProbe%.3f""" +
         (if (actionSplit.nonEmpty) s",$actionSplit}" else "}")
     }
@@ -445,13 +446,11 @@ object Bench {
   }
 
   /** `"curate_full_stages":{...}` fragment: best solo wall + the captured
-    * StageTimers action split in [[StageKeys]] order (round-18 drift
-    * attribution for the `_full` composite). */
+    * StageTimers action split ([[stageSplit]]; round-18 drift attribution
+    * for the `_full` composite). */
   private[graft] def fullStagesJson(
       wall: Double, stages: Map[String, Double]): String = {
-    val split = StageKeys
-      .flatMap(k => stages.get(k).map(v => f""""$k":$v%.3f"""))
-      .mkString(",")
+    val split = stageSplit(stages)
     f""""curate_full_stages":{"wall":$wall%.3f""" +
       (if (split.nonEmpty) s",$split}" else "}")
   }

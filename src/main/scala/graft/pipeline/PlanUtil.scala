@@ -80,13 +80,17 @@ object PlanUtil {
   /** The BATCH-LOCAL planning session for `spark`: a clone (shared
     * SparkContext, catalog and block-manager cache; ISOLATED SQL conf —
     * the same primitive Structured Streaming uses to plan micro-batches)
-    * with adaptive execution OFF and `defaultParallelism / 4` (min 8)
-    * shuffle partitions. One clone per parent session, created lazily,
-    * memoized WEAKLY (rebuilt transparently if the GC claims it between
-    * calls), and re-synced from the parent's explicitly-set SQL conf on
-    * every call — a parent-side `session.timeZone`/ANSI change reaches
-    * the very next batch plan; only the three planner overrides (AQE,
-    * shuffle partitions, partition-discovery threshold) stay pinned.
+    * with adaptive execution OFF, `defaultParallelism / 4` (min 8)
+    * shuffle partitions and INTERPRETED evaluation (whole-stage codegen
+    * off, expression factories in `NO_CODEGEN` mode, so dynamic partition
+    * pruning off too). One clone per parent
+    * session, created lazily, memoized WEAKLY (rebuilt transparently if
+    * the GC claims it between calls), and re-synced from the parent's
+    * explicitly-set SQL conf on every call — a parent-side
+    * `session.timeZone`/ANSI change reaches the very next batch plan; only
+    * the six planner overrides (AQE, shuffle partitions,
+    * partition-discovery threshold, whole-stage codegen, factory mode,
+    * dynamic partition pruning) stay pinned.
     *
     * The incremental index chains execute ~6-10 actions per micro-batch
     * whose shuffles are BATCH-scale (band keys, candidate ids, verdict
@@ -98,8 +102,34 @@ object PlanUtil {
     * 15-25% faster across interleaved A/B passes. Corpus-scale work is
     * UNAFFECTED: one-shot probes/builds and every non-index query keep
     * AQE (skew splitting, coalescing) — this session plans only the
-    * per-batch ingest chain, whose volumes are bounded by the crawl
-    * batch, not the corpus, at any corpus size.
+    * per-batch ingest chain, whose SHUFFLES are bounded by the crawl
+    * batch. Its SCANS are not: the probe side reads every shard the
+    * batch's keys hit, and a 252-document `curate_stream` batch hits all
+    * 64, so each batch scans the whole span gram table (164,556 rows)
+    * and the LSH bucket table twice (64,432 rows each; counts from the
+    * Spark event log).
+    *
+    * Why interpreted: Spark keys its JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, a static conf, 100 entries) by
+    * (context class loader, source). A `curate_stream` batch planned with
+    * codegen needs ~190 entries — each of its 64 whole-stage classes
+    * compiles once on the driver and once under the executor's
+    * per-session class loader, plus 57 projections — so the cache evicts
+    * the whole working set every batch (185 of batch 2's 193 classes were
+    * byte-identical to batch 1's): 194-195 compiles and 2.6-3.0 s of
+    * janino per ~9 s batch (4-core VM). Planned interpreted, a steady batch
+    * compiles 1 class, and `curate_stream` `latency_p50_ms` fell
+    * 7.6 → 5.1 s (median of 10 alternating pairs, lower in all 10) with
+    * jobs and tasks per batch unchanged. The hot kernels lose nothing: every
+    * custom expression's `doGenCode` calls the same Scala function its
+    * `eval` does (minhash, shingles, fingerprint, jaccard, span cut).
+    * Whole-stage codegen off ALONE does not pay (157 compiles per batch
+    * of per-operator projections); a larger cache is the host's static
+    * conf, which a library cannot set on a session it did not build.
+    * `factoryMode` is an internal Spark conf, so `CodegenBudgetSpec` fails
+    * loudly if a Spark upgrade stops honoring it. The parent session's
+    * plans (the raw scan, the curated append) keep whole-stage codegen,
+    * and now fit the cache.
     *
     * Why a clone and not a conf toggle (the round-15 shape): a toggle on
     * the SHARED session changes how every concurrently-planned query
@@ -125,7 +155,7 @@ object PlanUtil {
       // otherwise silently never reach batch planning — a divergence the
       // old shared-session toggle never had. Diffing explicitly-set
       // entries is O(set conf keys) per ingest batch, noise next to the
-      // batch's jobs. The three planner overrides stay pinned.
+      // batch's jobs. The planner overrides stay pinned.
       // Static SQL confs are skipped outright: getAll surfaces them, they
       // can never legally diverge between parent and clone (one shared
       // SharedState), and RuntimeConfig.set on one THROWS — an apparent
@@ -159,12 +189,27 @@ object PlanUtil {
       // (thousands of partition dirs should list in parallel).
       clone.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
         "512")
+      // interpreted evaluation: batch-scale plans cost less to interpret
+      // than to recompile every batch (see the scaladoc)
+      clone.conf.set("spark.sql.codegen.wholeStage", "false")
+      clone.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      // ...which dynamic partition pruning does not survive: a DPP filter
+      // that stays a row filter (the unpartitioned delta tail under a
+      // union) keeps its subquery result on the driver, where only
+      // generated code reads it, so interpreted tasks fail "has not
+      // finished". The index reads prune their directories statically
+      // (IndexMaintenance.readWithDelta), so DPP only re-filtered rows
+      // the join drops anyway.
+      clone.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled",
+        "false")
       clone
     }
 
   private val plannerOverrides =
     Set("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
-      "spark.sql.sources.parallelPartitionDiscovery.threshold")
+      "spark.sql.sources.parallelPartitionDiscovery.threshold",
+      "spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode",
+      "spark.sql.optimizer.dynamicPartitionPruning.enabled")
 
   /** Re-root `df`'s analyzed plan onto `session` (no-op when already
     * there), so the ingest chains can carry their caller's batch frame

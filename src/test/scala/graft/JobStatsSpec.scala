@@ -4,6 +4,8 @@ import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
+import org.apache.spark.sql.functions.{col, lit}
+
 import graft.pipeline.StageTimers
 
 class JobStatsSpec extends SparkSpec {
@@ -62,5 +64,16 @@ class JobStatsSpec extends SparkSpec {
     }
     assert(inner == "on")
     assert(sc.getLocalProperty(StageTimers.PhaseProp) == null)
+  }
+
+  test("measure counts generated-class compiles: a fresh projection compiles, its repeat none") {
+    // a literal no earlier plan carries: primitive literals are inlined,
+    // so the generated source is new to the JVM-wide codegen cache
+    val k = System.nanoTime()
+    def run() = spark.range(4).select(col("id") * lit(k) + lit(1L)).collect()
+    val (_, first) = JobStats.measure(sc)(run())
+    assert(first.compiles > 0, first)
+    val (_, again) = JobStats.measure(sc)(run())
+    assert(again.compiles == 0, again)
   }
 }

@@ -21,6 +21,18 @@ class PlanUtilSpec extends SparkSpec {
       assert(c2.conf.get("spark.sql.session.timeZone") == "America/New_York")
       assert(c2.conf.get("spark.sql.adaptive.enabled") == "false",
         "planner override must survive the re-sync")
+      // the interpreted-evaluation overrides survive a parent that sets
+      // the same keys explicitly
+      spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+      try {
+        val c3 = PlanUtil.batchLocalSession(spark)
+        assert(c3.conf.get("spark.sql.codegen.wholeStage") == "false")
+        assert(c3.conf.get("spark.sql.codegen.factoryMode") == "NO_CODEGEN")
+      } finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
       // parent-side UNSET propagates too
       spark.conf.set("graft.test.sentinel", "on")
       assert(PlanUtil.batchLocalSession(spark)
@@ -70,9 +82,20 @@ class PlanUtilSpec extends SparkSpec {
     // list driver-side, not via a distributed listing job per batch
     assert(again.conf.get(
       "spark.sql.sources.parallelPartitionDiscovery.threshold") == "512")
+    // the interpreted-evaluation overrides: batch-scale plans are not
+    // compiled (Spark's 100-entry codegen cache cannot hold a batch)
+    assert(again.conf.get("spark.sql.codegen.wholeStage") == "false")
+    assert(again.conf.get("spark.sql.codegen.factoryMode") == "NO_CODEGEN")
+    // interpreted tasks cannot read a DPP row filter's driver-side result
+    assert(again.conf.get(
+      "spark.sql.optimizer.dynamicPartitionPruning.enabled") == "false")
     // ...and it must NOT leak to the parent session: corpus-scale reads
     // keep the stock threshold (parallel listing past 32 paths)
     assert(spark.conf.get(
       "spark.sql.sources.parallelPartitionDiscovery.threshold") != "512")
+    assert(spark.conf.get("spark.sql.codegen.wholeStage") == "true")
+    assert(spark.conf.get("spark.sql.codegen.factoryMode") == "FALLBACK")
+    assert(spark.conf.get(
+      "spark.sql.optimizer.dynamicPartitionPruning.enabled") == "true")
   }
 }
