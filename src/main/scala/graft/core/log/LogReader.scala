@@ -106,23 +106,34 @@ object LogReader {
     else segmentFiles(spark, wh, topic, files.toIndexedSeq)
   }
 
-  /** Incremental read: every record with `offset >= from(partition)` —
-    * the batch form of a consumer-group member catching up. */
-  def scanFrom(
+  /** Exactly the records in `[start, end)` of each partition in `ranges`
+    * — a streaming consumer's batch ([[graft.streaming.TopicSource]]).
+    * One job over just the intersecting committed files, through
+    * [[segmentFiles]] like every other segment read, so a LAGGING reader
+    * whose range still covers expired files gets the retained rows
+    * instead of a mid-batch crash — Kafka's out-of-range-falls-to-earliest
+    * shape; the skipped records ARE the expired ones. */
+  def scanRange(
       spark: SparkSession,
       wh: Warehouse,
       topic: String,
-      from: Map[Int, Long]): DataFrame = retryOnceOnVanished {
+      ranges: Map[Int, (Long, Long)]): DataFrame = retryOnceOnVanished {
     val files = LogIndex.entries(spark, wh, topic)
-      .filter(e => e.isData && e.endOffset >= from.getOrElse(e.partition, 0L))
+      .filter { e =>
+        ranges.get(e.partition).exists { case (s, end) =>
+          e.isData && e.endOffset >= s && e.baseOffset < end
+        }
+      }
       .map(_.file)
     if (files.isEmpty) emptyLog(spark, wh, topic)
     else {
-      val lower = from.foldLeft(lit(0L)) { case (acc, (p, o)) =>
-        when(col("partition") === p, lit(o)).otherwise(acc)
-      }
+      // the bounds are map literals, which generated code holds by
+      // reference: every batch of a stream then compiles the same class
+      // (inlined per-batch offsets would compile a new one each batch)
+      def bound(f: ((Long, Long)) => Long) =
+        typedLit(ranges.map { case (p, r) => p -> f(r) }).apply(col("partition"))
       segmentFiles(spark, wh, topic, files.toIndexedSeq)
-        .filter(col("offset") >= lower)
+        .filter(col("offset") >= bound(_._1) && col("offset") < bound(_._2))
     }
   }
 

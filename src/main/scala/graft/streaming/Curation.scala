@@ -89,9 +89,10 @@ final case class CurationConfig(
   * `CurateCrashSpec` via [[graft.tools.CurateCrash]]) holds because each
   * stage is replay-idempotent for a pinned input:
   *
-  *   - [[StreamIngest.consume]] pins each micro-batch's offset range in an
-  *     intent file BEFORE the body runs — a replayed batch re-reads the
-  *     identical records even though the raw topic has grown since;
+  *   - [[StreamIngest.consume]] pins each micro-batch's offset range in
+  *     the checkpoint's offset log BEFORE the body runs — a replayed batch
+  *     re-reads the identical records even though the raw topic has grown
+  *     since;
   *   - the gopher filter and chunker are pure per-row functions of those
   *     records;
   *   - [[LshIndex.ingestBatch]] re-derives the IDENTICAL survivor set when

@@ -8,17 +8,18 @@ import graft.Sessions
 import graft.core.catalog.Warehouse
 import graft.streaming.StreamIngest
 
-/** Cross-JVM crash/replay harness for the streaming consumer's intent-file
-  * protocol (see [[graft.streaming.StreamIngest.consume]]): each run is ONE
+/** Cross-JVM crash/replay harness for the streaming consumer's offset-log
+  * replay (see [[graft.streaming.StreamIngest.consume]]): each run is ONE
   * process in the exactly-once story, so a spec can prove the replay
   * guarantee across a REAL process boundary — no in-memory state survives.
   *
   * {{{ runMain graft.tools.ConsumeCrash <crash|resume> <whDir> <ckptDir> <outFile> }}}
   *
   *   - `crash`: drain once, but the sink RECORDS what it was delivered and
-  *     then THROWS — the query dies after the batch's intent file is
-  *     persisted and the records were handed over, but BEFORE the engine
-  *     commits the batch. Exits nonzero (the injected failure).
+  *     then THROWS — the query dies after the batch's end offset is in
+  *     the offset log and the records were handed over, but BEFORE the
+  *     engine commits the batch. Exits 0 when the injected failure
+  *     surfaced.
   *   - `resume`: drain normally from the same checkpoint. The engine replays
   *     the crashed batchId first; the sink appends every delivered batch to
   *     `outFile` so the spec can compare ranges line by line.

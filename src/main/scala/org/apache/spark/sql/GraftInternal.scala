@@ -41,6 +41,21 @@ object GraftInternal {
       ds.sparkSession, logical)
   }
 
+  /** `df` flagged as a streaming frame, for a V1 streaming source's
+    * `getBatch`: its file relations and local relations are copied with
+    * `isStreaming = true` (what `FileStreamSource` builds), so the batch
+    * still plans as a parquet scan with pruning and pushdown. */
+  def streamingFrame(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+      ds.logicalPlan.transform {
+        case r: LogicalRelation => r.copy(isStreaming = true)
+        case r: LocalRelation => r.copy(isStreaming = true)
+      })
+  }
+
   /** A full state clone of `spark` — shared SparkContext, SharedState
     * (catalog, CacheManager, block manager) and a COPY of the session
     * state (conf, registered functions, temp views), so conf set on the
