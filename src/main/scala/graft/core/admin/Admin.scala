@@ -64,19 +64,16 @@ object Admin {
   }
 
   /** Per-partition summary of a topic's committed log: file count, record
-    * count, and offset range. Partitions whose files were all expired report
-    * 0 files/records with the preserved high-watermark range. Answered from
-    * the driver-side index cache — no Spark job to compute. */
+    * count, and offset range ([[LogIndex.bounds]]). Partitions whose files
+    * were all expired report 0 files/records with the preserved
+    * high-watermark range. Driver-side index cache, no Spark job. */
   def describeTopic(spark: SparkSession, wh: Warehouse, topic: String): DataFrame = {
     TopicCatalog.topicInfo(spark, wh, topic) // throws UnknownTopicException
-    val rows = LogIndex.entries(spark, wh, topic)
-      .groupBy(_.partition).toSeq
-      .map { case (p, es) =>
-        val data = es.filter(_.isData)
-        Row(p, data.length.toLong, data.map(_.count).sum,
-          if (data.isEmpty) es.map(_.endOffset).max + 1 else data.map(_.baseOffset).min,
-          es.map(_.endOffset).max)
-      }
+    val entries = LogIndex.entries(spark, wh, topic)
+    val rows = LogIndex.bounds(entries).toSeq.map { case (p, b) =>
+      val data = entries.filter(e => e.isData && e.partition == p)
+      Row(p, data.length.toLong, data.map(_.count).sum, b.first, b.next - 1)
+    }
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), topicSchema)
   }
 
@@ -84,42 +81,37 @@ object Admin {
     * (rises as retention expires whole files; a fully-expired partition's
     * beginning equals its end — nothing readable, watermark preserved).
     * Driver-side index cache, no Spark job. */
-  def beginningOffsets(spark: SparkSession, wh: Warehouse, topic: String): Map[Int, Long] = {
-    val n = TopicCatalog.topicInfo(spark, wh, topic).numPartitions
-    val fromIndex = LogIndex.entries(spark, wh, topic)
-      .groupBy(_.partition)
-      .map { case (p, es) =>
-        val data = es.filter(_.isData)
-        p -> (if (data.isEmpty) es.map(_.endOffset).max + 1 else data.map(_.baseOffset).min)
-      }
-    // Kafka returns an entry for EVERY partition asked about — a partition
-    // never appended to begins (and ends) at 0, it does not vanish
-    (0 until n).map(p => p -> fromIndex.getOrElse(p, 0L)).toMap
-  }
+  def beginningOffsets(spark: SparkSession, wh: Warehouse, topic: String): Map[Int, Long] =
+    allBounds(spark, wh, topic).map { case (p, b) => p -> b.first }
 
   /** Kafka's `endOffsets`: the next offset to be assigned per partition
     * (0 for never-appended partitions). Driver-side index cache, no Spark
     * job. */
-  def endOffsets(spark: SparkSession, wh: Warehouse, topic: String): Map[Int, Long] = {
+  def endOffsets(spark: SparkSession, wh: Warehouse, topic: String): Map[Int, Long] =
+    allBounds(spark, wh, topic).map { case (p, b) => p -> b.next }
+
+  /** Bounds for EVERY partition, as Kafka answers for every partition asked
+    * about: a never-appended one begins (and ends) at 0, it does not vanish. */
+  private def allBounds(spark: SparkSession, wh: Warehouse, topic: String) = {
     val n = TopicCatalog.topicInfo(spark, wh, topic).numPartitions
-    val fromIndex = LogIndex.nextOffsets(spark, wh, topic)
-    (0 until n).map(p => p -> fromIndex.getOrElse(p, 0L)).toMap
+    val bounds = LogIndex.bounds(LogIndex.entries(spark, wh, topic))
+    (0 until n).map(p => p -> bounds.getOrElse(p, LogIndex.Bounds(0L, 0L))).toMap
   }
 
   /** Consumer lag: log-end minus committed next-read offset, per partition —
     * the ops metric every consumer-group dashboard plots. A group that never
-    * committed reads from each partition's BEGINNING, so its lag is
-    * end − beginning (not end − 0: offsets below the retention floor are
-    * unreadable and cannot be owed). */
+    * committed polls from each partition's BEGINNING ([[LogIndex.fetchRanges]]),
+    * so its lag is end − beginning: offsets below the retention floor are
+    * unreadable and cannot be owed. A commit that retention overtook still
+    * counts them (Kafka's end − committed); its next poll skips them. */
   def consumerLag(
       spark: SparkSession,
       wh: Warehouse,
       groupId: String,
       topic: String): Map[Int, Long] = {
     val committed = graft.core.groups.ConsumerGroup.committed(spark, wh, groupId, topic)
-    val begin = beginningOffsets(spark, wh, topic)
-    endOffsets(spark, wh, topic).map { case (p, end) =>
-      p -> math.max(0L, end - committed.getOrElse(p, begin.getOrElse(p, 0L)))
+    allBounds(spark, wh, topic).map { case (p, b) =>
+      p -> math.max(0L, b.next - committed.getOrElse(p, b.first))
     }
   }
 

@@ -179,8 +179,9 @@ object ConsumerGroup {
     }
   }
 
-  /** Poll the next `max` records of each assigned partition past the last
-    * commit; returns (records, nextOffsets-to-commit). */
+  /** Poll the next `max` records of each assigned partition from its
+    * position ([[LogIndex.fetchRanges]]); returns (records ordered by
+    * partition and offset, nextOffsets-to-commit). */
   def poll(
       spark: SparkSession,
       wh: Warehouse,
@@ -201,42 +202,30 @@ object ConsumerGroup {
       topic: String,
       max: Long,
       from: Map[Int, Long]): (DataFrame, Map[Int, Long]) = {
-    val parts = membership.assignment.getOrElse(topic, Seq.empty)
-    // ONE index snapshot prunes the frames AND computes the next offsets:
-    // an append landing between two reads would otherwise advance `next`
-    // past records the frame never held. A vanished-file retry re-reads
-    // the snapshot for both.
+    val parts = membership.assignment.getOrElse(topic, Seq.empty).toSet
+    // ONE index snapshot ranges the read AND gives the next offsets: an
+    // append landing between two reads would otherwise advance `next` past
+    // records the frame never held. A vanished-file retry re-reads the
+    // snapshot for both.
     LogReader.retryOnceOnVanished {
       val entries = LogIndex.entries(spark, wh, topic)
-      val frames = parts.map { p =>
-        LogReader.pollIn(spark, wh, topic, entries, p, from.getOrElse(p, 0L), max)
-          .withColumn("partition", lit(p))
-      }
-      val all =
-        if (frames.isEmpty)
-          spark.createDataFrame(java.util.List.of[Row](), graft.core.Schemas.record)
-        else frames.reduce(_ unionByName _)
-      // next offsets come from the snapshot, not a second Spark job over
-      // the polled frames: offsets are dense per partition, so the highest
-      // polled offset is min(log end, from + max) whenever the poll window
-      // intersects the committed range.
-      val perPart = entries.filter(_.isData).groupBy(_.partition)
-      val next = parts.flatMap { p =>
-        val start = from.getOrElse(p, 0L)
-        perPart.get(p).flatMap { es =>
-          val lo = es.map(_.baseOffset).min
-          val hi = es.map(_.endOffset).max
-          if (hi >= start && lo < start + max)
-            Some(p -> (math.min(hi, start + max - 1) + 1))
-          else None
-        }
-      }.toMap
+      val ranges = fetchRanges(entries, parts, from, max)
+      val records = LogReader.sortSlice(LogReader.scanRange(spark, wh, topic, entries, ranges),
+        ranges.values.map { case (s, e) => e - s }.sum, "partition", "offset")
       // only the member's own partitions: `from` is the whole group's
       // committed map, and committing a peer's entry from it would rewind
       // that peer to this snapshot
-      (all, from.filter { case (p, _) => parts.contains(p) } ++ next)
+      (records, from.filter { case (p, _) => parts(p) } ++ ranges.map { case (p, r) => p -> r._2 })
     }
   }
+
+  /** The fetch ranges of a member's partitions over one index snapshot. */
+  private def fetchRanges(
+      entries: Array[LogIndex.Entry],
+      parts: Set[Int],
+      from: Map[Int, Long],
+      max: Long): Map[Int, (Long, Long)] =
+    LogIndex.fetchRanges(LogIndex.bounds(entries).filter { case (p, _) => parts(p) }, from, max)
 
   /** Poll every topic of the member's assignment in one call. The reference
     * installs a full `Map[topic -> partitions]` subscription
@@ -280,14 +269,10 @@ object ConsumerGroup {
       timeout: java.time.Duration,
       probeIntervalMs: Long = 50): (DataFrame, Map[Int, Long]) = {
     val from = committed(spark, wh, groupId, topic)
-    val parts = membership.assignment.getOrElse(topic, Seq.empty)
-    def available(): Boolean = {
-      val es = LogIndex.entries(spark, wh, topic)
-      parts.exists { p =>
-        val start = from.getOrElse(p, 0L)
-        es.exists(e => e.isData && e.partition == p && e.endOffset >= start)
-      }
-    }
+    val parts = membership.assignment.getOrElse(topic, Seq.empty).toSet
+    def available(): Boolean =
+      fetchRanges(LogIndex.entries(spark, wh, topic), parts, from, 1L)
+        .exists { case (_, (s, e)) => s < e }
     val deadline = System.nanoTime() + timeout.toNanos
     while (!available() && System.nanoTime() < deadline)
       Thread.sleep(math.min(probeIntervalMs,

@@ -82,15 +82,39 @@ object LogIndex {
       e.batchId.contains(batchId) && partitions.forall(_.contains(e.partition))
     }
 
-  /** Next offset to assign, per partition — the analog of initializing
-    * `Partition.currentOffset` from `log.getLogEndOffset()`
-    * (reference: src/main/java/server/internal/storage/Partition.java:18).
-    * High-watermark tombstones participate: a fully-expired partition keeps
-    * its end offset. */
+  /** A partition's first readable offset (rises as retention expires whole
+    * files) and next offset to assign; equal when nothing is readable. */
+  final case class Bounds(first: Long, next: Long)
+
+  /** Per partition of one index snapshot, its [[Bounds]]. `next` is the
+    * analog of initializing `Partition.currentOffset` from
+    * `log.getLogEndOffset()` (reference:
+    * src/main/java/server/internal/storage/Partition.java:18).
+    * High-watermark tombstones participate: a fully-expired partition
+    * keeps its end offset and begins there. */
+  def bounds(entries: Array[Entry]): Map[Int, Bounds] =
+    entries.groupBy(_.partition).map { case (p, es) =>
+      val next = es.map(_.endOffset).max + 1L
+      val data = es.filter(_.isData)
+      p -> Bounds(if (data.isEmpty) next else data.map(_.baseOffset).min, next)
+    }
+
+  /** The fetch rule every consumer reads by: per partition of `bounds`,
+    * the next fetch's `[start, end)`. It starts at the position in `from`,
+    * or at the first readable offset if the position is below it or absent
+    * — Kafka's reset to earliest, so no consumer stalls on expired offsets —
+    * and spans at most `max` offsets, never past `next`. */
+  def fetchRanges(
+      bounds: Map[Int, Bounds], from: Map[Int, Long], max: Long): Map[Int, (Long, Long)] =
+    bounds.map { case (p, b) =>
+      val start = math.max(from.getOrElse(p, 0L), b.first)
+      // saturating: start + max overflows at the default Long.MaxValue
+      p -> (start, math.max(start, if (b.next - start > max) start + max else b.next))
+    }
+
+  /** Next offset to assign, per partition ([[Bounds]]`.next`). */
   def nextOffsets(spark: SparkSession, wh: Warehouse, topic: String): Map[Int, Long] =
-    entries(spark, wh, topic)
-      .groupBy(_.partition)
-      .map { case (p, es) => p -> (es.map(_.endOffset).max + 1L) }
+    bounds(entries(spark, wh, topic)).map { case (p, b) => p -> b.next }
 
   def invalidate(wh: Warehouse, topic: String): Unit =
     Memo.invalidate(wh.indexDir(topic))

@@ -4,26 +4,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.catalog.Warehouse
 
-/** The consume path: index-pruned incremental reads over a topic's log.
+/** The consume path: index-pruned reads over a topic's log.
   *
   * Re-expresses the reference's fetch chain
   * (reference: src/main/java/consumer/FluxConsumer.java:136-179 →
   * grpc/services/ConsumerServiceImpl.java:17-45 →
   * server/internal/storage/LogSegment.java:278-339): the in-memory index map
   * + `RandomAccessFile.seek` becomes file pruning against [[LogIndex]]
-  * followed by a Parquet scan whose `offset >= from` filter is pushed to
-  * row-group stats (tight, because files are written offset-sorted).
-  *
-  * `poll` takes explicit (topic, partition, fromOffset) — the reference's
-  * request drops topic/partition on the floor and the broker guesses
-  * "first topic, partition 0" (SURVEY.md §2.7 Q3); we keep the intended
-  * contract. Records come back strictly offset-ordered (FluxConsumer.java:165)
-  * and the sort runs only over the pruned file set, never the whole log.
+  * followed by a Parquet scan of just the pruned files. Consumers (group
+  * polls, the streaming source) read the `[start, end)` ranges that
+  * [[LogIndex.fetchRanges]] decides through [[scanRange]]. [[poll]] is the
+  * raw (topic, partition, fromOffset) read — the reference's request drops
+  * topic/partition on the floor (SURVEY.md §2.7 Q3) — whose `offset`
+  * bounds push to row-group stats (tight: files are written offset-sorted).
+  * Polls come back offset-ordered (FluxConsumer.java:165), sorted over the
+  * pruned files only, never the whole log.
   */
 object LogReader {
 
-  /** Fetch up to `max` records of one partition starting at `fromOffset` —
-    * the reference's `poll` (one micro-slice of the log, offset-ordered). */
+  /** Fetch up to `max` records of one partition starting at `fromOffset`,
+    * taken as given — the reference's `poll` (one micro-slice of the log,
+    * offset-ordered), the raw point read under the consumers' rule. */
   def poll(
       spark: SparkSession,
       wh: Warehouse,
@@ -31,50 +32,28 @@ object LogReader {
       partition: Int,
       fromOffset: Long,
       max: Long): DataFrame = retryOnceOnVanished {
-    pollIn(spark, wh, topic, LogIndex.entries(spark, wh, topic),
-      partition, fromOffset, max)
-  }
-
-  /** [[poll]] pruned against a caller-held `entries` snapshot, so a caller
-    * that derives more from the index (a group's next offsets) reads the
-    * same snapshot the frame was built from. Callers wrap the snapshot
-    * read and this call together in [[retryOnceOnVanished]]. */
-  private[graft] def pollIn(
-      spark: SparkSession,
-      wh: Warehouse,
-      topic: String,
-      entries: Array[LogIndex.Entry],
-      partition: Int,
-      fromOffset: Long,
-      max: Long): DataFrame = {
     val to = fromOffset + max // exclusive
     // prune in-driver against the cached index — no Spark job; the poll
     // itself is then ONE job over just the intersecting files
-    val hits = entries
+    val hits = LogIndex.entries(spark, wh, topic)
       .filter(e => e.isData && e.partition == partition &&
         e.endOffset >= fromOffset && e.baseOffset < to)
     if (hits.isEmpty) emptyLog(spark, wh, topic)
-    else {
-      // schema pinned (Schemas.record; `partition` resolves from the
-      // directory) — a poll is a point read, it must not pay a footer
-      // schema-inference pass per call
-      val slice = segmentFiles(spark, wh, topic, hits.map(_.file).toIndexedSeq)
-        .filter(col("offset") >= fromOffset && col("offset") < to)
-      // a poll slice is bounded by `max` (and by the pruned files' record
-      // count, known from the index): sort it in ONE task instead of a
-      // range-exchange — a global orderBy shuffles every poll, pure fixed
-      // overhead for a micro-slice. Unbounded polls (pollAll-style max)
-      // over big windows keep the distributed sort.
-      val sliceRows = math.min(max, hits.map(_.count).sum)
-      if (sliceRows <= SinglePartitionSortRows)
-        slice.coalesce(1).sortWithinPartitions(col("offset"))
-      else slice.orderBy(col("offset"))
-    }
+    else sortSlice(
+      segmentFiles(spark, wh, topic, hits.map(_.file).toIndexedSeq)
+        .filter(col("offset") >= fromOffset && col("offset") < to),
+      math.min(max, hits.map(_.count).sum), "offset")
   }
 
-  /** Poll slices at or under this many rows sort in a single task (the
-    * slice is output-scale — it gets collected or appended either way);
-    * larger windows fall back to the distributed range sort. */
+  /** Sort a fetched slice of at most `rows` rows by `keys`. A slice at or
+    * under [[SinglePartitionSortRows]] sorts in ONE task instead of a
+    * range-exchange — a global orderBy shuffles every poll, pure fixed
+    * overhead for a micro-slice that gets collected or appended either
+    * way. Larger windows keep the distributed sort. */
+  private[graft] def sortSlice(slice: DataFrame, rows: Long, keys: String*): DataFrame =
+    if (rows <= SinglePartitionSortRows) slice.coalesce(1).sortWithinPartitions(keys.map(col): _*)
+    else slice.orderBy(keys.map(col): _*)
+
   private val SinglePartitionSortRows = 1L << 22
 
   /** Kafka's `offsetsForTimes` analog: per partition, the earliest offset
@@ -106,19 +85,22 @@ object LogReader {
     else segmentFiles(spark, wh, topic, files.toIndexedSeq)
   }
 
-  /** Exactly the records in `[start, end)` of each partition in `ranges`
-    * — a streaming consumer's batch ([[graft.streaming.TopicSource]]).
-    * One job over just the intersecting committed files, through
-    * [[segmentFiles]] like every other segment read, so a LAGGING reader
-    * whose range still covers expired files gets the retained rows
-    * instead of a mid-batch crash — Kafka's out-of-range-falls-to-earliest
-    * shape; the skipped records ARE the expired ones. */
-  def scanRange(
+  /** Exactly the records in `[start, end)` of each partition in `ranges`,
+    * unordered — a group poll's or a stream batch's read, ranged by
+    * [[LogIndex.fetchRanges]] over the same `entries` snapshot it prunes
+    * against. Callers wrap the snapshot read and this call together in
+    * [[retryOnceOnVanished]]. One job over just the intersecting committed
+    * files, through [[segmentFiles]] like every other segment read, so a
+    * LAGGING reader whose range still covers expired files gets the
+    * retained rows instead of a mid-batch crash — Kafka's
+    * out-of-range-falls-to-earliest shape. */
+  private[graft] def scanRange(
       spark: SparkSession,
       wh: Warehouse,
       topic: String,
-      ranges: Map[Int, (Long, Long)]): DataFrame = retryOnceOnVanished {
-    val files = LogIndex.entries(spark, wh, topic)
+      entries: Array[LogIndex.Entry],
+      ranges: Map[Int, (Long, Long)]): DataFrame = {
+    val files = entries
       .filter { e =>
         ranges.get(e.partition).exists { case (s, end) =>
           e.isData && e.endOffset >= s && e.baseOffset < end
@@ -128,8 +110,9 @@ object LogReader {
     if (files.isEmpty) emptyLog(spark, wh, topic)
     else {
       // the bounds are map literals, which generated code holds by
-      // reference: every batch of a stream then compiles the same class
-      // (inlined per-batch offsets would compile a new one each batch)
+      // reference: every steady poll or batch compiles the same class
+      // (inlined offsets would compile a new one each call). They do not
+      // reach row-group statistics: the index prunes by file only.
       def bound(f: ((Long, Long)) => Long) =
         typedLit(ranges.map { case (p, r) => p -> f(r) }).apply(col("partition"))
       segmentFiles(spark, wh, topic, files.toIndexedSeq)

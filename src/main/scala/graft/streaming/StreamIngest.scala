@@ -75,14 +75,14 @@ object StreamIngest {
     * ([[graft.core.log.LogWriter]]) — a file-source stream over the log dir
     * would emit a crashed append's orphaned data files (records that were
     * never committed, and after the retry lands, the same offsets twice).
-    * The source's offset is the index's committed next-offset per
-    * partition (capped by `maxPerPartition`), and Spark writes each
-    * batch's end offset to the checkpoint's offset log BEFORE `f` runs, so
-    * a crash-replayed batch re-reads exactly the same `[start, end)`
-    * range: exactly-once delivery to an idempotent-by-batchId sink, never
-    * a superset. A batch's read is the in-driver index pruning of
-    * [[graft.core.log.LogReader.poll]] — one Spark job over just the
-    * intersecting committed files, offsets bounded both sides. A trigger
+    * The source's offset is a next offset per partition, advanced by the
+    * group polls' fetch rule ([[graft.core.log.LogIndex.fetchRanges]],
+    * capped by `maxPerPartition`), and Spark writes each batch's end offset
+    * to the checkpoint's offset log BEFORE `f` runs, so a crash-replayed
+    * batch re-reads exactly the same `[start, end)` range: exactly-once
+    * delivery to an idempotent-by-batchId sink, never a superset. A batch
+    * reads through [[graft.core.log.LogReader.scanRange]] — in-driver index
+    * pruning, then one Spark job over just the intersecting committed files. A trigger
     * with nothing new runs no batch. A checkpoint written by an earlier
     * version's consumer, whose offsets counted triggers, is refused.
     *

@@ -15,16 +15,16 @@ import graft.core.log.{LogIndex, LogReader}
   * class>)` with options `warehouse`, `topic` and `maxPerPartition`
   * ([[StreamIngest.consume]] sets them).
   *
-  * The offset is the per-partition next-offset map of the log index
-  * ([[graft.core.log.LogIndex.nextOffsets]]). The engine writes a batch's
-  * end offset to the checkpoint's offset log before the batch runs, so a
+  * The offset is a per-partition next-offset map. A batch ends where
+  * [[graft.core.log.LogIndex.fetchRanges]] — the rule group polls use —
+  * ends from its start: past expired offsets, at most `maxPerPartition`
+  * per partition; the remainder waits. The engine writes a batch's end
+  * offset to the checkpoint's offset log before the batch runs, so a
   * crash-replayed batch re-reads exactly its `[start, end)` range even
   * though the log has grown since — the replay contract the consumer's
-  * exactly-once delivery rests on. `maxPerPartition` caps each
-  * partition's bite in `latestOffset`; the remainder waits for the next
-  * batch. Progress reports each batch's start and end offsets and the
-  * committed next offsets as its latest offset, so a consumer's lag is
-  * latest − end per partition.
+  * exactly-once delivery rests on. Progress reports each batch's start and
+  * end offsets and the committed next offsets as its latest offset, so a
+  * consumer's lag is latest − end per partition.
   *
   * A batch is [[graft.core.log.LogReader.scanRange]] — index-pruned,
   * retention-safe — flagged as streaming, so the scan stays a parquet
@@ -95,10 +95,10 @@ private class TopicStream(
 
   /** Committed next offsets as of the last `latestOffset` call. */
   @volatile private var committed = Map.empty[Int, Long]
-  /** AvailableNow: the high-water mark when the run was prepared, and the
-    * one batch's end, fixed at the run's first `latestOffset` — the
+  /** AvailableNow: the index bounds when the run was prepared, and the one
+    * batch's end, fixed at the run's first `latestOffset` — the
     * checkpoint's start is known only then. */
-  @volatile private var availableNowMark: Option[Map[Int, Long]] = None
+  @volatile private var availableNowMark: Option[Map[Int, LogIndex.Bounds]] = None
   @volatile private var availableNowEnd: Option[TopicOffset] = None
 
   override def schema: StructType = Schemas.record
@@ -108,22 +108,22 @@ private class TopicStream(
       "the topic source admits by latestOffset(start, limit)")
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowMark = Some(LogIndex.nextOffsets(spark, wh, topic))
+    availableNowMark = Some(bounds())
+
+  private def bounds() = LogIndex.bounds(LogIndex.entries(spark, wh, topic))
 
   override def latestOffset(startOffset: StreamOffset, limit: ReadLimit): StreamOffset = {
-    committed = LogIndex.nextOffsets(spark, wh, topic)
+    val now = bounds()
+    committed = now.map { case (p, b) => p -> b.next }
     val start = nextOffsets(startOffset, checkpoint)
+    val ranges = LogIndex.fetchRanges(availableNowMark.getOrElse(now), start, maxPerPartition)
     val end = availableNowEnd.getOrElse {
-      val e = TopicOffset(start ++ availableNowMark.getOrElse(committed).map { case (p, n) =>
-        val s = start.getOrElse(p, 0L)
-        // saturating: s + maxPerPartition overflows at the default Long.MaxValue
-        p -> math.max(s, if (n - s > maxPerPartition) s + maxPerPartition else n)
-      })
+      val e = TopicOffset(start ++ ranges.map { case (p, r) => p -> r._2 })
       if (availableNowMark.isDefined) availableNowEnd = Some(e)
       e
     }
-    // the first batch of a checkpoint has no start: an empty log is no data
-    if (startOffset == null && end.next.values.forall(_ == 0L)) null else end
+    // the first batch of a checkpoint has no start: nothing readable is no data
+    if (startOffset == null && ranges.values.forall { case (s, e) => s == e }) null else end
   }
 
   override def reportLatestOffset(): StreamOffset =
@@ -135,7 +135,8 @@ private class TopicStream(
       p -> (from.getOrElse(p, 0L), n)
     }
     // the relation puts the directory's `partition` column last
-    GraftInternal.streamingFrame(LogReader.scanRange(spark, wh, topic, ranges)
+    GraftInternal.streamingFrame(LogReader.retryOnceOnVanished(
+      LogReader.scanRange(spark, wh, topic, LogIndex.entries(spark, wh, topic), ranges))
       .select(schema.fieldNames.toSeq.map(col): _*))
   }
 

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.core.catalog.{TopicCatalog, Warehouse}
+import graft.core.groups.{ConsumerGroup, Negotiation}
 import graft.core.log.LogWriter
 import graft.streaming.StreamIngest
 
@@ -12,7 +13,10 @@ import graft.streaming.StreamIngest
   * log, the index read) and building its frame are driver-side, so a
   * change that adds a job per micro-batch — a listing, a schema
   * inference, a metadata read through Spark — fails here while walls
-  * look flat. The first drain fills caches and is not pinned. */
+  * look flat. The first drain fills caches and is not pinned.
+  *
+  * Also pins a steady group poll: one job, and no generated-class compile
+  * once the first poll has compiled its plan. */
 class ConsumeJobBudgetSpec extends SparkSpec {
   import spark.implicits._
 
@@ -42,5 +46,25 @@ class ConsumeJobBudgetSpec extends SparkSpec {
     val (_, js) = JobStats.measure(spark.sparkContext)(drain())
     assert(counts.toMap === Map(0L -> 40L, 1L -> 60L))
     assert(js.jobs === MeasuredJobs, js.records.map(_.site).mkString(", "))
+  }
+
+  test("a steady group poll plus collect runs one job and compiles nothing") {
+    val wh = Warehouse(tmpDir("graft-group-poll-budget"))
+    TopicCatalog.createTopic(spark, wh, "t", 4)
+    LogWriter.append(spark, wh, "t",
+      records(40000, from = 0).withColumn("explicit_partition", (col("id") % 4).cast("int")),
+      "id")
+    val Seq(m) = ConsumerGroup.subscribe(spark, wh, "g",
+      Seq(Negotiation.Member("m", Seq("range"))), Seq("t"))
+    def poll() = {
+      val (df, next) = ConsumerGroup.poll(spark, wh, "g", m, "t", max = 5000)
+      (df.collect().length, next)
+    }
+    val (first, next) = poll()
+    assert(first === 20000)
+    ConsumerGroup.commit(spark, wh, "g", "t", next)
+    val ((n, _), js) = JobStats.measure(spark.sparkContext)(poll())
+    assert(n === 20000)
+    assert((js.jobs, js.compiles) === ((1, 0L)), js.records.map(_.site).mkString(", "))
   }
 }

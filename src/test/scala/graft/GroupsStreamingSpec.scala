@@ -296,6 +296,32 @@ class GroupsStreamingSpec extends SparkSpec {
     assert(count === 3)
   }
 
+  test("a group polls past expired offsets from the first readable one, then catches up") {
+    import graft.core.admin.Admin
+    import graft.core.log.LogRetention
+    val wh = Warehouse(tmpDir("graft-grp-expired"))
+    TopicCatalog.createTopic(spark, wh, "t", 1)
+    (0 until 4).foreach { i =>
+      LogWriter.append(spark, wh, "t",
+        someRecords(100, from = i * 100).withColumn("explicit_partition", lit(0)), "id")
+    }
+    // expiry drops whole files below the watermark: [200, 400) stays
+    LogRetention.expireBefore(spark, wh, "t", Map(0 -> 250L))
+    val Seq(m) = ConsumerGroup.subscribe(spark, wh, "g",
+      Seq(Negotiation.Member("m", Seq("range"))), Seq("t"))
+    assert(Admin.consumerLag(spark, wh, "g", "t") === Map(0 -> 200L))
+    val polled = (0 until 5).map { _ =>
+      val (df, next) = ConsumerGroup.poll(spark, wh, "g", m, "t", max = 50)
+      val offsets = df.select($"offset").as[Long].collect().toSeq
+      ConsumerGroup.commit(spark, wh, "g", "t", next)
+      offsets
+    }
+    assert(polled.map(_.size) === Seq(50, 50, 50, 50, 0))
+    assert(polled.flatten === (200L until 400L))
+    assert(ConsumerGroup.committed(spark, wh, "g", "t") === Map(0 -> 400L))
+    assert(Admin.consumerLag(spark, wh, "g", "t") === Map(0 -> 0L))
+  }
+
   test("pollAll spans the member's full multi-topic assignment in one call") {
     val wh = Warehouse(tmpDir("graft-pollall"))
     TopicCatalog.createTopic(spark, wh, "t1", 2)
@@ -355,13 +381,13 @@ class GroupsStreamingSpec extends SparkSpec {
       assert(perPart.values.map(_.size).sum === 100)
       // stop() racing the ENGINE's commit of the last data batch would make
       // the restart legitimately REPLAY it (the foreachBatch contract) and
-      // void the strict only-the-new-slice assertion below — wait until a
-      // LATER batch completes, which implies the data batch committed
-      val lastDataBatch = batches.keys.max
+      // void the strict only-the-new-slice assertion below — wait until the
+      // data batch's entry lands in the checkpoint's commit log
+      val commitFile = java.nio.file.Paths.get(ckpt, "commits", batches.keys.max.toString)
       val d2 = System.currentTimeMillis() + 60000
-      while ((q.lastProgress == null || q.lastProgress.batchId <= lastDataBatch) &&
-        System.currentTimeMillis() < d2) Thread.sleep(50)
-      assert(q.lastProgress.batchId > lastDataBatch, "a post-data batch must complete")
+      while (!java.nio.file.Files.exists(commitFile) && System.currentTimeMillis() < d2)
+        Thread.sleep(50)
+      assert(java.nio.file.Files.exists(commitFile), "the last data batch must commit")
     } finally q.stop()
     // restart from the same checkpoint: only NEW records are delivered
     LogWriter.append(spark, wh, "c", someRecords(30, from = 100), "id")

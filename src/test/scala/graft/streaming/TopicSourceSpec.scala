@@ -20,7 +20,7 @@ import graft.core.log.{LogRetention, LogWriter}
   *     a superset — and the next batch starts where it ended;
   *   - `maxPerPartition` caps one batch, the remainder waits;
   *   - a batch whose files expire before it is read returns the retained
-  *     rows;
+  *     rows, and a batch starts at the first readable offset;
   *   - progress carries start, end and latest offsets per partition;
   *   - a checkpoint of the earlier trigger-counter consumer is refused.
   */
@@ -129,6 +129,21 @@ class TopicSourceSpec extends SparkSpec {
     }
     assert(q.awaitTermination(60000))
     assert(seen.toMap === Map(0L -> ((2, 200L, 200L))))
+  }
+
+  test("a capped first batch starts at the first readable offset") {
+    val wh = Warehouse(tmpDir("graft-source-expired"))
+    TopicCatalog.createTopic(spark, wh, "t", 1)
+    (0 until 4).foreach { i =>
+      LogWriter.append(spark, wh, "t",
+        records(100, from = i * 100).withColumn("explicit_partition", lit(0)), "id")
+    }
+    // expiry drops whole files below the watermark: [200, 400) stays
+    LogRetention.expireBefore(spark, wh, "t", Map(0 -> 250L))
+    val got: Delivered = TrieMap.empty
+    drain(wh, tmpDir("graft-source-expired-ckpt"), got, max = 50L)
+    assert(got.keySet === Set(0L))
+    assert(got(0L).map(_._2).sorted === (200L until 250L))
   }
 
   test("progress carries start, end and latest offsets; lag = latest - end") {
