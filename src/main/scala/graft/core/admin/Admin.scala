@@ -70,9 +70,10 @@ object Admin {
   def describeTopic(spark: SparkSession, wh: Warehouse, topic: String): DataFrame = {
     TopicCatalog.topicInfo(spark, wh, topic) // throws UnknownTopicException
     val entries = LogIndex.entries(spark, wh, topic)
+    val data = entries.filter(_.isData).groupBy(_.partition)
     val rows = LogIndex.bounds(entries).toSeq.map { case (p, b) =>
-      val data = entries.filter(e => e.isData && e.partition == p)
-      Row(p, data.length.toLong, data.map(_.count).sum, b.first, b.next - 1)
+      val es = data.getOrElse(p, Array.empty[LogIndex.Entry])
+      Row(p, es.length.toLong, es.map(_.count).sum, b.first, b.next - 1)
     }
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), topicSchema)
   }
