@@ -1,15 +1,15 @@
 package graft.core
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardOpenOption}
-import java.util.concurrent.{ConcurrentHashMap, Executors, ScheduledFuture, TimeUnit}
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReference}
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Paths, Path => NioPath}
+import java.nio.file.StandardOpenOption.{CREATE, WRITE}
+import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
 import java.util.concurrent.locks.ReentrantLock
 import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.core.catalog.Warehouse
 
-/** Cross-JVM mutual exclusion, scoped to a warehouse: an O_EXCL lock file
-  * under `<root>/_locks/` plus a JVM-level striped lock. Serializes the
+/** Cross-JVM mutual exclusion, scoped to a warehouse: a kernel file lock on
+  * `<root>/_locks/<name>.lock` plus a JVM-level striped lock. Serializes the
   * mutators of one topic's log + index (append, retention, compaction,
   * deletion) while leaving different topics fully parallel — the reference
   * locks per partition inside one broker process
@@ -18,49 +18,32 @@ import graft.core.catalog.Warehouse
   * disjoint explicit-partition appends, the partition — see
   * [[withPartitionLocks]]).
   *
-  * Two layers, because each covers the other's blind spot:
+  * Two layers, because the kernel lock belongs to the PROCESS:
   *
-  *   - '''In-process''': a striped [[ReentrantLock]] keyed by
-  *     `(warehouse root, lock name)`. Hadoop's `LocalFileSystem` implements
-  *     `create(overwrite = false)` as a non-atomic exists-then-open, so two
-  *     threads of one JVM CAN both "win" the file — the JVM lock makes that
-  *     race impossible where it is cheapest to prevent. Entries are
-  *     refcounted and evicted on last release, so the stripe table stays
-  *     bounded by the locks currently in use, not every lock ever touched
-  *     (per-partition locks would otherwise grow it by topics × partitions
-  *     for the driver's lifetime).
-  *   - '''Cross-process''': the lock file, created atomically —
-  *     `java.nio.file.Files` `CREATE_NEW` (true O_EXCL) for `file:`
-  *     warehouses, `fs.create(overwrite = false)` elsewhere (atomic on real
-  *     DFS implementations such as HDFS).
+  *   - '''Cross-process''': `FileChannel.tryLock` on the lock file, polled
+  *     against the caller's deadline. The kernel releases it when the
+  *     holder closes the channel or its process dies, so a SIGKILLed holder
+  *     frees its topic at once — no stamp, heartbeat or stale horizon.
+  *   - '''In-process''': a [[ReentrantLock]] keyed by the lock file's
+  *     canonical path. The kernel cannot exclude two threads of one JVM,
+  *     and worse, closing a SECOND channel on a locked file silently drops
+  *     the first channel's lock, so one JVM must never open two channels on
+  *     one lock file — including through two spellings of one warehouse dir
+  *     (a symlink, `dir/./`), which is why the key is the real path, not
+  *     `wh.root`. Entries are refcounted and evicted on last release, so
+  *     the table stays bounded by the locks currently in use, not every
+  *     lock ever touched (per-partition locks would otherwise grow it by
+  *     topics × partitions for the driver's lifetime).
   *
-  * Crash recovery: the holder stamps `owner pid@host, acquire epoch, and
-  * its staleMs horizon` into the file, and a daemon heartbeat refreshes the
-  * file's mtime every `staleMs / 3` while the body runs. A lock whose mtime
-  * lags by more than the HOLDER's stamped horizon (waiters honor the
-  * holder's declared cadence, not their own) can only belong to a dead JVM,
-  * so the next acquirer breaks it — by renaming it to a unique tombstone
-  * first and re-checking freshness on the tombstone, so that concurrent
-  * breakers elect exactly one winner and a freshly re-acquired lock stolen
-  * by a delayed breaker is restored, not deleted.
+  * The warehouse must be a LOCAL directory (`file:`, as `MetaTable`
+  * assumes): other schemes fail fast with an [[IllegalArgumentException]].
   *
-  * Fencing: every heartbeat re-reads its own stamp before touching the file.
-  * If the stamp is no longer ours — the lock was (wrongly or rightly) broken
-  * as stale and re-acquired by another process — the holder is STRANDED: it
-  * stops refreshing (never extends the new owner's file), logs loudly, and
-  * its release skips the delete (never destroys the new owner's lock). On
-  * filesystems whose `setTimes` is unsupported or a no-op (e.g. object
-  * stores), the heartbeat falls back to rewriting the stamp in place — an
-  * overwrite updates mtime on any filesystem — so a live lock never drifts
-  * into the stale horizon just because mtime can't be poked directly.
+  * Lock files are never deleted. A waiter may hold a channel on the file
+  * when it is unlinked; it would then lock the old inode while a new
+  * creator locks the new one, and both would "hold" the lock. A leftover
+  * file is harmless: only a live process's kernel lock excludes.
   */
 object Locks {
-
-  /** A lock file whose mtime lags now by more than this is presumed
-    * abandoned by a crashed JVM and is broken by the next acquirer. Live
-    * holders refresh mtime every [[heartbeatPeriod]], so only a crash (or a
-    * multi-minute full-GC pause) lets a held lock cross the horizon. */
-  val DefaultStaleMs: Long = 10 * 60 * 1000L
 
   /** Refcounted stripe-table entry: `refs` counts threads between retain
     * and release (mutated only inside `ConcurrentHashMap.compute`, which is
@@ -90,33 +73,18 @@ object Locks {
       if (e.refs == 0) null else e
     })
 
-  // Small pool, not a single thread: one hung setTimes on a stalled mount
-  // must not starve every OTHER held lock's mtime refresh into staleness.
-  private val heartbeats = Executors.newScheduledThreadPool(4, { (r: Runnable) =>
-    val t = new Thread(r, "graft-lock-heartbeat"); t.setDaemon(true); t
-  })
-
-  private def heartbeatPeriod(staleMs: Long): Long = math.max(staleMs / 3, 250L)
-
-  private lazy val owner: String =
-    s"${ProcessHandle.current().pid()}@${java.net.InetAddress.getLocalHost.getHostName}"
-
   def withLock[T](
       wh: Warehouse,
       name: String,
-      timeoutMs: Long = 180000,
-      staleMs: Long = DefaultStaleMs)(body: => T): T =
-    withLockUntil(wh, name, System.currentTimeMillis() + timeoutMs, staleMs)(body)
+      timeoutMs: Long = 180000)(body: => T): T =
+    withLockUntil(wh, name, System.currentTimeMillis() + timeoutMs)(body)
 
   /** [[withLock]] against an ABSOLUTE deadline — the building block that
     * lets a multi-lock acquisition ([[withPartitionLocks]]) spend one total
     * budget across all its acquires instead of a fresh timeout per lock. */
-  private[graft] def withLockUntil[T](
-      wh: Warehouse,
-      name: String,
-      deadline: Long,
-      staleMs: Long = DefaultStaleMs)(body: => T): T = {
-    val key = s"${wh.root}\u0000$name"
+  private[graft] def withLockUntil[T](wh: Warehouse, name: String, deadline: Long)(body: => T): T = {
+    val file = lockDir(wh).resolve(s"$name.lock")
+    val key = file.toString
     val entry = retainJvmLock(key)
     try {
       // ONE deadline spans both layers — queueing on the in-process lock must
@@ -128,9 +96,9 @@ object Locks {
         // Re-entry within a thread: the file is already ours, don't re-acquire.
         if (entry.lock.getHoldCount > 1) body
         else {
-          val held = acquireFile(wh, name, deadline, staleMs)
+          val channel = acquireFile(file, name, deadline)
           try body
-          finally held.release()
+          finally channel.close() // releases the kernel lock; not interruptible
         }
       } finally entry.lock.unlock()
     } finally releaseJvmLock(key)
@@ -156,11 +124,8 @@ object Locks {
     * acquire waits only for the remainder, so a blocked acquisition fails
     * after ~timeoutMs total, not ~timeoutMs × partitions.
     *
-    * Cost note: a full-set acquisition materializes N lock files (~3N FS
-    * metadata ops per append). At 1 ms/RPC on a real DFS that is ~0.1 s for
-    * a 32-partition topic — noise against a multi-GB batch commit, and the
-    * price of letting partition-scoped writers interleave with topic-wide
-    * ones through one uniform, deadlock-free protocol. */
+    * Cost note: a full-set acquisition opens and locks N files, about 50 µs
+    * each uncontended on a local disk. */
   def withPartitionLocks[T](
       wh: Warehouse, topic: String, parts: Seq[Int],
       timeoutMs: Long = 180000)(body: => T): T = {
@@ -172,228 +137,31 @@ object Locks {
     go(parts.distinct.sorted.toList)
   }
 
-  private def lockPath(wh: Warehouse, name: String): Path =
-    new Path(s"${wh.root}/_locks/$name.lock")
-
-  /** A held lock file: heartbeat + the state release needs to verify it
-    * still owns the path before deleting it. */
-  private final class HeldFile(
-      fs: FileSystem, lock: Path, stamp: Array[Byte], stampPrefix: String,
-      staleMs: Long) {
-    private val released = new AtomicBoolean(false)
-    private val fenced = new AtomicBoolean(false)
-    private val failures = new AtomicInteger(0)
-    private val beatRef = new AtomicReference[ScheduledFuture[_]]()
-
-    private def ownsPath(): Boolean =
-      readStampLine(fs, lock).forall(_.startsWith(stampPrefix))
-    // ^ an unreadable/missing file reads as "still ours": the refresh then
-    //   fails on its own and is logged; only a READABLE foreign stamp fences.
-
-    /** Strict variant for DESTRUCTIVE paths (overwrite / delete): true only
-      * on a readable stamp that is ours — unreadable is NOT presumed ours.
-      * Retries briefly so a transient read blip doesn't leak the file into
-      * a stale-horizon stall for every waiter. */
-    private def ownsPathStrict(): Boolean = {
-      var attempt = 0
-      while (attempt < 3) {
-        readStampLine(fs, lock) match {
-          case Some(line) => return line.startsWith(stampPrefix)
-          case None =>
-            if (!(try fs.exists(lock) catch { case _: Exception => true }))
-              return false // nothing there: neither ours nor anyone's
-            attempt += 1
-            if (attempt < 3) Thread.sleep(50)
-        }
-      }
-      false // exists but unreadable: never destroy what might be a new owner's
-    }
-
-    private def beat(): Unit = {
-      if (released.get() || fenced.get()) return
-      if (!ownsPath()) {
-        // Fencing: the lock was broken as stale (a long GC pause, a partial
-        // network outage) and re-acquired — we are STRANDED. Refreshing now
-        // would extend the NEW owner's file; deleting at release would
-        // destroy it. Stop touching the path and shout.
-        fenced.set(true)
-        Option(beatRef.get()).foreach(_.cancel(false))
-        System.err.println(
-          s"[graft] LOCK FENCED: $lock is no longer ours (stale-broken and " +
-            "re-acquired by another process) — this holder's mutation is no " +
-            "longer exclusive; its release will not touch the lock")
-        return
-      }
-      try { fs.setTimes(lock, System.currentTimeMillis(), -1); failures.set(0) }
-      catch {
-        case _: Exception if !released.get() && ownsPath() =>
-          // setTimes unsupported / no-op FS (e.g. object stores): rewrite the
-          // stamp in place — an overwrite updates mtime on ANY filesystem.
-          // The overwrite is DESTRUCTIVE, so ownership is re-read strictly
-          // (readable AND ours) immediately before it: between the guard
-          // above and here the lock can be stale-broken and re-acquired,
-          // and clobbering the new owner's stamp would fence the legitimate
-          // holder instead of us. Residual exposure is one read-then-create
-          // window (two metadata ops) — accepted for a best-effort FS lock
-          // whose horizon is minutes; if it fires, our NEXT beat reads the
-          // new owner's re-stamp and fences this holder.
-          try {
-            if (ownsPathStrict()) {
-              val out = fs.create(lock, true)
-              try out.write(stamp) finally out.close()
-              failures.set(0)
-            } // not verifiably ours: leave the path alone; the next beat()
-              // re-evaluates ownership and fences on a foreign stamp
-          } catch {
-            case e: Exception =>
-              // Never swallow silently: if the refresh keeps failing, the
-              // lock WILL cross the stale horizon while legitimately held
-              // and a waiter will break it.
-              val n = failures.incrementAndGet()
-              System.err.println(
-                s"[graft] lock heartbeat failed ($n consecutive) for $lock: $e" +
-                  (if (n.toLong * heartbeatPeriod(staleMs) > staleMs / 2)
-                     " — exclusion at risk: a waiter may break this lock as stale"
-                   else ""))
-          }
-        case _: Exception => // released or fenced mid-refresh: nothing to do
-      }
-    }
-
-    def start(): Unit =
-      beatRef.set(heartbeats.scheduleAtFixedRate(
-        () => beat(),
-        heartbeatPeriod(staleMs), heartbeatPeriod(staleMs), TimeUnit.MILLISECONDS))
-
-    def release(): Unit = {
-      released.set(true) // before cancel: an in-flight beat must not recreate the file
-      Option(beatRef.get()).foreach(_.cancel(false))
-      // Delete only what is VERIFIABLY still ours (readable stamp with our
-      // prefix): if the lock was stale-broken and re-acquired, the path now
-      // holds the new owner's file, and an unreadable stamp must not be
-      // presumed ours — deleting on a failed read could destroy the new
-      // owner's exclusion. If the stamp is ours-but-unreadable (transient
-      // IO, retried), the leaked file is broken as stale after the horizon:
-      // a bounded stall, the cheap failure mode.
-      if (!fenced.get() && ownsPathStrict())
-        try fs.delete(lock, false)
-        catch { case _: java.io.IOException => /* best-effort */ }
-    }
+  /** The warehouse's `_locks` dir, created if missing (with NIO: Hadoop's
+    * local `mkdirs` forks `chmod` without the native library) and resolved
+    * to its real path, so every spelling of one dir yields one key. */
+  private def lockDir(wh: Warehouse): NioPath = {
+    val uri = new Path(s"${wh.root}/_locks").toUri
+    val scheme = Option(uri.getScheme).getOrElse(FileSystem.getDefaultUri(Fs.conf).getScheme)
+    if (scheme != "file")
+      throw new IllegalArgumentException(
+        s"warehouse locks need a local directory; '${wh.root}' has scheme '$scheme'")
+    Files.createDirectories(Paths.get(uri.getPath)).toRealPath()
   }
 
-  private def acquireFile(
-      wh: Warehouse, name: String, deadline: Long, staleMs: Long): HeldFile = {
-    val lock = lockPath(wh, name)
-    val fs = Fs(lock)
-    fs.mkdirs(lock.getParent)
-    var held: HeldFile = null
-    while (held == null) {
-      val stampPrefix = s"$owner ${System.currentTimeMillis()}"
-      val stamp = s"$stampPrefix $staleMs\n".getBytes(UTF_8)
-      if (tryCreate(fs, lock, stamp)) {
-        held = new HeldFile(fs, lock, stamp, stampPrefix, staleMs)
-      } else {
-        breakIfStale(fs, lock, staleMs)
+  /** Open the lock file and poll its kernel lock until `deadline`. The
+    * returned channel holds the lock; closing it releases. */
+  private def acquireFile(file: NioPath, name: String, deadline: Long): FileChannel = {
+    val channel = FileChannel.open(file, CREATE, WRITE)
+    try {
+      while (channel.tryLock() == null) {
         if (System.currentTimeMillis() > deadline)
           throw new IllegalStateException(s"timed out acquiring lock '$name'")
         Thread.sleep(100)
       }
-    }
-    held.start()
-    held
-  }
-
-  /** Atomically create the lock file with the caller's stamp
-    * (`owner acquireEpoch staleMs`). The holder's staleMs rides in the file
-    * so WAITERS judge staleness by the HOLDER's declared horizon (its
-    * heartbeat cadence derives from it) — a waiter passing a smaller
-    * staleMs must not break a live lock whose heartbeat is slower.
-    * Returns false when someone else holds it. */
-  private def tryCreate(fs: FileSystem, lock: Path, stamp: Array[Byte]): Boolean = {
-    if (fs.getUri.getScheme == "file") {
-      // LocalFileSystem's create(overwrite=false) is exists-then-open, not
-      // atomic; NIO CREATE_NEW is a real O_EXCL open.
-      try {
-        Files.write(Paths.get(lock.toUri.getPath), stamp,
-          StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
-        true
-      } catch { case _: FileAlreadyExistsException => false }
-    } else {
-      val out =
-        try fs.create(lock, false)
-        catch { case _: java.io.IOException => return false }
-      try { out.write(stamp); out.close(); true }
-      catch {
-        case _: java.io.IOException =>
-          // The create WON the path but the stamp never landed: an ownerless,
-          // never-heartbeated file would block every writer until the stale
-          // horizon. Take it back down before reporting failure.
-          try out.close() catch { case _: Exception => () }
-          try fs.delete(lock, false) catch { case _: Exception => () }
-          false
-      }
-    }
-  }
-
-  /** First line of a lock/tombstone file, None when unreadable. */
-  private def readStampLine(fs: FileSystem, p: Path): Option[String] =
-    try {
-      val in = fs.open(p)
-      val buf = new Array[Byte](256)
-      val n = try in.read(buf) finally in.close()
-      Some(new String(buf, 0, math.max(n, 0), UTF_8).trim)
-    } catch { case _: Exception => None }
-
-  /** The horizon a waiter must respect for this lock: the HOLDER's stamped
-    * staleMs when readable (its heartbeat cadence is derived from it), the
-    * waiter's own otherwise (unstamped/corrupt file — e.g. a pre-upgrade
-    * or hand-made lock). */
-  private def effectiveStaleMs(fs: FileSystem, p: Path, waiterStaleMs: Long): Long =
-    readStampLine(fs, p)
-      .map(_.split(" "))
-      .collect { case f if f.length >= 3 => f(2) }
-      .flatMap(_.toLongOption)
-      .getOrElse(waiterStaleMs)
-
-  /** Break a lock whose holder is presumed dead. Rename-first: of N waiters
-    * seeing the same stale file, exactly one rename succeeds. The rename is
-    * then RE-CHECKED on the tombstone before discarding: between this
-    * waiter's staleness read and its rename, the lock may have been broken
-    * by someone else and re-acquired — in that case the renamed file is a
-    * LIVE lock (fresh mtime) and is put straight back instead of deleted.
-    * If the restore loses a race with a third acquirer taking the freed
-    * path, the live holder it displaced is stranded — its own heartbeat
-    * fencing detects the foreign stamp and stands down; here we log loudly.
-    * Residual exposure is the restore window itself (two renames, metadata
-    * ops) in a three-way race of two delayed breakers and a fresh acquirer
-    * — accepted for a best-effort FS lock whose horizon is minutes. */
-  private def breakIfStale(fs: FileSystem, lock: Path, staleMs: Long): Unit = {
-    val st =
-      try fs.getFileStatus(lock)
-      catch { case _: java.io.FileNotFoundException => return }
-    val horizon = effectiveStaleMs(fs, lock, staleMs)
-    if (System.currentTimeMillis() - st.getModificationTime > horizon) {
-      val tomb = new Path(lock.getParent,
-        s".${lock.getName}.broken-${java.util.UUID.randomUUID().toString.take(8)}")
-      if (try fs.rename(lock, tomb) catch { case _: java.io.IOException => false }) {
-        // Judge the TOMBSTONE by its own stamp: the renamed file may not be
-        // the one whose staleness we read (broken + re-acquired in between).
-        val tombHorizon = effectiveStaleMs(fs, tomb, staleMs)
-        val tombStale =
-          try System.currentTimeMillis() -
-            fs.getFileStatus(tomb).getModificationTime > tombHorizon
-          catch { case _: java.io.FileNotFoundException => false }
-        if (tombStale) fs.delete(tomb, false)
-        else if (!(try fs.rename(tomb, lock) catch { case _: java.io.IOException => false })) {
-          // A third process took the freed path: ITS lock stands; the live
-          // holder we displaced is stranded as a tombstone (its heartbeat
-          // fencing will notice the path is no longer its file).
-          System.err.println(
-            s"[graft] LOCK BREAK RACE: stole live lock $lock " +
-              s"(holder ${readStampLine(fs, tomb).getOrElse("?")}) and could " +
-              "not restore it — that holder is stranded and no longer exclusive")
-        }
-      }
+      channel
+    } catch {
+      case e: Throwable => channel.close(); throw e
     }
   }
 }

@@ -148,7 +148,10 @@ object TopicCatalog {
     * job — and never an unregistered name whose stale index/data a
     * re-create would resurrect. The per-topic index dir makes this a plain
     * recursive delete: no other topic's rows are ever rewritten (and so
-    * cannot be lost to a concurrent append). */
+    * cannot be lost to a concurrent append). The topic's lock files under
+    * `_locks` are left in place: a waiter may have one open, and unlinking
+    * it would let that waiter and a new creator lock two different files
+    * (see [[graft.core.Locks]]). */
   def deleteTopic(spark: SparkSession, wh: Warehouse, topic: String): Unit = {
     if (!exists(spark, wh, topic))
       throw new UnknownTopicException(s"unknown topic '$topic'")

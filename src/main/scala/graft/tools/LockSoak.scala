@@ -10,7 +10,7 @@ import graft.core.log.{LogReader, LogWriter}
 /** Concurrent multi-JVM appender soak for the cross-job lock manager
   * ([[graft.core.Locks]]): the SIGKILL specs prove per-partition write
   * safety for one contended set; this runs `appenders` SEPARATE JVMs
-  * (real processes — the exclusion under test is the O_EXCL lock FILE,
+  * (real processes — the exclusion under test is the kernel file lock,
   * not the in-process stripe table) appending `rounds` batches each into
   * ONE topic, alternating between
   *

@@ -1,37 +1,38 @@
 package graft
 
-import java.io.File
+import java.io.{BufferedReader, File, InputStreamReader}
 import java.nio.file.Files
+import java.util.concurrent.TimeUnit
+import scala.concurrent.{blocking, Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 import graft.core.Locks
-import graft.core.catalog.Warehouse
+import graft.core.catalog.{TopicCatalog, Warehouse}
+import graft.core.log.{LogReader, LogWriter}
 
 class LocksSpec extends SparkSpec {
 
   private def lockFile(wh: Warehouse, name: String): File =
     new File(s"${wh.root}/_locks/$name.lock")
 
-  test("stale lock from a crashed JVM is broken; acquirer proceeds") {
-    val wh = Warehouse(tmpDir("graft-locks-stale"))
-    val f = lockFile(wh, "topic-t")
-    f.getParentFile.mkdirs()
-    Files.writeString(f.toPath, "99999@deadhost 0\n")
-    assert(f.setLastModified(System.currentTimeMillis() - 3600 * 1000L))
-    val t0 = System.currentTimeMillis()
-    val r = Locks.withLock(wh, "topic-t", timeoutMs = 30000, staleMs = 2000) { 42 }
-    assert(r === 42)
-    assert(System.currentTimeMillis() - t0 < 15000, "stale lock must be broken, not waited out")
-    assert(!f.exists(), "lock released after body")
-  }
+  /** Another thread takes the lock with a short timeout: the previous
+    * holder's kernel lock and in-process lock are both gone. */
+  private def acquiresAtOnce(wh: Warehouse): Boolean =
+    Await.result(Future(Locks.withLock(wh, "topic-t", timeoutMs = 500)(true)), 30.seconds)
 
-  test("fresh lock held elsewhere blocks until timeout") {
-    val wh = Warehouse(tmpDir("graft-locks-held"))
+  test("a lock file left by a dead process does not block; acquirer proceeds") {
+    val wh = Warehouse(tmpDir("graft-locks-leftover"))
     val f = lockFile(wh, "topic-t")
     f.getParentFile.mkdirs()
-    Files.writeString(f.toPath, "99999@otherhost 0\n") // current mtime = live holder
-    intercept[IllegalStateException] {
-      Locks.withLock(wh, "topic-t", timeoutMs = 1500, staleMs = 60000) { fail("must not enter") }
-    }
-    assert(f.exists(), "a live foreign lock is never broken")
+    Files.writeString(f.toPath, "99999@deadhost 0 600000\n")
+    assert(f.setLastModified(System.currentTimeMillis() - 3600 * 1000L))
+    // the JVM's first lock loads the Hadoop configuration (~0.9 s cold)
+    Locks.withLock(wh, "warm-up")(())
+    val t0 = System.currentTimeMillis()
+    val r = Locks.withLock(wh, "topic-t", timeoutMs = 30000) { 42 }
+    assert(r === 42)
+    assert(System.currentTimeMillis() - t0 < 1000, "a bare file is not a lock")
+    assert(acquiresAtOnce(wh), "released after body")
   }
 
   test("reentrant within one thread") {
@@ -40,7 +41,7 @@ class LocksSpec extends SparkSpec {
       Locks.withLock(wh, "topic-t") { 7 }
     }
     assert(r === 7)
-    assert(!lockFile(wh, "topic-t").exists())
+    assert(acquiresAtOnce(wh), "the outer release frees the lock")
   }
 
   test("mutual exclusion across threads of one JVM") {
@@ -48,9 +49,6 @@ class LocksSpec extends SparkSpec {
     var inside = 0
     var maxInside = 0
     var total = 0
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration._
     val fs = (0 until 8).map { _ =>
       Future {
         Locks.withLock(wh, "topic-t") {
@@ -73,53 +71,99 @@ class LocksSpec extends SparkSpec {
     try {
       // exclusion comes from the lock FILE (the other JVM shares no striped lock)
       intercept[IllegalStateException] {
-        Locks.withLock(wh, "topic-t", timeoutMs = 800, staleMs = 600000) { fail("must not enter") }
+        Locks.withLock(wh, "topic-t", timeoutMs = 800) { fail("must not enter") }
       }
       // once the holder releases, acquisition succeeds promptly
-      assert(p.waitFor(30, java.util.concurrent.TimeUnit.SECONDS), "holder JVM must exit")
-      val r = Locks.withLock(wh, "topic-t", timeoutMs = 10000, staleMs = 600000) { 1 }
+      assert(p.waitFor(30, TimeUnit.SECONDS), "holder JVM must exit")
+      val r = Locks.withLock(wh, "topic-t", timeoutMs = 10000) { 1 }
       assert(r === 1)
     } finally p.destroyForcibly()
   }
 
-  test("cross-JVM: SIGKILLed holder's lock is broken via the stale horizon") {
+  test("cross-JVM: a SIGKILLed holder's lock is free at once") {
     val wh = Warehouse(tmpDir("graft-locks-kill"))
-    // the holder stamps ITS OWN horizon into the lock file (waiters judge
-    // staleness by the holder's declared cadence, not their own)
-    val p = spawnHolder(wh, holdMs = 600000, staleMs = 1500) // would hold 10 min
+    val p = spawnHolder(wh, holdMs = 600000) // would hold 10 min
     try {
-      p.destroyForcibly() // the crash: no finally, no delete — lock file remains
-      assert(p.waitFor(30, java.util.concurrent.TimeUnit.SECONDS))
-      val f = lockFile(wh, "topic-t")
-      assert(f.exists(), "crashed holder leaves its lock file")
-      // age the file past the horizon (in production the heartbeat is dead,
-      // so mtime stops advancing and real time does this)
-      assert(f.setLastModified(System.currentTimeMillis() - 3600 * 1000L))
-      val r = Locks.withLock(wh, "topic-t", timeoutMs = 30000, staleMs = 2000) { 2 }
-      assert(r === 2, "stale lock of a dead process is broken, not waited out")
+      p.destroyForcibly() // the crash: no finally, no release — lock file remains
+      assert(p.waitFor(30, TimeUnit.SECONDS))
+      assert(lockFile(wh, "topic-t").exists(), "crashed holder leaves its lock file")
+      val r = Locks.withLock(wh, "topic-t", timeoutMs = 5000) { 2 }
+      assert(r === 2, "the kernel released the dead process's lock")
     } finally p.destroyForcibly()
   }
 
-  /** Launch graft.tools.LockHold in a fresh JVM and wait for its HELD marker. */
-  private def spawnHolder(
-      wh: Warehouse, holdMs: Long,
-      staleMs: Long = graft.core.Locks.DefaultStaleMs,
-      name: String = "topic-t"): Process = {
+  test("two spellings of one warehouse dir share one lock") {
+    val dir = tmpDir("graft-locks-spell")
+    val link = new File(tmpDir("graft-locks-link"), "wh").toPath
+    Files.createSymbolicLink(link, new File(dir).toPath)
+    val wh = Warehouse(dir)
+    val held = new java.util.concurrent.CountDownLatch(1)
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val holder = Future(Locks.withLock(wh, "topic-t") { held.countDown(); done.await() })
+    assert(held.await(30, TimeUnit.SECONDS))
+    try {
+      // a second channel opened and closed on the held file would drop the
+      // holder's kernel lock: both spellings must queue on the holder's entry
+      for (other <- Seq(Warehouse(link.toString), Warehouse(s"$dir/./"))) {
+        val tried = Future(Locks.withLock(other, "topic-t", timeoutMs = 300)(fail("must not enter")))
+        intercept[IllegalStateException](Await.result(tried, 30.seconds))
+      }
+      val p = startHolder(wh, holdMs = 0)
+      try {
+        val childHeld = heldMarker(p)
+        assert(!within(childHeld, 5000), "another process acquired a held lock")
+        done.countDown()
+        Await.result(holder, 30.seconds)
+        assert(within(childHeld, 30000), "the child acquires once the holder releases")
+      } finally p.destroyForcibly()
+    } finally done.countDown()
+  }
+
+  test("a SIGKILLed holder does not wedge appends") {
+    import spark.implicits._
+    val wh = Warehouse(tmpDir("graft-locks-append"))
+    TopicCatalog.createTopic(spark, wh, "t", 2)
+    def records(from: Int) = (from until from + 100)
+      .map(i => (i.toLong, 1700000000000L + i, s"k${i % 7}", s"v$i"))
+      .toDF("id", "ts", "key", "value")
+    LogWriter.append(spark, wh, "t", records(0), "id")
+    val p = spawnHolder(wh, holdMs = 600000, name = "topic-t#p1")
+    p.destroyForcibly()
+    assert(p.waitFor(30, TimeUnit.SECONDS))
+    // default lock timeout: only the kernel's release lets this finish in time
+    val appended = Future(LogWriter.append(spark, wh, "t", records(100), "id"))
+    assert(Await.result(appended, 20.seconds).records === 100)
+    val perPart = LogReader.scan(spark, wh, "t").collect()
+      .groupBy(_.getAs[Int]("partition")).values.map(_.map(_.getAs[Long]("offset")).sorted.toSeq)
+    assert(perPart.map(_.size).sum === 200)
+    perPart.foreach(offs => assert(offs === offs.indices.map(_.toLong), "dense from 0"))
+  }
+
+  private def startHolder(wh: Warehouse, holdMs: Long, name: String = "topic-t"): Process = {
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     val cp = System.getProperty("java.class.path")
-    val p = new ProcessBuilder(
-      javaBin, "-cp", cp, "graft.tools.LockHold", wh.root, name,
-      holdMs.toString, staleMs.toString)
+    new ProcessBuilder(javaBin, "-cp", cp, "graft.tools.LockHold", wh.root, name, holdMs.toString)
       .redirectErrorStream(true).start()
-    val reader = new java.io.BufferedReader(
-      new java.io.InputStreamReader(p.getInputStream))
-    val deadline = System.currentTimeMillis() + 30000
-    var line = ""
-    while (line != "HELD" && System.currentTimeMillis() < deadline) {
-      line = reader.readLine()
-      if (line == null) throw new IllegalStateException("holder JVM died before HELD")
+  }
+
+  /** Completes true when the child prints HELD, false if its output ends
+    * first. One reader per child: it consumes every line it reads. */
+  private def heldMarker(p: Process): Future[Boolean] = {
+    val reader = new BufferedReader(new InputStreamReader(p.getInputStream))
+    Future(blocking(Iterator.continually(reader.readLine()).takeWhile(_ != null).contains("HELD")))
+  }
+
+  private def within(f: Future[Boolean], waitMs: Long): Boolean =
+    try Await.result(f, waitMs.millis)
+    catch { case _: java.util.concurrent.TimeoutException => false }
+
+  /** Launch graft.tools.LockHold in a fresh JVM and wait for its HELD marker. */
+  private def spawnHolder(wh: Warehouse, holdMs: Long, name: String = "topic-t"): Process = {
+    val p = startHolder(wh, holdMs, name)
+    if (!within(heldMarker(p), 30000)) {
+      p.destroyForcibly()
+      throw new IllegalStateException("holder JVM did not print HELD within 30s")
     }
-    assert(line === "HELD", "holder must acquire within 30s")
     p
   }
 
@@ -157,40 +201,15 @@ class LocksSpec extends SparkSpec {
     } finally { short.destroyForcibly(); long.destroyForcibly() }
   }
 
-  test("release never deletes a lock re-acquired by another process") {
-    val wh = Warehouse(tmpDir("graft-locks-fence"))
-    val f = lockFile(wh, "topic-t")
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration._
-    val holder = Future {
-      Locks.withLock(wh, "topic-t", staleMs = 1000) {
-        // Simulate a stale-break + re-acquire while we (believe we) hold it:
-        // the path now carries a FOREIGN owner's stamp.
-        Files.writeString(f.toPath, "55555@usurper 1 600000\n")
-        Thread.sleep(1200) // ≥ one heartbeat period: fencing notices too
-        "ok"
-      }
-    }
-    assert(Await.result(holder, 30.seconds) === "ok")
-    assert(f.exists(), "release must not delete the new owner's lock file")
-    assert(Files.readString(f.toPath).startsWith("55555@usurper"),
-      "the foreign stamp must be untouched by our release")
-  }
-
   test("held lock survives past the stale horizon (heartbeat refreshes mtime)") {
     val wh = Warehouse(tmpDir("graft-locks-beat"))
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration._
     val holder = Future {
-      Locks.withLock(wh, "topic-t", staleMs = 1000) { Thread.sleep(2500); "held" }
+      Locks.withLock(wh, "topic-t") { Thread.sleep(2500); "held" }
     }
     Thread.sleep(300) // let the holder acquire
-    // A contender with the same short horizon must NOT break the live lock
-    // (in-process it queues on the JVM lock; the file stays fresh throughout).
+    // a long hold is never broken: the contender waits it out
     val contender = Future {
-      Locks.withLock(wh, "topic-t", timeoutMs = 10000, staleMs = 1000) { "after" }
+      Locks.withLock(wh, "topic-t", timeoutMs = 10000) { "after" }
     }
     assert(Await.result(holder, 30.seconds) === "held")
     assert(Await.result(contender, 30.seconds) === "after")
