@@ -40,6 +40,21 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** Scheduler-latency floor of THIS boot: p50 wall (ms) of 21 trivial
+    * 1-task jobs after 5 warm-ups. The composed pipelines are
+    * driver-job-BOUND at sf0.1 (~15-45 jobs each), so when this floor moves
+    * between boots — measured 12 → 50 ms p50 across two boots of this box
+    * with zero code change — their wall-times move with it. */
+  def jobP50Ms(spark: SparkSession): Double = {
+    (1 to 5).foreach(_ => spark.range(0, 1, 1, 1).count()) // warm path
+    val ts = (1 to 21).map { _ =>
+      val t0 = System.nanoTime()
+      spark.range(0, 1, 1, 1).count()
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    ts(ts.size / 2)
+  }
+
   private def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
@@ -145,23 +160,11 @@ object Bench {
     TopicCatalog.createTopic(spark, wh, "warmup", 2)
     LogWriter.append(spark, wh, "warmup", events.limit(20000), "event_id")
     (0 until 2).foreach(p => LogReader.poll(spark, wh, "warmup", p, 0, 50000).count())
-    // Scheduler-latency floor of THIS boot: p50 wall of a trivial 1-task
-    // job. The composed pipelines are driver-job-BOUND at sf0.1 (~15-45
-    // jobs each), so when this floor moves between boots — measured
-    // 12 → 50 ms p50 across two boots of this box with zero code change —
-    // their wall-times move with it. Stamping the floor (and the run's
-    // timed-job count below) makes that drift mechanically explainable
-    // instead of masquerading as a plan regression; benchcheck.py uses
-    // both to separate environment from regression.
-    val jobP50Ms = {
-      (1 to 5).foreach(_ => spark.range(0, 1, 1, 1).count()) // warm path
-      val ts = (1 to 21).map { _ =>
-        val t0 = System.nanoTime()
-        spark.range(0, 1, 1, 1).count()
-        (System.nanoTime() - t0) / 1e6
-      }.sorted
-      ts(ts.size / 2)
-    }
+    // Stamping the floor (and the run's timed-job count below) makes
+    // scheduler drift mechanically explainable instead of masquerading as
+    // a plan regression; benchcheck.py uses both to separate environment
+    // from regression.
+    val jobP50Ms = Bench.jobP50Ms(spark)
     // Ingest paths are append-only, so best-of-2 runs each append twice
     // into sibling topics and keeps the faster — same co-tenant defense as
     // the query passes (contention only ever ADDS time, so min is the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import graft.core.Fs
 import graft.core.catalog.{TopicCatalog, Warehouse}
-import graft.core.log.LogIndex
+import graft.core.log.{LogIndex, LogRetention}
 
 /** Admin/metadata surface — the Spark-native analog of the reference's
   * FluxAdminClient + controller metadata lookups.
@@ -173,8 +173,7 @@ object Admin {
       topic: String,
       deep: Boolean = false): TopicIntegrity = {
     TopicCatalog.topicInfo(spark, wh, topic) // throws UnknownTopicException
-    val logDir = new org.apache.hadoop.fs.Path(wh.logDir(topic))
-    val fs = Fs(logDir)
+    val fs = Fs(wh.logDir(topic))
     val data = LogIndex.entries(spark, wh, topic).filter(_.isData)
 
     // 1. indexed-but-absent (THE hole ignoreMissingFiles masks)
@@ -200,18 +199,7 @@ object Admin {
 
     // orphans: on-disk data files no index row references (crash debris —
     // vacuum's jurisdiction, reported but not failed)
-    val indexedPaths =
-      data.map(e => new org.apache.hadoop.fs.Path(e.file).toUri.getPath).toSet
-    val orphans =
-      Fs.list(logDir).toSeq
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith("partition="))
-        .flatMap(d => fs.listStatus(d.getPath).toSeq)
-        .filter { f =>
-          val n = f.getPath.getName
-          !f.isDirectory && !n.startsWith("_") && !n.startsWith(".") &&
-            !indexedPaths.contains(f.getPath.toUri.getPath)
-        }
-        .map(_.getPath.toString).sorted
+    val orphans = LogRetention.orphanFiles(wh, topic, data).map(_.toString)
 
     // 3. deep: on-disk record count per file vs the index row — one job
     // over the files check 1 proved present (a missing file would turn

@@ -83,61 +83,63 @@ object LogRetention {
     }
 
   /** Garbage-collect a topic's UNREFERENCED storage: data files in live
-    * partition dirs that no index row points to (a crashed append that died
-    * between the staged-file rename and the index-delta write), and
-    * leftover `.staging-*` / `.compact-*` dirs from appends that died
-    * mid-write. Readers only ever see indexed files, so orphans are
-    * invisible — but at 100 TB every crashed job's output is real money on
-    * disk forever. Runs under the full topic lock (an in-flight append's
-    * just-renamed, not-yet-indexed files must not be swept: the lock
-    * guarantees no append is between those two steps). Returns deleted
-    * paths. */
+    * partition dirs that no index row points to (an append or compaction
+    * that died between writing its files and landing its index rows), the
+    * crashed index-delta staging of `MetaTable.append`, and any dot-dir
+    * in the topic dir (older versions staged appends and compactions in
+    * `.staging-*` / `.compact-*` dirs there). Readers only ever see indexed
+    * files, so orphans are invisible — but at 100 TB every crashed job's
+    * output is real money on disk forever. Runs under the full topic lock
+    * (an in-flight append's written, not-yet-indexed files must not be
+    * swept: the lock guarantees no append is between those two steps).
+    * Returns deleted paths. */
   def vacuum(spark: SparkSession, wh: Warehouse, topic: String): Seq[String] =
     Locks.withTopicLock(wh, topic,
         graft.core.catalog.TopicCatalog.numPartitions(spark, wh, topic)) {
       val logDir = new Path(wh.logDir(topic))
       val fs = Fs(logDir)
       if (!fs.exists(logDir)) return Seq.empty
-      val indexed = LogIndex.entries(spark, wh, topic).filter(_.isData)
-        .map(e => new Path(e.file).toUri.getPath).toSet
-      val deleted = Seq.newBuilder[String]
       // crashed index-delta staging (LogIndex.appendDelta died between its
       // parquet write and the rename-in): `.delta=<topic>=<uid>` dirs under
       // the index base. `=` cannot appear in a validated topic name, so the
       // prefix match can never claim another topic's in-flight delta.
-      Fs.list(new Path(wh.indexBase)).foreach { d =>
-        if (d.isDirectory && d.getPath.getName.startsWith(s".delta=$topic=")) {
-          fs.delete(d.getPath, true)
-          deleted += d.getPath.toString
-        }
-      }
-      fs.listStatus(logDir).foreach { top =>
-        val name = top.getPath.getName
-        if (top.isDirectory && (name.startsWith(".staging-") || name.startsWith(".compact-"))) {
-          // a LIVE append's staging dir cannot exist here: we hold every
-          // partition lock, so any staging dir is a crashed append's
-          fs.delete(top.getPath, true)
-          deleted += top.getPath.toString
-        } else if (top.isDirectory && name.startsWith("partition=")) {
-          fs.listStatus(top.getPath).foreach { f =>
-            val fn = f.getPath.getName
-            if (!f.isDirectory && !fn.startsWith("_") && !fn.startsWith(".") &&
-                !indexed.contains(f.getPath.toUri.getPath)) {
-              fs.delete(f.getPath, false)
-              deleted += f.getPath.toString
-            }
-          }
-        }
-      }
-      deleted.result()
+      val deltas = Fs.list(new Path(wh.indexBase)).toSeq
+        .filter(d => d.isDirectory && d.getPath.getName.startsWith(s".delta=$topic="))
+      val dotDirs = Fs.list(logDir).toSeq
+        .filter(d => d.isDirectory && d.getPath.getName.startsWith("."))
+      val dirs = (deltas ++ dotDirs).map(_.getPath)
+      val files = orphanFiles(wh, topic, LogIndex.entries(spark, wh, topic))
+      dirs.foreach(fs.delete(_, true))
+      files.foreach(fs.delete(_, false))
+      (dirs ++ files).map(_.toString)
     }
 
+  /** Data files in the topic's `partition=<p>/` dirs that no data row of
+    * `entries` references, sorted — the crash debris [[vacuum]] deletes and
+    * [[graft.core.admin.Admin.verifyTopic]] reports. `_`- and `.`-prefixed
+    * names (checksum sidecars) are not data files. */
+  private[graft] def orphanFiles(
+      wh: Warehouse, topic: String, entries: Array[LogIndex.Entry]): Seq[Path] = {
+    val indexed = entries.filter(_.isData).map(e => new Path(e.file).toUri.getPath).toSet
+    Fs.list(new Path(wh.logDir(topic))).toSeq
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("partition="))
+      .flatMap(d => Fs.list(d.getPath).toSeq)
+      .filter { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".") &&
+          !indexed.contains(f.getPath.toUri.getPath)
+      }
+      .map(_.getPath).sortBy(_.toString)
+  }
+
   /** Log compaction: keep only the LATEST record per key per partition
-    * (Kafka-style compacted topic), rewritten as fresh segments. Offsets of
-    * surviving records are preserved (compaction never reassigns offsets).
-    * The new index — compacted file entries plus any surviving tombstones —
-    * lands in ONE swap, so there is no window where the topic's index is
-    * empty; old data files are deleted last. */
+    * (Kafka-style compacted topic), rewritten as fresh segments written in
+    * place by the [[SegmentWriter]]. Offsets of surviving records are
+    * preserved (compaction never reassigns offsets). The new index —
+    * compacted file entries plus any surviving tombstones — lands in ONE
+    * swap, which is the commit: there is no window where the topic's index
+    * is empty, a crash before it leaves only unindexed files for [[vacuum]],
+    * and old data files are deleted last. */
   def compact(
       spark: SparkSession,
       wh: Warehouse,
@@ -155,22 +157,16 @@ object LogRetention {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-    val logDir = wh.logDir(topic)
-    val staging =
-      s"$logDir/.compact-${java.util.UUID.randomUUID().toString.take(8)}"
-    survivors
+    // each survivor partition's rows in one task, offset-ordered: one
+    // file per partition, written in place; the index swap commits them
+    val rows = survivors
+      .select("partition", "offset", "ts", "key", "value", "headers")
       .repartition(col("partition"))
       .sortWithinPartitions(col("partition"), col("offset"))
-      .write.mode("overwrite").partitionBy("partition").parquet(staging)
-    val moved = LogWriter.commitStaged(staging, logDir)
-
-    val indexRows = moved.map { f =>
-      val st = LogWriter.readFooterStats(f)
-      LogIndex.Entry(st.partition, st.file, st.baseOffset, st.endOffset, st.count)
-    }
+    val indexRows = SegmentWriter(spark, wh.logDir(topic), rows.schema).write(rows)
     // tombstones of partitions with no compacted data survive the rewrite
-    val movedParts = indexRows.map(_.partition).toSet
-    val hwms = entries.filter(e => !e.isData && !movedParts.contains(e.partition))
+    val written = indexRows.map(_.partition).toSet
+    val hwms = entries.filter(e => !e.isData && !written.contains(e.partition))
     LogIndex.replace(wh, topic, indexRows ++ hwms)
 
     dataEntries.foreach { e =>

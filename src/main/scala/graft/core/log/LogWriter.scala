@@ -1,14 +1,10 @@
 package graft.core.log
 
-import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Ascending, BoundReference, GenericInternalRow, InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import scala.jdk.CollectionConverters._
@@ -49,22 +45,22 @@ case class AppendResult(
   * with no Spark job, like the reference broker appending a batch to its
   * local segment (Log.java:93-103); four jobs of per-job overhead would
   * otherwise dominate a small batch. Every other frame takes the Spark
-  * path, [[assignOffsets]] plus a partitioned parquet write, so a
-  * distributed frame is never collected. Both paths stage the same
-  * `partition=<p>/` layout through Spark's parquet writer and share one
-  * commit.
+  * path, [[assignOffsets]] plus one job whose tasks write their offset
+  * runs, so a distributed frame is never collected. Both paths write each
+  * file once, at its final `partition=<p>/` path, through one
+  * [[SegmentWriter]].
   *
   * Readers only see files through the index, and the index row is written
-  * after the data: a crashed append leaves orphan files that are never read,
-  * and a replayed `batchId` is skipped — that is the exactly-once contract
-  * for `foreachBatch` ingestion (SURVEY.md §7.4.2).
+  * after the data, so the index delta is the commit: a crashed append
+  * leaves unindexed files that are never read, and a replayed `batchId` is
+  * skipped — that is the exactly-once contract for `foreachBatch` ingestion
+  * (SURVEY.md §7.4.2).
   *
-  * Commit cost is independent of topic size: each batch writes into a fresh
-  * staging dir (listing it is O(files in THIS batch)) and the files are
-  * renamed into the live partition dirs — never a before/after walk of the
-  * whole topic tree. The index delta is one small file per append, and the
-  * topic's index auto-compacts past [[LogWriter.MaxIndexFiles]] deltas, so
-  * the driver-side index reload stays bounded at millions of segments.
+  * Commit cost is independent of topic size: the writer returns each file's
+  * index row, so nothing lists, renames or re-reads a file. The index delta
+  * is one small file per append, and the topic's index auto-compacts past
+  * [[LogWriter.MaxIndexFiles]] deltas, so the driver-side index reload
+  * stays bounded at millions of segments.
   *
   * Cross-job writes are serialized per (topic, partition) with warehouse
   * lock files ([[graft.core.Locks]]), matching the reference's
@@ -124,7 +120,20 @@ object LogWriter {
       ord: Column,
       numPartitions: Int,
       bases: Map[Int, Long] = Map.empty,
-      parallelism: Option[Int] = None): DataFrame = {
+      parallelism: Option[Int] = None): DataFrame =
+    numberRuns(df, explicitPartition, key, ord, numPartitions, bases, parallelism)._2
+
+  /** [[assignOffsets]] plus the count pass's per-task (partition, rows)
+    * runs, which tell [[append]] every partition the batch routes to
+    * before anything is written. */
+  private def numberRuns(
+      df: DataFrame,
+      explicitPartition: Column,
+      key: Column,
+      ord: Column,
+      numPartitions: Int,
+      bases: Map[Int, Long],
+      parallelism: Option[Int]): (Array[Array[(Int, Long)]], DataFrame) = {
     val spark = df.sparkSession
     val routed = df.withColumn(
       "partition",
@@ -191,8 +200,8 @@ object LogWriter {
         proj(joined(r, extra)): org.apache.spark.sql.catalyst.InternalRow
       }
     }
-    org.apache.spark.sql.GraftInternal.internalCreateDataFrame(
-      spark, numbered, outSchema)
+    (counts, org.apache.spark.sql.GraftInternal.internalCreateDataFrame(
+      spark, numbered, outSchema))
   }
 
   /** Append a batch of records to a topic's log.
@@ -206,13 +215,14 @@ object LogWriter {
     * (a `createDataFrame` or `toDF` of driver-side rows), its rows are
     * routed, sorted by `ord` with Spark's ordering, numbered and written on
     * the driver with no Spark job ([[writeLocal]]). Any other plan — a
-    * parquet scan, `spark.range`, a join — takes [[assignOffsets]] and a
-    * partitioned Spark write; a plan with a non-local leaf goes there
-    * without being optimized twice. Either way the staged files commit through
-    * the same tail: stray check, rename, index delta. A record that routes
+    * parquet scan, `spark.range`, a join — takes [[assignOffsets]] and one
+    * job whose tasks write their offset runs; a plan with a non-local leaf
+    * goes there without being optimized twice. Either way the
+    * [[SegmentWriter]] writes each file once at its final path and returns
+    * its index row, and the index delta commits them. A record that routes
     * to no partition (no key, no in-range explicit partition and a null
     * ord) fails the append with an `IllegalArgumentException` before
-    * anything is staged.
+    * anything is written.
     *
     * @param partitions when given, the append declares it only writes these
     *                   partitions and takes ONLY those partitions' locks —
@@ -222,7 +232,7 @@ object LogWriter {
     *                   (PartitionWriteManager.java:33-84). Enforcement is on
     *                   the ROUTED outcome: any record that routes outside
     *                   the declared set aborts the append before anything
-    *                   commits (callers normally pin routing with
+    *                   is written (callers normally pin routing with
     *                   `explicit_partition`; a record without it whose hash
     *                   route happens to land inside the set is accepted).
     *                   When absent the append routes freely and holds every
@@ -269,78 +279,50 @@ object LogWriter {
          else lit(null).cast(Schemas.headers)).as("headers"))
 
       val logDir = wh.logDir(topic)
-      // Stage into a dot-dir inside the topic dir, then rename the files
-      // into the live partition dirs: new-file discovery lists ONLY the
-      // staging dir — O(files in this batch), not O(files ever written).
-      val staging =
-        s"$logDir/.staging-${java.util.UUID.randomUUID().toString.take(8)}"
       val routed = records.select(
         PartitionRouter.route(explicitP, keyCol, col(ordCol), n).as("partition") +:
           col(ordCol).as("ord") +: stored: _*)
+      // a declared-partition append must not route anything outside its
+      // locked set; rejected before anything is written
+      def checkDeclared(routedTo: Iterable[Int]): Unit = partitions.foreach { _ =>
+        val stray = routedTo.toSeq.distinct.filterNot(locked.contains).map(p => s"partition=$p")
+        if (stray.nonEmpty) throw new IllegalArgumentException(
+          s"records routed to ${stray.sorted.mkString(",")} outside " +
+            s"the declared partition set ${locked.mkString(",")} — nothing was committed")
+      }
       // Only a plan whose leaves are all local can optimize to driver-side
       // rows (an empty result aside, which the Spark path writes the same),
       // so any other frame — a curation join — skips that optimizer pass.
       val local: Option[LocalRelation] = Some(routed.queryExecution)
         .filter(_.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]))
         .map(_.optimizedPlan).collect { case l: LocalRelation => l }
-      // the driver path knows its files' offset ranges; the Spark path's
-      // come from the footers after the commit
-      val written: Option[Seq[FileStats]] = local match {
+      val written: Seq[LogIndex.Entry] = local match {
         case Some(l) =>
-          Some(writeLocal(spark, l, ordCol, bases, staging, logDir, conf))
+          if (l.data.exists(_.isNullAt(0))) throw nullRoute(ordCol)
+          checkDeclared(l.data.map(_.getInt(0)))
+          writeLocal(spark, l, bases, logDir, conf)
         case None =>
-          // No re-shuffle before the write: assignOffsets left the rows
-          // range-grouped and sorted by (partition, offset), so each task
-          // streams its contiguous offset runs straight into the dynamic-
-          // partition writer — a big single-partition batch writes from
-          // MANY tasks in parallel (disjoint offset ranges per file keep the
-          // index exact), where a `repartition(n, partition)` here would
-          // funnel it back into one.
-          assignOffsets(records, explicitP, keyCol, col(ordCol), n, bases)
-            .select(col("partition") +: col("offset") +: stored: _*)
-            .sortWithinPartitions(col("partition"), col("offset"))
-            .write
-            .mode("overwrite")
-            .option("maxRecordsPerFile", conf.maxRecordsPerFile)
-            .option("compression", conf.compression)
-            .partitionBy("partition")
-            .parquet(staging)
-          None
+          // No re-shuffle or sort before the write: numberRuns left each
+          // task's rows range-grouped and sorted by (partition, offset), so
+          // each task cuts its contiguous offset runs straight into files —
+          // a big single-partition batch writes from MANY tasks in parallel
+          // (disjoint offset ranges per file keep the index exact), where a
+          // `repartition(n, partition)` here would funnel it back into one.
+          val (runs, numbered) =
+            numberRuns(records, explicitP, keyCol, col(ordCol), n, bases, None)
+          checkDeclared(runs.flatMap(_.map(_._1)))
+          val rows = numbered.select(col("partition") +: col("offset") +: stored: _*)
+          SegmentWriter(spark, logDir, rows.schema, conf.maxRecordsPerFile,
+            Map("compression" -> conf.compression)).write(rows)
       }
-      // a declared-partition append must not have routed anything outside
-      // its locked set; reject BEFORE the staged files become visible
-      partitions.foreach { _ =>
-        val sp = new Path(staging)
-        val lockedSet = locked.toSet
-        // non-numeric dirs are strays by definition — never let a parse
-        // failure skip cleanup
-        val stray = Fs.list(sp).map(_.getPath.getName)
-          .filter(_.startsWith("partition="))
-          .filterNot(n => scala.util.Try(
-            n.substring("partition=".length).toInt).toOption.exists(lockedSet))
-        if (stray.nonEmpty) {
-          Fs(sp).delete(sp, true)
-          throw new IllegalArgumentException(
-            s"records routed to ${stray.sorted.mkString(",")} outside " +
-              s"the declared partition set ${locked.mkString(",")} — nothing was committed")
-        }
-      }
-      val newFiles = commitStaged(staging, logDir)
-
-      // Index the Spark path's files from their parquet FOOTERS (offset
-      // column min/max + row count) — no Spark job, no data re-read; files
-      // are written offset-sorted so the footer stats are exact. One footer
-      // read per new file, parallelized on the driver.
-      val stats = written.getOrElse(inParallel(newFiles)(readFooterStats))
-      val ranges: Map[Int, (Long, Long)] = if (stats.isEmpty) Map.empty else {
-        LogIndex.appendDelta(wh, topic, stats.map(s =>
-          LogIndex.Entry(s.partition, s.file, s.baseOffset, s.endOffset, s.count, batchId)))
-        stats.groupBy(_.partition).map { case (p, ss) =>
-          p -> (ss.map(_.baseOffset).min, ss.map(_.endOffset).max)
+      val ranges: Map[Int, (Long, Long)] = if (written.isEmpty) Map.empty else {
+        LogIndex.appendDelta(wh, topic, written.map(_.copy(batchId = batchId)))
+        written.groupBy(_.partition).map { case (p, es) =>
+          p -> (es.map(_.baseOffset).min, es.map(_.endOffset).max)
         }
       }
       AppendResult(topic, batchId,
-        ranges, stats.map(_.count).sum)
+        ranges, written.map(_.count).sum)
     }
     compactIndexIfNeeded(spark, wh, topic, n)
     result
@@ -348,24 +330,19 @@ object LogWriter {
 
   /** The driver path of [[append]]: `local` holds the routed projection's
     * rows (partition, ord, ts, key, value, headers), already evaluated by
-    * the optimizer, so nothing here runs a Spark job. Each partition's rows
-    * are sorted by `ord` with Spark's ordering for its type (ascending,
-    * nulls first, as `sortWithinPartitions`), numbered from `bases`, and
-    * cut into files of at most `maxRecordsPerFile` rows. The files are
-    * written in parallel through Spark's own parquet writer
-    * (`ParquetFileFormat.prepareWrite`), so they carry the Spark path's
-    * file layout, into `staging/partition=<p>/`. Returns each file's index
-    * stats under its committed path, so no footer is read back. */
+    * the optimizer and routed to a partition, so nothing here runs a
+    * Spark job. Each partition's rows are sorted by `ord` with Spark's
+    * ordering for its type (ascending, nulls first, as
+    * `sortWithinPartitions`), numbered from `bases`, and cut into chunks of
+    * at most `maxRecordsPerFile` rows, which the [[SegmentWriter]] writes
+    * in parallel, one file each. */
   private def writeLocal(
       spark: SparkSession,
       local: LocalRelation,
-      ordCol: String,
       bases: Map[Int, Long],
-      staging: String,
       logDir: String,
-      conf: ProducerConfig): Seq[FileStats] = {
+      conf: ProducerConfig): Seq[LogIndex.Entry] = {
     val rows = local.data
-    if (rows.exists(_.isNullAt(0))) throw nullRoute(ordCol)
     val fields = local.schema.fields
     val byOrd = new InterpretedOrdering(Seq(
       SortOrder(BoundReference(1, fields(1).dataType, nullable = true), Ascending)))
@@ -380,37 +357,26 @@ object LogWriter {
           (p, base + i.toLong * perFile, c)
         }
       }
-    // the stored columns: offset, then the projection's ts, key, value, headers
-    val dataSchema = StructType(StructField("offset", LongType, nullable = false) +:
+    // the writer's rows: partition, offset, then the projection's ts, key,
+    // value, headers (one reused buffer: the writer consumes each row at once)
+    val schema = StructType(fields(0) +: StructField("offset", LongType, nullable = false) +:
       fields.drop(2).toSeq)
-    val types = dataSchema.fields.map(_.dataType)
-    // Job copies the shared conf; prepareWrite sets the parquet keys on the copy
-    val job = Job.getInstance(Fs.conf)
-    val factory = new ParquetFileFormat().prepareWrite(
-      spark, job, Map("compression" -> conf.compression), dataSchema)
-    val uuid = java.util.UUID.randomUUID()
+    val types = schema.fields.map(_.dataType)
+    val writer = SegmentWriter(spark, logDir, schema, perFile.toLong,
+      Map("compression" -> conf.compression))
     inParallel(chunks.zipWithIndex) { case ((p, first, rs), i) =>
-      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
-        new TaskAttemptID("graft", 0, TaskType.MAP, i, 0))
-      val name = f"part-$i%05d-$uuid.c000${factory.getFileExtension(ctx)}"
-      val writer = factory.newInstance(s"$staging/partition=$p/$name", dataSchema, ctx)
-      try {
-        val out = new GenericInternalRow(types.length)
-        var offset = first
-        rs.foreach { r =>
-          out.update(0, offset)
-          var c = 1
-          while (c < types.length) {
-            out.update(c, if (r.isNullAt(c + 1)) null else r.get(c + 1, types(c)))
-            c += 1
-          }
-          writer.write(out)
-          offset += 1
+      val out = new GenericInternalRow(types.length)
+      out.update(0, p)
+      writer.write(rs.iterator.zipWithIndex.map { case (r, k) =>
+        out.update(1, first + k)
+        var c = 2
+        while (c < types.length) {
+          out.update(c, if (r.isNullAt(c)) null else r.get(c, types(c)))
+          c += 1
         }
-      } finally writer.close()
-      FileStats(p, new Path(s"$logDir/partition=$p/$name").toString,
-        first, first + rs.size - 1, rs.size.toLong)
-    }
+        out
+      }, i, 0)
+    }.flatten
   }
 
   private def nullRoute(ord: String) = new IllegalArgumentException(
@@ -421,40 +387,6 @@ object LogWriter {
   private def inParallel[A, B](xs: Seq[A])(f: A => B): Seq[B] =
     xs.asJava.parallelStream().map[B](a => f(a))
       .collect(java.util.stream.Collectors.toList[B]).asScala.toSeq
-
-  private[log] case class FileStats(
-      partition: Int, file: String, baseOffset: Long, endOffset: Long, count: Long)
-
-  /** Offset range + row count of one committed file, from its parquet
-    * footer column statistics (the `offset` column is LongType and always
-    * present, so min/max are exact). Partition id parses from the
-    * `partition=<p>` directory. */
-  private[log] def readFooterStats(file: String): FileStats = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    val path = new Path(file)
-    val partition = path.getParent.getName match {
-      case s if s.startsWith("partition=") => s.substring("partition=".length).toInt
-      case other => throw new IllegalStateException(s"unexpected log layout: $other")
-    }
-    val reader = ParquetFileReader.open(Fs.inputFile(path))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala
-      var lo = Long.MaxValue
-      var hi = Long.MinValue
-      var n = 0L
-      blocks.foreach { b =>
-        n += b.getRowCount
-        b.getColumns.asScala.find(_.getPath.toDotString == "offset").foreach { c =>
-          val st = c.getStatistics
-          if (st != null && st.hasNonNullValue) {
-            lo = math.min(lo, st.genericGetMin.asInstanceOf[java.lang.Long])
-            hi = math.max(hi, st.genericGetMax.asInstanceOf[java.lang.Long])
-          }
-        }
-      }
-      FileStats(partition, file, lo, hi, n)
-    } finally reader.close()
-  }
 
   /** One index delta file lands per append; past this many the topic's
     * index is rewritten into one file. Each index row is thus rewritten
@@ -478,41 +410,4 @@ object LogWriter {
       graft.core.Locks.withTopicLock(wh, topic, numPartitions) {
         if (indexNeedsCompaction(wh, topic)) LogIndex.compactIndex(spark, wh, topic)
       }
-
-  /** Move every staged data file into its live `partition=<p>` dir and drop
-    * the staging dir; returns the final paths. Spark part-file names embed
-    * the write job's UUID, so names cannot collide with earlier appends.
-    * Listing here is over the staging dir only, two `listStatus` levels
-    * (`partition=<p>/` dirs, then their files): a recursive `listFiles`
-    * loads owner and permissions for every file it returns, which the local
-    * filesystem does by forking a process — 20–35 ms for 4 files against
-    * ~0.2 ms. Shared with compaction ([[LogRetention.compact]]), which
-    * stages its rewritten segments the same way. */
-  private[log] def commitStaged(staging: String, logDir: String): Seq[String] = {
-    val sp = new Path(staging)
-    val fs = Fs(sp)
-    val moves = Fs.list(sp).toSeq
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("partition="))
-      .flatMap(d => fs.listStatus(d.getPath))
-      .filter { f =>
-        val name = f.getPath.getName
-        f.isFile && !name.startsWith("_") && !name.startsWith(".")
-      }
-      .map { f =>
-        val p = f.getPath
-        p -> new Path(s"$logDir/${p.getParent.getName}/${p.getName}")
-      }
-    // One mkdirs per destination partition dir, then the renames fan out on
-    // a parallel stream: on a real DFS each rename is a metadata RPC, and a
-    // large batch stages thousands of part-files — paying those RPCs
-    // serially inside the locked commit window would make commit latency
-    // O(files); the footer reads just after this are already parallel.
-    moves.map(_._2.getParent).distinct.foreach(fs.mkdirs)
-    java.util.Arrays.stream(moves.toArray).parallel().forEach { m =>
-      if (!fs.rename(m._1, m._2))
-        throw new IllegalStateException(s"failed to commit staged file ${m._1.getName}")
-    }
-    fs.delete(sp, true)
-    moves.map(_._2.toString).sorted
-  }
 }

@@ -19,10 +19,9 @@ import graft.core.Fs
   *
   * Shape: one bounded driver listing of the partition directories, then
   * per directory an isolated read → single-file staging write → move-in →
-  * delete-old sequence (the rename-aside discipline of
-  * [[graft.core.log.LogRetention.compact]], confined to one directory at a
-  * time so the index stays live and a crash can damage at most one
-  * directory). Directories are independent, so they compact CONCURRENTLY
+  * delete-old sequence, confined to one directory at a time so the index
+  * stays live and a crash can damage at most one directory (these tables
+  * have no offset index to commit by: readers list the directories). Directories are independent, so they compact CONCURRENTLY
   * (bounded pool): each rewrite is a small single-directory Spark job
   * whose fixed launch/commit latency would otherwise serialize — at 64
   * shards per table the serial loop pays 64 job latencies where the

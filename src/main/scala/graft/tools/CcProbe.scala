@@ -40,18 +40,10 @@ object CcProbe {
     val spark = Sessions.local("graft-cc-probe")
     val loadStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    // this boot's scheduler floor (same probe as Bench.jobP50Ms): the CC
-    // tiers run 10-40 driver jobs each, so a moved floor inflates them
-    // mechanically — stamp it so the artifact is self-diagnosing
-    val jobP50Ms = {
-      (1 to 5).foreach(_ => spark.range(0, 1, 1, 1).count())
-      val ts = (1 to 21).map { _ =>
-        val t0 = System.nanoTime()
-        spark.range(0, 1, 1, 1).count()
-        (System.nanoTime() - t0) / 1e6
-      }.sorted
-      ts(ts.size / 2)
-    }
+    // this boot's scheduler floor: the CC tiers run 10-40 driver jobs
+    // each, so a moved floor inflates them mechanically — stamp it so the
+    // artifact is self-diagnosing
+    val jobP50Ms = graft.Bench.jobP50Ms(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     def pairs = Dedup.ngramJaccardPairs(docs, col("doc_id"), col("text"),
       shingleSize = 3, threshold = 0.8, shingler = T.wordShingles)

@@ -14,8 +14,7 @@ import graft.Sessions
   * so when their wall-clock shifts between boots with no code change,
   * this number says whether the box's scheduling latency moved or the
   * plan regressed: ~5-15 ms/job is a healthy local[32]; 50 ms+ means the
-  * environment, not the code, is the story. Also times a small fsync'd
-  * local-disk write for the log-append paths, which pay commit I/O too.
+  * environment, not the code, is the story.
   */
 object JobLatency {
   def main(args: Array[String]): Unit = {
@@ -49,24 +48,6 @@ object JobLatency {
     println(f"== rdd  jobs=$nJobs tasks/job=$nTasks  " +
       f"min=${rtimes.head}%.1f ms  p50=${rpct(0.5)}%.1f ms  " +
       f"p90=${rpct(0.9)}%.1f ms  max=${rtimes.last}%.1f ms")
-
-    // fsync'd small-file write+rename — the per-commit I/O floor for the
-    // log/index append paths (parquet footer + _SUCCESS + lock files)
-    val dir = java.nio.file.Files.createTempDirectory("graft-joblat")
-    val io = (1 to 20).map { i =>
-      val t0 = System.nanoTime()
-      val p = dir.resolve(s"f$i")
-      val ch = java.nio.channels.FileChannel.open(p,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      ch.write(java.nio.ByteBuffer.wrap(new Array[Byte](4096)))
-      ch.force(true)
-      ch.close()
-      java.nio.file.Files.move(p, dir.resolve(s"g$i"))
-      (System.nanoTime() - t0) / 1e6
-    }.sorted
-    println(f"== fsync4k+rename  min=${io.head}%.1f ms  " +
-      f"p50=${io(io.size / 2)}%.1f ms  max=${io.last}%.1f ms")
     spark.stop()
   }
 }

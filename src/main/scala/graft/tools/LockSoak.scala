@@ -26,8 +26,8 @@ import graft.core.log.{LogReader, LogWriter}
   * one of them SIGKILLed while appends are still live. Every successful
   * poll must observe only dense committed prefixes: per-partition offsets
   * dense and gapless from 0 (a torn read of an in-flight append — a
-  * staged file visible early, an index listing torn by a compaction's
-  * snapshot rename and deletes — would gap or duplicate), and the
+  * written file visible before its index row, an index listing torn by a
+  * compaction's snapshot rename and deletes — would gap or duplicate), and the
   * per-partition high watermark never regresses across polls (committed
   * data must never transiently vanish while an index snapshot installs).
   *

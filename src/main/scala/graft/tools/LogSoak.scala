@@ -29,11 +29,12 @@ import graft.core.log.{LogReader, LogRetention, LogWriter}
   *     (index growth, file listing, or lock-dir accumulation would all
   *     surface here).
   *
-  * Crash leg (`haltAt` ≥ 0): plants the debris a mid-append crash leaves
-  * (an unindexed data file in a live partition dir + a `.staging-*` dir
-  * — exactly the state after dying between the staged-file rename and
-  * the index-delta write), then `Runtime.halt`s. A second invocation
-  * over the SAME state dir replays that batch and continues; its first
+  * Crash leg (`haltAt` ≥ 0): plants crash debris — the unindexed data
+  * file in a live partition dir that an append dying between its segment
+  * write and its index-delta write leaves, plus a `.staging-*` dir
+  * standing for an older version's staging debris — then
+  * `Runtime.halt`s. A second invocation over the SAME state dir replays
+  * that batch and continues; its first
   * vacuum must remove exactly the debris while every scan stays intact,
   * and the final oracle must still hold (replayed appends duplicate
   * records at higher offsets; compaction's max-offset-per-key rule makes
@@ -88,7 +89,8 @@ object LogSoak {
       LogWriter.append(spark, wh, Topic, batch, "ord")
       if (haltAt == b) {
         // crash-append debris: an unindexed data file in a live partition
-        // dir (copied from a real segment so it parses) + a staging dir
+        // dir (copied from a real segment so it parses) + an older
+        // version's staging dir
         val p0 = new java.io.File(logDir, "partition=0")
         val seg = p0.listFiles().filter(f =>
           f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))

@@ -14,8 +14,8 @@ import graft.core.log.{LogIndex, LogReader, LogRetention, LogWriter}
   * One parent JVM appends `batches` batches into a 2-partition topic and
   * every `expireEvery`-th batch expires everything below
   * `end − keepWindow` per partition (whole-file granularity). Two READER
-  * JVMs poll the topic throughout — one SIGKILLed mid-run — asserting on
-  * EVERY successful poll, per partition:
+  * JVMs poll the topic throughout — one SIGKILLed mid-run, once it has
+  * stamped a poll — asserting on EVERY successful poll, per partition:
   *
   *   - the observed offsets form one CONTIGUOUS window:
   *     `count == hi − lo + 1` with `count` distinct offsets (a torn read
@@ -29,7 +29,8 @@ import graft.core.log.{LogIndex, LogReader, LogRetention, LogWriter}
   * Post-run the parent checks the final log is the exact retained
   * window (hi == appended − 1 per partition, contiguous, lo > 0 proving
   * expiry really ran) and that total torn reads across both readers —
-  * the killed one's atomically-stamped last state included — is zero.
+  * the killed one's atomically-stamped last state included — is zero,
+  * with at least one poll from the killed reader.
   *
   * {{{ runMain graft.tools.RetentionSoak [stateDir] [batches] }}}
   * Writes one JSON line and RETENTION_SOAK.json. */
@@ -122,6 +123,18 @@ object RetentionSoak {
         .start()
     }
 
+    // (polls, torn) as a reader last stamped them
+    def readerStats(rid: Int): (Long, Long) = {
+      val p = java.nio.file.Paths.get(stateDir, s"ret_reader_$rid.json")
+      if (!java.nio.file.Files.exists(p)) (0L, 0L)
+      else {
+        val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        def field(k: String): Long =
+          s.split(s""""$k":""")(1).takeWhile(_.isDigit).toLong
+        (field("polls"), field("torn"))
+      }
+    }
+
     val t0 = System.nanoTime()
     var expiries = 0
     var deletedFiles = 0
@@ -140,8 +153,15 @@ object RetentionSoak {
         expiries += 1
       }
       // the kill leg: half-way through, with appends and expiries still
-      // to come, SIGKILL reader 1 mid-whatever-poll-it-is-in
-      if (b == batches / 2) readers(1)._2.destroyForcibly()
+      // to come, SIGKILL reader 1 mid-whatever-poll-it-is-in — once it has
+      // stamped a poll, so the kill lands on a polling reader, not a JVM
+      // still starting
+      if (b == batches / 2) {
+        val deadline = System.nanoTime() + 5L * 60 * 1000000000L
+        while (readerStats(1)._1 == 0 && readers(1)._2.isAlive &&
+            System.nanoTime() < deadline) Thread.sleep(100)
+        readers(1)._2.destroyForcibly()
+      }
     }
     java.nio.file.Files.write(
       java.nio.file.Paths.get(stateDir, StopFile), Array.empty[Byte])
@@ -165,16 +185,6 @@ object RetentionSoak {
     }
     val expiredSomething = perPart.exists(_.getLong(2) > 0L) && deletedFiles > 0
 
-    def readerStats(rid: Int): (Long, Long) = {
-      val p = java.nio.file.Paths.get(stateDir, s"ret_reader_$rid.json")
-      if (!java.nio.file.Files.exists(p)) (0L, 0L)
-      else {
-        val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        def field(k: String): Long =
-          s.split(s""""$k":""")(1).takeWhile(_.isDigit).toLong
-        (field("polls"), field("torn"))
-      }
-    }
     val (polls0, torn0) = readerStats(0)
     val (polls1, torn1) = readerStats(1)
     // end-state integrity audit (deep): distinguishes the soak's LEGAL
@@ -184,7 +194,7 @@ object RetentionSoak {
       spark, wh, Topic, deep = true)
     if (!integrity.ok) System.err.println(s"== integrity: ${integrity.summary}")
     val ok = windowOk && expiredSomething && reader0Clean &&
-      polls0 + polls1 > 0 && torn0 + torn1 == 0 && integrity.ok
+      polls1 > 0 && torn0 + torn1 == 0 && integrity.ok
     val json =
       s"""{"metric":"retention_soak","batches":$batches,"per_batch":$PerBatch,""" +
         s""""keep_window":$KeepWindow,"expiries":$expiries,""" +

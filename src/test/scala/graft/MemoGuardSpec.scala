@@ -18,7 +18,11 @@ import scala.jdk.CollectionConverters._
   *     is registered only in [[graft.JobStats]];
   *   - the metadata tables (offset index, topic catalog, group offsets) are
   *     read and written only through [[graft.core.MetaTable]]: no Spark read
-  *     or write of their dirs, no parquet-mr reader or writer elsewhere. */
+  *     or write of their dirs, no parquet-mr reader or writer elsewhere;
+  *   - a topic's segment files are written only by
+  *     [[graft.core.log.SegmentWriter]]: no Spark `DataFrameWriter` into a
+  *     log dir (a `partitionBy("partition")` write, or a `.parquet(` of a
+  *     log, partition or staging dir). */
 class MemoGuardSpec extends AnyFunSuite {
 
   private def hits(home: String)(bad: String => Boolean): List[String] = {
@@ -66,6 +70,15 @@ class MemoGuardSpec extends AnyFunSuite {
       """\.parquet\(.*(catalogDir|indexDir|groupDir|Swap\.rewriteDir)""",
       """ExampleParquetWriter|ParquetReader\.Builder""").map(_.r)
     val found = hits("MetaTable.scala")(l => patterns.exists(_.findFirstIn(l).isDefined))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("segment files are written only by SegmentWriter") {
+    val patterns = Seq(
+      """\.partitionBy\(\s*"partition"\s*\)""",
+      """\.parquet\([^)]*(logDir|partitionDir)""",
+      """\.parquet\(\s*staging\s*\)""").map(_.r)
+    val found = hits("SegmentWriter.scala")(l => patterns.exists(_.findFirstIn(l).isDefined))
     assert(found.isEmpty, found.mkString("\n"))
   }
 }
