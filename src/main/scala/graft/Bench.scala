@@ -30,11 +30,13 @@ import graft.queries.Queries
   * (`timed_jobs`); the contended threshold gains a per-query allowance
   * of jobs × (p50 − 15 ms), and `tools/benchcheck.py` uses the same
   * model to separate environment drift from plan regressions when
-  * diffing an artifact against the README's official level.
+  * diffing an artifact against the README's official level. The same
+  * measurement of each steady pass fills `query_stats` ([[passStats]]):
+  * its tasks, CPU, GC, shuffle, spill, planning time and `floor_s`.
   */
 object Bench {
 
-  private def time(body: => Unit): Double = {
+  private[graft] def time(body: => Unit): Double = {
     val t0 = System.nanoTime()
     body
     (System.nanoTime() - t0) / 1e9
@@ -55,8 +57,25 @@ object Bench {
     ts(ts.size / 2)
   }
 
-  private def materialize(df: DataFrame): Unit =
+  /** Run `df` to completion through the noop sink, so a scan cannot
+    * collapse into a metadata-only count. */
+  private[graft] def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  /** What one measured pass ran, as (key, value) pairs: its work, its
+    * Catalyst planning time, and `floor_s` = jobs × this boot's job p50 —
+    * the share of the wall the scheduler floor explains. */
+  private[graft] def passStats(js: JobStats, jobP50Ms: Double): Seq[(String, String)] =
+    workStats(js.total) ++ Seq("plan_ms" -> js.planMs.toString,
+      "floor_s" -> f"${js.jobs * jobP50Ms / 1e3}%.2f")
+
+  /** `shuffle_mb` counts bytes written (each shuffled byte is written
+    * once), `spill_mb` bytes spilled to disk. */
+  private[graft] def workStats(w: JobStats.Work): Seq[(String, String)] = Seq(
+    "jobs" -> w.jobs.toString, "tasks" -> w.tasks.toString,
+    "cpu_s" -> f"${w.cpuNs / 1e9}%.2f", "gc_s" -> f"${w.gcMs / 1e3}%.2f",
+    "shuffle_mb" -> f"${w.shuffleWriteBytes / 1e6}%.1f",
+    "spill_mb" -> f"${w.diskSpillBytes / 1e6}%.1f")
 
   private def loadAvg: Double =
     java.lang.management.ManagementFactory
@@ -140,7 +159,8 @@ object Bench {
 
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val queryLoad = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val queryJobs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    // each query's steady pass, as JobStats measured it
+    val queryStats = scala.collection.mutable.LinkedHashMap.empty[String, JobStats]
     var ingestRecords = 0L
     var ingestRate = 0.0
     var pollRate = 0.0
@@ -175,7 +195,7 @@ object Bench {
     def minOf2Jobs(name: String)(pass1: => Unit)(pass2: => Unit): Double = {
       val t1 = time(pass1)
       val (t2, js) = JobStats.measure(sc)(time(pass2))
-      queryJobs(name) = js.jobs
+      queryStats(name) = js
       math.min(t1, t2)
     }
     TopicCatalog.createTopic(spark, wh, "events2", 8)
@@ -228,7 +248,7 @@ object Bench {
     // rather than re-timing through minOf2Jobs
     val tPar1 = parallelAppend("par")
     val (tPar2, parJobs) = JobStats.measure(sc)(parallelAppend("par2"))
-    queryJobs("ingest_parallel") = parJobs.jobs
+    queryStats("ingest_parallel") = parJobs
     results("ingest_parallel") = math.min(tPar1, tPar2)
     val parRate = ingestRecords / results("ingest_parallel")
 
@@ -344,7 +364,7 @@ object Bench {
       // round-trip count (plan-determined, stable across boots) — the
       // denominator of the scheduler-latency drift model (see jobP50Ms)
       val nJobs = js.jobs
-      queryJobs(name) = nJobs
+      queryStats(name) = js
       var best = math.min(t1, t2)
       // Scheduler-latency allowance: bands were stamped on a ~12-15 ms
       // trivial-job-p50 boot; on a slower boot a JOB-BOUND query rises by
@@ -432,17 +452,22 @@ object Bench {
       .mkString("{", ",", "}")
     val loads = queryLoad.map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }
       .mkString("{", ",", "}")
-    val jobsJson = queryJobs.map { case (k, v) => "\"" + k + "\":" + v }
+    val jobsJson = queryStats.map { case (k, v) => "\"" + k + "\":" + v.jobs }
       .mkString("{", ",", "}")
+    val statsJson = queryStats.map { case (k, v) =>
+      passStats(v, jobP50Ms).map { case (f, x) => "\"" + f + "\":" + x }
+        .mkString("\"" + k + "\":{", ",", "}")
+    }.mkString("{", ",", "}")
+    val timedJobs = queryStats.values.map(_.jobs).sum
     val total = results.values.sum
     val contendedJson = contended.map("\"" + _ + "\"").mkString("[", ",", "]")
     val maxHeapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
-    val extra = f""""cold_fit_sec":$coldFitJson%s,"ingest_records":$ingestRecords,"ingest_records_per_sec":$ingestRate%.0f,"ingest_bulk_records":$bulkRecords,"ingest_bulk_records_per_sec":$bulkRate%.0f,"ingest_parallel_records_per_sec":$parRate%.0f,"poll_records_per_sec":$pollRate%.0f,"cores":${Sessions.cpus},"contended":$contendedJson,"loadavg_start":$loadAtStart%.2f,"loadavg_end":$loadAvg%.2f,"query_loadavg":$loads%s,"max_heap_mb":$maxHeapMb,"job_p50_ms":$jobP50Ms%.1f,"timed_jobs":${queryJobs.values.sum}%d,"query_jobs":$jobsJson%s,$curateStagesJson%s,$curateFullStagesJson%s"""
+    val extra = f""""cold_fit_sec":$coldFitJson%s,"ingest_records":$ingestRecords,"ingest_records_per_sec":$ingestRate%.0f,"ingest_bulk_records":$bulkRecords,"ingest_bulk_records_per_sec":$bulkRate%.0f,"ingest_parallel_records_per_sec":$parRate%.0f,"poll_records_per_sec":$pollRate%.0f,"cores":${Sessions.cpus},"contended":$contendedJson,"loadavg_start":$loadAtStart%.2f,"loadavg_end":$loadAvg%.2f,"query_loadavg":$loads%s,"max_heap_mb":$maxHeapMb,"job_p50_ms":$jobP50Ms%.1f,"timed_jobs":$timedJobs%d,"query_jobs":$jobsJson%s,"query_stats":$statsJson%s,$curateStagesJson%s,$curateFullStagesJson%s"""
     val json =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs%s,"sf":"$sfDir%s",$extra%s}"""
     val compact = compactLine(total, results, sfDir,
       (ingestRate, bulkRate, parRate, pollRate),
-      jobP50Ms, queryJobs.values.sum, contendedJson, curateFullStagesJson)
+      jobP50Ms, timedJobs, contendedJson, curateFullStagesJson)
     java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH.json"), json)
     try spark.stop() catch { case _: Throwable => () }
     println(compact)

@@ -117,20 +117,38 @@ object Graphs {
     // cache: a union of two projections of the raw pair-gen plan would
     // evaluate that plan TWICE (no exchange to reuse across the
     // branches) — measured as ~half the gated tier's wall at 32×.
-    val (pairsRdd, pairsP) = pin(pairs
-      .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b")))
+    // The gate count doubles as the cache-filling action: either path
+    // reads the pinned blocks after this, never the pair-gen lineage again.
+    // So the pin (where adaptive execution runs the pair plan's shuffle
+    // stages) and this count are pair generation, and the rest labelling.
+    val ((pairsRdd, pairsP), symEdgeCount) = StageTimers.timed("cc_pairgen") {
+      val pinned = pin(pairs
+        .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b")))
+      (pinned, 2L * pinned._2.count())
+    }
     val raw = pairsP
       .union(pairsP.select(col("b").as("a"), col("a").as("b")))
 
-    // the gate count doubles as the cache-filling action: either path
-    // reads the pinned blocks after this, never the pair-gen lineage again
-    val symEdgeCount = 2L * pairsP.count()
-    if (localEdgeCutoff > 0 && symEdgeCount <= 2L * localEdgeCutoff) {
-      val rows = raw.collect() // from cache — symmetric, duplicates harmless
-      pairsRdd.unpersist(blocking = false)
-      return localComponents(spark, rows)
+    StageTimers.timed("cc_label") {
+      if (localEdgeCutoff > 0 && symEdgeCount <= 2L * localEdgeCutoff) {
+        val rows = raw.collect() // from cache — symmetric, duplicates harmless
+        pairsRdd.unpersist(blocking = false)
+        localComponents(spark, rows)
+      } else contractedComponents(spark, raw, pairsRdd, pin,
+        maxRounds, localEdgeCutoff, maxBroadcastBytes)
     }
+  }
 
+  /** The distributed tier over the symmetric edge list `raw` (pinned as
+    * `pairsRdd`): contraction, label-space components, expansion. */
+  private def contractedComponents(
+      spark: SparkSession,
+      raw: DataFrame,
+      pairsRdd: RDD[InternalRow],
+      pin: DataFrame => (RDD[InternalRow], DataFrame),
+      maxRounds: Int,
+      localEdgeCutoff: Long,
+      maxBroadcastBytes: Long): DataFrame = {
     // Phase 1: one closed-neighborhood-min pass + edge rewrite into label
     // space (see the contraction doc above). The count materializes the
     // contracted blocks and re-checks the gate — clique-shaped near-dup

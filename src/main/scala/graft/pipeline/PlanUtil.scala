@@ -83,14 +83,13 @@ object PlanUtil {
     * with adaptive execution OFF, `defaultParallelism / 4` (min 8)
     * shuffle partitions and INTERPRETED evaluation (whole-stage codegen
     * off, expression factories in `NO_CODEGEN` mode, so dynamic partition
-    * pruning off too). One clone per parent
-    * session, created lazily, memoized WEAKLY (rebuilt transparently if
-    * the GC claims it between calls), and re-synced from the parent's
-    * explicitly-set SQL conf on every call — a parent-side
-    * `session.timeZone`/ANSI change reaches the very next batch plan; only
-    * the six planner overrides (AQE, shuffle partitions,
-    * partition-discovery threshold, whole-stage codegen, factory mode,
-    * dynamic partition pruning) stay pinned.
+    * pruning off too). One clone, created lazily for the latest parent
+    * session (a call from another parent replaces it), held strongly
+    * between calls, and re-synced from the parent's explicitly-set SQL
+    * conf on every call — a parent-side `session.timeZone`/ANSI change
+    * reaches the very next batch plan; only the six planner overrides
+    * (AQE, shuffle partitions, partition-discovery threshold, whole-stage
+    * codegen, factory mode, dynamic partition pruning) stay pinned.
     *
     * The incremental index chains execute ~6-10 actions per micro-batch
     * whose shuffles are BATCH-scale (band keys, candidate ids, verdict
@@ -140,15 +139,10 @@ object PlanUtil {
     * CacheManager, so frames persisted on either session still hit. */
   def batchLocalSession(
       spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
-    planners.synchronized {
-      val ref = planners.get(spark)
-      val cached = if (ref == null) null else ref.get()
-      val clone = if (cached != null) cached else {
-        val s = GraftInternal.cloneSession(spark)
-        planners.put(
-          spark, new java.lang.ref.WeakReference(s))
-        s
-      }
+    synchronized {
+      if (planner == null || (planner._1 ne spark))
+        planner = (spark, GraftInternal.cloneSession(spark))
+      val clone = planner._2
       // Re-sync the clone's SQL conf from the parent on EVERY call: the
       // clone snapshots conf at clone time, so a parent-side change made
       // later (session time zone, ANSI mode, a pushdown toggle) would
@@ -219,15 +213,9 @@ object PlanUtil {
       df: DataFrame, session: org.apache.spark.sql.SparkSession): DataFrame =
     if (df.sparkSession eq session) df else GraftInternal.ofRows(session, df)
 
-  // Weak-keyed AND weak-valued: a WeakHashMap whose value holds the key
-  // strongly never frees entries, and the clone references its parent
-  // through its parent-session-state chain — so the value must be a
-  // WeakReference too. A cleared clone is just rebuilt on the next call
-  // (cloneSession is a SessionState copy, cheap next to any batch);
-  // between calls nothing else holds it, which is exactly when
-  // collecting it is harmless. Guarded by synchronized (compute-style
-  // atomicity is not available once values are references).
-  private val planners = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession,
-    java.lang.ref.WeakReference[org.apache.spark.sql.SparkSession]]()
+  /** (parent, clone) of the latest [[batchLocalSession]] call, held
+    * strongly: a dropped clone is recloned on the next batch, and each
+    * dropped clone's cleaner forks an `rm -rf` of its artifact dir. */
+  private var planner: (org.apache.spark.sql.SparkSession,
+    org.apache.spark.sql.SparkSession) = null
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Sessions
+import graft.Bench.{materialize, time}
 import graft.core.catalog.{TopicCatalog, Warehouse}
 import graft.core.log.LogWriter
 import graft.pipeline.LshIndex
@@ -33,15 +34,6 @@ import graft.queries.Queries
   * {{{ runMain graft.tools.ScaleStress [factor] [srcDir] }}}
   * Writes SCALE_STRESS.json (one line) and prints it. */
 object ScaleStress {
-
-  private def time(body: => Unit): Double = {
-    val t0 = System.nanoTime()
-    body
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  private def materialize(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
 
   /** warm + best-of-2 (same co-tenant defense as Bench). */
   private def bestOf2(body: => Unit): Double = {
@@ -256,8 +248,8 @@ object ScaleStress {
         col("doc_id"), col("text"), idx,
         shingleSize = 5, numHashes = 128, bands = 16)
       bestOf2 {
-        LshIndex.probe(spark, idx, batch, col("doc_id"), col("text"),
-          threshold = 0.6).write.format("noop").mode("overwrite").save()
+        materialize(LshIndex.probe(spark, idx, batch, col("doc_id"),
+          col("text"), threshold = 0.6))
       }
     }
     if (want("lsh_probe_fixed_batch")) entries("lsh_probe_fixed_batch") =
@@ -313,7 +305,7 @@ object ScaleStress {
       bestOf2 {
         graft.streaming.Curation.curateBatch(spark, idx, batch,
           col("doc_id"), col("text"), curateCfg) { survivors =>
-          survivors.write.format("noop").mode("overwrite").save()
+          materialize(survivors)
         }
       }
     }
@@ -355,7 +347,7 @@ object ScaleStress {
       bestOf2 {
         graft.streaming.Curation.curateBatch(spark, lshIdx, batch,
           col("doc_id"), col("text"), fullCfg) { survivors =>
-          survivors.write.format("noop").mode("overwrite").save()
+          materialize(survivors)
         }
       }
     }

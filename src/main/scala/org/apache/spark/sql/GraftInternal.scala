@@ -75,6 +75,18 @@ object GraftInternal {
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan)
 
+  /** Catalyst planning time (ms) of the SQL execution `end` closes: the
+    * analysis, optimization and physical-planning phases its
+    * QueryExecution's tracker recorded (`qe` is `private[sql]`; 0 when the
+    * event carries none). */
+  def planMs(end: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd): Long = {
+    import org.apache.spark.sql.catalyst.QueryPlanningTracker._
+    Option(end.qe).fold(0L) { qe =>
+      val phases = qe.tracker.phases
+      Seq(ANALYSIS, OPTIMIZATION, PLANNING).flatMap(phases.get).map(_.durationMs).sum
+    }
+  }
+
   /** Register a function builder on a LIVE session (the runtime counterpart
     * of `SparkSessionExtensions.injectFunction`, same registry). */
   def registerFunction(

@@ -6,7 +6,7 @@ import scala.concurrent.duration._
 
 import org.apache.spark.sql.functions.{col, lit}
 
-import graft.pipeline.StageTimers
+import graft.pipeline.{PlanUtil, StageTimers}
 
 class JobStatsSpec extends SparkSpec {
   private def sc = spark.sparkContext
@@ -36,12 +36,23 @@ class JobStatsSpec extends SparkSpec {
       val (_, js) = JobStats.measure(sc) {
         StageTimers.capture {
           val a = run("a")(sc.parallelize(1 to 8, 2).count())
-          val b = run("b")(sc.parallelize(1 to 8, 3).count())
+          // b shuffles: 3 map and 3 reduce tasks per job
+          val b = run("b")(sc.parallelize(1 to 8, 3).groupBy((_: Int) % 2, 3).count())
           Await.result(a.zip(b), 2.minutes)
         }
       }
-      assert(js.jobs == 6 && js.tasks == 3 * 2 + 3 * 3, js)
-      assert(js.perPhase.toMap == Map("a" -> 3, "b" -> 3), js)
+      assert(js.jobs == 6 && js.tasks == 3 * 2 + 3 * 6, js)
+      val phase = js.perPhase.toMap
+      assert(phase.keySet == Set("a", "b"), js)
+      assert(phase("a").jobs == 3 && phase("a").tasks == 6, js)
+      assert(phase("b").jobs == 3 && phase("b").tasks == 18, js)
+      assert(phase("a").shuffleWriteBytes == 0 && phase("b").shuffleWriteBytes > 0, js)
+      // every task is tagged with its job's phase: the phases sum to the totals
+      val w = phase.values
+      assert(w.map(_.jobs).sum == js.jobs && w.map(_.tasks).sum == js.tasks, js)
+      assert(w.map(_.cpuNs).sum == js.total.cpuNs && js.total.cpuNs > 0, js)
+      assert(w.map(_.shuffleReadBytes).sum == js.total.shuffleReadBytes, js)
+      assert(w.map(_.shuffleWriteBytes).sum == js.total.shuffleWriteBytes, js)
       // the two phases submit from different lines: each call site
       // carries its own phase
       assert(js.records.groupBy(_.site).values.map(_.map(_.phase).toSet)
@@ -75,5 +86,31 @@ class JobStatsSpec extends SparkSpec {
     assert(first.compiles > 0, first)
     val (_, again) = JobStats.measure(sc)(run())
     assert(again.compiles == 0, again)
+  }
+
+  test("a shuffle reports its written and read bytes; a narrow job none") {
+    val (_, wide) = JobStats.measure(sc)(sc.parallelize(1 to 100, 4).groupBy(_ % 5).count())
+    assert(wide.total.shuffleWriteBytes > 0 && wide.total.shuffleReadBytes > 0, wide)
+    val (_, narrow) = JobStats.measure(sc)(sc.parallelize(1 to 100, 4).count())
+    assert(narrow.total.shuffleWriteBytes == 0 && narrow.total.shuffleReadBytes == 0, narrow)
+  }
+
+  /** A SQL action whose planning takes whole milliseconds: 200 projected
+    * expressions to analyze and optimize. */
+  private def wideAction(s: org.apache.spark.sql.SparkSession) =
+    s.range(10).select((1 to 200).map(i => (col("id") + lit(i)).as(s"c$i")): _*).collect()
+
+  test("a SQL action reports its planning time; a bare RDD job none") {
+    val (_, sql) = JobStats.measure(sc)(wideAction(spark))
+    assert(sql.planMs > 0, sql)
+    val (_, rdd) = JobStats.measure(sc)(sc.parallelize(1 to 8, 2).count())
+    assert(rdd.planMs == 0, rdd)
+  }
+
+  test("an action planned on the batch-local clone adds to the planning time") {
+    // a QueryExecutionListener registers on one session and would miss it
+    val clone = PlanUtil.batchLocalSession(spark)
+    val (_, js) = JobStats.measure(sc)(wideAction(clone))
+    assert(js.planMs > 0, js)
   }
 }

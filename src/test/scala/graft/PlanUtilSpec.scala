@@ -4,9 +4,17 @@ import graft.pipeline.PlanUtil
 
 /** The batch-local planning session's lifecycle contract: parent conf
   * changes reach the very next call, the planner overrides stay pinned,
-  * and a GC-collected clone is rebuilt transparently (the memo holds it
-  * only weakly — see PlanUtil.planners). */
+  * and the clone outlives a GC between calls (see PlanUtil.planner). */
 class PlanUtilSpec extends SparkSpec {
+
+  test("a GC between calls keeps the clone: no re-clone per batch") {
+    // a re-clone per batch also forks an `rm -rf` of the dropped clone's
+    // artifact dir when its cleaner runs
+    val first = new java.lang.ref.WeakReference(PlanUtil.batchLocalSession(spark))
+    (1 to 5).foreach { _ => System.gc(); Thread.sleep(50) }
+    val again = PlanUtil.batchLocalSession(spark)
+    assert(first.get() eq again)
+  }
 
   test("batch-local session re-syncs parent conf changes on every call") {
     val tz0 = spark.conf.get("spark.sql.session.timeZone")

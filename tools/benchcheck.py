@@ -39,7 +39,7 @@ if loads:
 bad = False
 if contended:
     print("bench POLLUTED or regressed: re-run the flagged queries solo "
-          "(sbt 'runMain graft.tools.TimeQuery <sfDir> " +
+          "(sbt 'runMain graft.tools.Probe <sfDir> " +
           " ".join(contended) + "')")
     bad = True
 

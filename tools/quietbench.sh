@@ -14,7 +14,7 @@
 # UPPER-middle artifact (never the min-leaning lower-middle).
 # Host-steal windows on this box last minutes and move the trivial-job
 # p50 12 -> 130 ms with no in-guest signal except /proc/stat steal — see
-# JobLatency and the README's latency model.
+# graft.tools.Probe's floor line and the README's latency model.
 # Usage: tools/quietbench.sh [n_clean] [max_attempts] [p50_ceiling_ms]
 set -u
 cd "$(dirname "$0")/.."
@@ -27,8 +27,8 @@ rm -f /tmp/quietbench_clean_*.json
 n=0
 for a in $(seq 1 "$ATTEMPTS"); do
   [ "$n" -ge "$WANT" ] && break
-  p50=$(sbt -batch "runMain graft.tools.JobLatency 60 1" 2>&1 |
-    grep -oE "p50=[0-9.]+" | head -1 | cut -d= -f2)
+  p50=$(sbt -batch "runMain graft.tools.Probe ${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" 2>&1 |
+    grep -oE "floor p50=[0-9.]+" | head -1 | cut -d= -f2)
   echo "attempt $a: job p50 = ${p50:-?} ms (ceiling $CEILING; clean $n/$WANT)"
   if python3 -c "exit(0 if float('${p50:-999}') < $CEILING else 1)"; then
     SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \

@@ -1,8 +1,8 @@
 #!/bin/bash
-# Steal-gated TimeQuery: wait for a calm window (steal rate below
-# STEAL_CS centiseconds over a PROBE_S-second probe), then run TimeQuery
-# on the given queries. Prints the steal delta around the measured run so
-# a polluted measurement is self-identifying.
+# Steal-gated probe: wait for a calm window (steal rate below
+# STEAL_CS centiseconds over a PROBE_S-second probe), then run
+# graft.tools.Probe on the given queries. Prints the steal delta around
+# the measured run so a polluted measurement is self-identifying.
 # Usage: tools/quietmeasure.sh "<query list>" [max_wait_s] [steal_cs_per_probe]
 set -u
 cd "$(dirname "$0")/.."
@@ -25,6 +25,6 @@ while true; do
 done
 b=$(awk '/^cpu /{print $9}' /proc/stat)
 SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
-  sbt -batch "runMain graft.tools.TimeQuery ${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} $QUERIES" 2>&1 | grep "== "
+  sbt -batch "runMain graft.tools.Probe ${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} $QUERIES" 2>&1 | grep "== "
 a=$(awk '/^cpu /{print $9}' /proc/stat)
 echo "steal during run: $((a - b))cs"
