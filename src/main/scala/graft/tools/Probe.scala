@@ -42,10 +42,11 @@ object Probe {
           val (_, walls) = StageTimers.capture { sec = Bench.time(run()) }
           (sec, walls)
         }
-      }.sortBy(_._1._1)
+      }.sortBy { case ((sec, _), _) => sec }
       val ((sec, walls), js) = passes(passes.size / 2)
+      val ((minSec, _), _) = passes.head
       val rows = fn(spark, dir).count()
-      println(f"== $name median_s=$sec%.3f min_s=${passes.head._1._1}%.3f " +
+      println(f"== $name median_s=$sec%.3f min_s=$minSec%.3f " +
         s"rows=$rows ${kv(Bench.passStats(js, p50))}")
       if (walls.nonEmpty) {
         val work = js.perPhase.toMap
