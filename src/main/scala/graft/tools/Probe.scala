@@ -37,11 +37,7 @@ object Probe {
       def run(): Unit = Bench.materialize(fn(spark, dir))
       run()
       val passes = Seq.fill(3) {
-        JobStats.measure(spark.sparkContext) {
-          var sec = 0.0
-          val (_, walls) = StageTimers.capture { sec = Bench.time(run()) }
-          (sec, walls)
-        }
+        JobStats.measure(spark.sparkContext)(StageTimers.capture(Bench.time(run())))
       }.sortBy { case ((sec, _), _) => sec }
       val ((sec, walls), js) = passes(passes.size / 2)
       val ((minSec, _), _) = passes.head
