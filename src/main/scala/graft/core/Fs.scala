@@ -1,14 +1,14 @@
 package graft.core
 
 import java.io.FileNotFoundException
-import java.nio.file.{Files, NoSuchFileException}
+import java.nio.file.{Files, NoSuchFileException, Paths, Path => NioPath}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import scala.jdk.CollectionConverters._
 
 /** The one Hadoop configuration of driver-side filesystem and parquet
-  * metadata access.
+  * metadata access, and the one mapping of a warehouse path to `java.nio`.
   *
   * A fresh `Configuration` re-parses `core-default.xml` on first use —
   * about 10 ms per call against ~0.01 ms on a shared instance — and an append
@@ -24,6 +24,11 @@ import scala.jdk.CollectionConverters._
   * This is also the one place a session's `spark.hadoop.*` settings would
   * be threaded through for a warehouse on a configured filesystem; today
   * it carries the defaults (the local-filesystem warehouse).
+  *
+  * Files and dirs are CREATED through `java.nio` ([[local]]), never through
+  * Hadoop: its local filesystem, without the native library, forks a
+  * `chmod` for every file, `.crc` sidecar and dir it creates. Reads,
+  * listings, renames and deletes fork nothing and stay on Hadoop.
   */
 object Fs {
 
@@ -55,4 +60,15 @@ object Fs {
     catch { case _: FileNotFoundException | _: NoSuchFileException => None }
 
   def inputFile(path: Path): HadoopInputFile = HadoopInputFile.fromPath(path, conf)
+
+  /** `path` as a `java.nio` path. The warehouse is a local directory: any
+    * scheme but `file` fails with an `IllegalArgumentException`. */
+  def local(path: Path): NioPath = {
+    val uri = path.toUri
+    val scheme = Option(uri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme)
+    if (scheme != "file")
+      throw new IllegalArgumentException(
+        s"the warehouse must be a local directory; '$path' has scheme '$scheme'")
+    Paths.get(uri.getPath)
+  }
 }

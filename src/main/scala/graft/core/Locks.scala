@@ -1,11 +1,11 @@
 package graft.core
 
 import java.nio.channels.FileChannel
-import java.nio.file.{Files, Paths, Path => NioPath}
+import java.nio.file.{Files, Path => NioPath}
 import java.nio.file.StandardOpenOption.{CREATE, WRITE}
 import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
 import java.util.concurrent.locks.ReentrantLock
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import graft.core.catalog.Warehouse
 
 /** Cross-JVM mutual exclusion, scoped to a warehouse: a kernel file lock on
@@ -140,14 +140,8 @@ object Locks {
   /** The warehouse's `_locks` dir, created if missing (with NIO: Hadoop's
     * local `mkdirs` forks `chmod` without the native library) and resolved
     * to its real path, so every spelling of one dir yields one key. */
-  private def lockDir(wh: Warehouse): NioPath = {
-    val uri = new Path(s"${wh.root}/_locks").toUri
-    val scheme = Option(uri.getScheme).getOrElse(FileSystem.getDefaultUri(Fs.conf).getScheme)
-    if (scheme != "file")
-      throw new IllegalArgumentException(
-        s"warehouse locks need a local directory; '${wh.root}' has scheme '$scheme'")
-    Files.createDirectories(Paths.get(uri.getPath)).toRealPath()
-  }
+  private def lockDir(wh: Warehouse): NioPath =
+    Files.createDirectories(Fs.local(new Path(s"${wh.root}/_locks"))).toRealPath()
 
   /** Open the lock file and poll its kernel lock until `deadline`. The
     * returned channel holds the lock; closing it releases. */

@@ -1,6 +1,7 @@
 package graft.core
 
 import java.io.FileNotFoundException
+import java.nio.file.Files
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
@@ -8,7 +9,7 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.io.LocalOutputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.Row
@@ -46,11 +47,11 @@ import scala.jdk.CollectionConverters._
   * torn set. The one retry rule: a file deleted after the listing, or
   * missing from it (a delta newer than every listed snapshot), re-lists.
   *
-  * LOCAL-FS ASSUMPTION: every path here resolves through [[Fs]], the
+  * LOCAL-FS ASSUMPTION: every path here resolves through [[Fs]]. Files and
+  * dirs are created through `java.nio` ([[Fs.local]]; other schemes fail),
+  * which forks nothing where a Hadoop local create forks a `chmod` per file,
+  * sidecar and dir. Reads, listings, renames and deletes go through the
   * driver's one shared Hadoop configuration, which carries the defaults.
-  * It is the single place a session's `spark.hadoop.*` settings would be
-  * threaded for a warehouse on a configured filesystem (that threading is
-  * not done: the warehouse is a local directory).
   */
 private[graft] object MetaTable {
 
@@ -151,7 +152,8 @@ private[graft] object MetaTable {
     * other's in-flight files. A crash leaves the staging dir, which no
     * reader lists; `=` cannot appear in a validated topic or group name, so
     * a prefix match on `.delta=<name>=` (the index's vacuum) never claims
-    * another table's staging. */
+    * another table's staging. The file and both dirs are created through
+    * `java.nio` ([[writeFile]]), so nothing forks a `chmod`. */
   def append(dir: String, schema: StructType, rows: Seq[Row]): Unit = {
     val live = new Path(dir)
     val fs = Fs(live)
@@ -160,7 +162,7 @@ private[graft] object MetaTable {
     val staging = new Path(live.getParent, s".delta=${live.getName}=$uid")
     val staged = new Path(staging, s"delta-$gen-$uid.parquet")
     writeFile(staged, schema, rows)
-    fs.mkdirs(live)
+    Files.createDirectories(Fs.local(live))
     if (!fs.rename(staged, new Path(live, staged.getName)))
       throw new IllegalStateException(s"failed to land a delta in $dir")
     fs.delete(staging, true)
@@ -219,7 +221,7 @@ private[graft] object MetaTable {
     val out = Seq.newBuilder[Row]
     val reader = new ParquetReader.Builder[Group](Fs.inputFile(path)) {
       override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport
-    }.build()
+    }.usePageChecksumVerification(true).build()
     try {
       var g: Group = reader.read()
       while (g != null) {
@@ -239,12 +241,18 @@ private[graft] object MetaTable {
     out.result()
   }
 
+  /** Write `rows` as a new file at `path`, its dir created if missing,
+    * through `java.nio`: a Hadoop create forks a `chmod` for the file, its
+    * `.crc` sidecar and each dir ([[Fs]]). Parquet's page CRCs, verified by
+    * [[readFile]], take the sidecar's place. */
   private def writeFile(path: Path, schema: StructType, rows: Seq[Row]): Unit = {
     val mt = messageType(schema)
+    val local = Fs.local(path)
+    Files.createDirectories(local.getParent)
     // a private copy: a writer builder may set keys on the conf it is handed
     val conf = new Configuration(Fs.conf)
     val writer = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(path, conf))
+      .builder(new LocalOutputFile(local))
       .withType(mt)
       .withConf(conf)
       .build()

@@ -161,7 +161,10 @@ object Admin {
     *      false alarm while check 1 still catches external loss;
     *   3. `deep = true` only: ONE Spark job over the verified-present
     *      files, comparing each file's on-disk record count against its
-    *      index row (catches truncation/corruption, compacted or not).
+    *      index row (catches truncation/corruption, compacted or not). It
+    *      reads every page of every stored column and checks each against
+    *      its parquet page CRC, so bit rot fails the audit with parquet's
+    *      "CRC checksum verification failed".
     *
     * Wired into the lifecycle soaks (LOG/LOCK/RETENTION stamp
     * `integrity_ok`) and the Verify epilogue self-test; callers needing a
@@ -207,14 +210,20 @@ object Admin {
     val mismatches =
       if (!deep || data.isEmpty || missing.nonEmpty) Seq.empty[String]
       else {
-        import org.apache.spark.sql.functions.{col, count, input_file_name, lit}
+        import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, xxhash64}
         val present = data.map(_.file).toIndexedSeq
+        // a hash of every stored column rides along, unused: a bare count
+        // reads only the footers (the optimizer turns a count of any
+        // non-null column into one), and each page must be read for its
+        // CRC to be checked
+        val stored = graft.core.Schemas.record.fieldNames.filter(_ != "partition").map(col)
         val onDisk = spark.read
           .option("basePath", wh.logDir(topic))
+          .option(graft.core.log.LogReader.VerifyPageChecksums, "true")
           .schema(graft.core.Schemas.record)
           .parquet(present: _*)
           .groupBy(input_file_name().as("f"))
-          .agg(count(lit(1)).as("n"))
+          .agg(count(lit(1)).as("n"), max(xxhash64(stored.toIndexedSeq: _*)).as("pages"))
           .collect()
           .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath
             -> r.getLong(1))

@@ -137,7 +137,10 @@ object LogReader {
     * watermark remains the detection surface). A file can also vanish in
     * the window between the index read and THIS relation's creation,
     * where Spark's existence check throws instead — that path re-reads
-    * the (now re-fingerprinted) index and resolves once more. */
+    * the (now re-fingerprinted) index and resolves once more.
+    *
+    * Every page read is checked against the CRC parquet wrote into its
+    * header ([[VerifyPageChecksums]]): a corrupt page fails the read. */
   private[graft] def segmentFiles(
       spark: SparkSession,
       wh: Warehouse,
@@ -145,8 +148,14 @@ object LogReader {
       files: Seq[String]): DataFrame =
     spark.read.option("basePath", wh.logDir(topic))
       .option("ignoreMissingFiles", "true")
+      .option(VerifyPageChecksums, "true")
       .schema(graft.core.Schemas.record)
       .parquet(files: _*)
+
+  /** The parquet read option that checks each page against the CRC in
+    * its header. Segment files are written through `java.nio` with no
+    * Hadoop `.crc` sidecar, so these page CRCs are their bit-rot check. */
+  private[graft] val VerifyPageChecksums = "parquet.page.verify-checksum.enabled"
 
   /** Re-run `body` once when relation CREATION failed because an indexed
     * file expired between the index read and the existence check — the

@@ -3,8 +3,9 @@ package graft.core.log
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  Ascending, BoundReference, GenericInternalRow, InterpretedOrdering, SortOrder}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+  Ascending, BindReferences, BoundReference, Expression, GenericInternalRow,
+  InterpretedOrdering, JoinedRow, Literal, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import scala.jdk.CollectionConverters._
@@ -38,17 +39,20 @@ case class AppendResult(
   *     offset-range table; Parquet row-group stats (tight, because each file
   *     is sorted by offset) do the intra-file seeking.
   *
-  * Two paths route, number and write a batch, chosen by the plan's shape
-  * alone. When the routed projection of the input optimizes to a
-  * `LocalRelation` — the rows are already in driver memory, as a
-  * producer's batch is — the driver path sorts, numbers and writes them
-  * with no Spark job, like the reference broker appending a batch to its
-  * local segment (Log.java:93-103); four jobs of per-job overhead would
-  * otherwise dominate a small batch. Every other frame takes the Spark
-  * path, [[assignOffsets]] plus one job whose tasks write their offset
-  * runs, so a distributed frame is never collected. Both paths write each
-  * file once, at its final `partition=<p>/` path, through one
-  * [[SegmentWriter]].
+  * Two paths route, number and write a batch, chosen by the input plan's
+  * shape alone. When the input is local — its analyzed plan, or else its
+  * optimized plan, is a `LocalRelation`: the rows are already in driver
+  * memory, as a producer's batch is — the driver path routes them with one
+  * generated projection (no optimizer pass over the routed plan) and
+  * sorts, numbers and writes them with no Spark job, like the reference
+  * broker appending a batch to its local segment (Log.java:93-103); four
+  * jobs of per-job overhead would otherwise dominate a small batch. Every
+  * other frame takes the Spark path, [[assignOffsets]] plus one job whose
+  * tasks write their offset runs, so a distributed frame is never
+  * collected. Both paths evaluate the one routing definition
+  * ([[PartitionRouter.route]]) and write each file once, at its final
+  * `partition=<p>/` path, through one [[SegmentWriter]], which creates
+  * files through `java.nio` and so forks no `chmod`.
   *
   * Readers only see files through the index, and the index row is written
   * after the data, so the index delta is the commit: a crashed append
@@ -210,14 +214,18 @@ object LogWriter {
     * (string), optional `headers`, optional `explicit_partition` (int), and
     * an ordering column named by `ordCol`.
     *
-    * The input is projected once to (partition, ord, ts, key, value,
-    * headers). When that projection's optimized plan is a `LocalRelation`
-    * (a `createDataFrame` or `toDF` of driver-side rows), its rows are
-    * routed, sorted by `ord` with Spark's ordering, numbered and written on
-    * the driver with no Spark job ([[writeLocal]]). Any other plan — a
-    * parquet scan, `spark.range`, a join — takes [[assignOffsets]] and one
-    * job whose tasks write their offset runs; a plan with a non-local leaf
-    * goes there without being optimized twice. Either way the
+    * When the input is local — its analyzed plan is a `LocalRelation` (a
+    * `createDataFrame` of driver-side rows), or else its plan has only
+    * local leaves and its optimized plan is one (a `toDF`, filter or
+    * `withColumn` over such rows) — its rows are projected once to
+    * (partition, ord, ts, key, value, headers) by a generated projection
+    * ([[routeLocal]]; no optimizer pass over the routed plan, and no class
+    * compiled per steady append), then sorted by `ord` with Spark's
+    * ordering, numbered and written on the driver with no Spark job
+    * ([[writeLocal]]). Any other plan — a parquet scan, `spark.range`, a
+    * join, a union — takes [[assignOffsets]] and one job whose tasks write
+    * their offset runs; a plan with a non-local leaf goes there without
+    * being optimized twice. Either way the
     * [[SegmentWriter]] writes each file once at its final path and returns
     * its index row, and the index delta commits them. A record that routes
     * to no partition (no key, no in-range explicit partition and a null
@@ -270,18 +278,15 @@ object LogWriter {
       val keyCol =
         if (records.columns.contains("key")) col("key") else lit(null).cast("string")
       // the stored columns after (partition, ord) or (partition, offset)
+      val now = System.currentTimeMillis()
       val stored = Seq(
-        (if (records.columns.contains("ts")) col("ts").cast("long")
-         else lit(System.currentTimeMillis())).as("ts"),
+        (if (records.columns.contains("ts")) col("ts").cast("long") else lit(now)).as("ts"),
         keyCol.cast("string").as("key"),
         col("value").cast("string").as("value"),
         (if (records.columns.contains("headers")) col("headers")
          else lit(null).cast(Schemas.headers)).as("headers"))
 
       val logDir = wh.logDir(topic)
-      val routed = records.select(
-        PartitionRouter.route(explicitP, keyCol, col(ordCol), n).as("partition") +:
-          col(ordCol).as("ord") +: stored: _*)
       // a declared-partition append must not route anything outside its
       // locked set; rejected before anything is written
       def checkDeclared(routedTo: Iterable[Int]): Unit = partitions.foreach { _ =>
@@ -290,17 +295,16 @@ object LogWriter {
           s"records routed to ${stray.sorted.mkString(",")} outside " +
             s"the declared partition set ${locked.mkString(",")} — nothing was committed")
       }
-      // Only a plan whose leaves are all local can optimize to driver-side
-      // rows (an empty result aside, which the Spark path writes the same),
-      // so any other frame — a curation join — skips that optimizer pass.
-      val local: Option[LocalRelation] = Some(routed.queryExecution)
-        .filter(_.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]))
-        .map(_.optimizedPlan).collect { case l: LocalRelation => l }
+      val local = localRows(records).flatMap { rows =>
+        routeLocal(records.select(
+          PartitionRouter.route(explicitP, keyCol, col(ordCol), n).as("partition") +:
+            col(ordCol).as("ord") +: stored: _*), rows, now)
+      }
       val written: Seq[LogIndex.Entry] = local match {
-        case Some(l) =>
-          if (l.data.exists(_.isNullAt(0))) throw nullRoute(ordCol)
-          checkDeclared(l.data.map(_.getInt(0)))
-          writeLocal(spark, l, bases, logDir, conf)
+        case Some((schema, rows)) =>
+          if (rows.exists(_.isNullAt(0))) throw nullRoute(ordCol)
+          checkDeclared(rows.map(_.getInt(0)))
+          writeLocal(spark, schema, rows, bases, logDir, conf)
         case None =>
           // No re-shuffle or sort before the write: numberRuns left each
           // task's rows range-grouped and sorted by (partition, offset), so
@@ -328,22 +332,67 @@ object LogWriter {
     result
   }
 
-  /** The driver path of [[append]]: `local` holds the routed projection's
-    * rows (partition, ord, ts, key, value, headers), already evaluated by
-    * the optimizer and routed to a partition, so nothing here runs a
-    * Spark job. Each partition's rows are sorted by `ord` with Spark's
-    * ordering for its type (ascending, nulls first, as
+  /** The rows of a frame whose records are already in driver memory: its
+    * analyzed plan's when that is a `LocalRelation` (a `createDataFrame`
+    * of driver-side rows), else its optimized plan's when that is one (a
+    * `toDF`, filter or `withColumn` over such rows). A plan with a
+    * non-local leaf is never optimized here: it cannot become local rows
+    * (an empty result aside, which the Spark path writes the same), and a
+    * curation join must not pay an optimizer pass for nothing. */
+  private def localRows(df: DataFrame): Option[Seq[InternalRow]] = {
+    val qe = df.queryExecution
+    qe.analyzed match {
+      case l: LocalRelation => Some(l.data)
+      case p if p.collectLeaves().forall(_.isInstanceOf[LocalRelation]) =>
+        Some(qe.optimizedPlan).collect { case l: LocalRelation => l.data }
+      case _ => None
+    }
+  }
+
+  /** `routed` — the one routing definition and the stored columns, a
+    * projection of the input frame — evaluated over the input's local
+    * `rows` (positionally its analyzed output) by one generated projection,
+    * with no optimizer pass: Catalyst's `ConvertToLocalRelation` would
+    * evaluate it interpreted, and the other rules would walk a plan
+    * holding every row. Returns its schema and copied rows (partition, ord,
+    * ts, key, value, headers).
+    *
+    * The append time `now` is read from one field after the input's, not
+    * inlined: generated code embeds a long literal in its source, so each
+    * append would compile a class of its own. Any literal equal to `now`
+    * becomes that field, which has its value. */
+  private def routeLocal(
+      routed: DataFrame,
+      rows: Seq[InternalRow],
+      now: Long): Option[(StructType, Seq[InternalRow])] =
+    Some(routed.queryExecution.analyzed).collect { case p @ Project(list, child) =>
+      val nowField = BoundReference(child.output.length, LongType, nullable = false)
+      val proj = UnsafeProjection.create(list.map { e =>
+        BindReferences.bindReference[Expression](e, child.output).transform {
+          case Literal(v, LongType) if v == now => nowField
+        }
+      })
+      proj.initialize(0)
+      val tail = InternalRow(now)
+      val joined = new JoinedRow
+      (p.schema, rows.map(r => proj(joined(r, tail)).copy()))
+    }
+
+  /** The driver path of [[append]]: `rows` are the routed projection's
+    * (partition, ord, ts, key, value, headers), each routed to a partition,
+    * so nothing here runs a Spark job. Each partition's rows are sorted by
+    * `ord` with Spark's ordering for its type (ascending, nulls first, as
     * `sortWithinPartitions`), numbered from `bases`, and cut into chunks of
     * at most `maxRecordsPerFile` rows, which the [[SegmentWriter]] writes
     * in parallel, one file each. */
   private def writeLocal(
       spark: SparkSession,
-      local: LocalRelation,
+      routed: StructType,
+      rows: Seq[InternalRow],
       bases: Map[Int, Long],
       logDir: String,
       conf: ProducerConfig): Seq[LogIndex.Entry] = {
-    val rows = local.data
-    val fields = local.schema.fields
+    val fields = routed.fields
     val byOrd = new InterpretedOrdering(Seq(
       SortOrder(BoundReference(1, fields(1).dataType, nullable = true), Ascending)))
     val perFile =

@@ -228,7 +228,15 @@ class LogSpec extends SparkSpec {
     def deltas(): Int = dir.list().count(n => n.startsWith("delta-") && n.endsWith(".parquet"))
     def appendOne(): Unit = LogWriter.append(spark, wh, "t", someRecords(1), "id")
     (1 to 40).foreach(_ => appendOne())
-    // the local filesystem lands a `.delta-*.parquet.crc` beside each delta
+    // deltas are written through java.nio, with no sidecar: plant the
+    // `.delta-*.parquet.crc` a Hadoop local write lands beside each (as an
+    // older version left them) by rewriting each delta through Hadoop
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+    dir.listFiles().filter(_.getName.startsWith("delta-")).foreach { f =>
+      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+      val out = local.create(new org.apache.hadoop.fs.Path(f.toURI), true)
+      try out.write(bytes) finally out.close()
+    }
     assert(dir.list().count(_.endsWith(".crc")) >= 40)
     assert(deltas() === 40, "40 one-record appends leave 40 uncompacted deltas")
     assert(MetaTable.uncompacted(wh.indexDir("t")) === 40)

@@ -22,11 +22,17 @@ import scala.jdk.CollectionConverters._
   *   - a topic's segment files are written only by
   *     [[graft.core.log.SegmentWriter]]: no Spark `DataFrameWriter` into a
   *     log dir (a `partitionBy("partition")` write, or a `.parquet(` of a
-  *     log, partition or staging dir). */
+  *     log, partition or staging dir);
+  *   - nothing under `graft/core` creates a file or dir through Hadoop (its
+  *     local filesystem forks a `chmod` per file, `.crc` sidecar and dir):
+  *     no `HadoopOutputFile`, no Spark `OutputWriterFactory`, and no
+  *     `create`/`mkdirs` on a Hadoop `FileSystem` (an `fs`, an `Fs(…)` or
+  *     `FileSystem` itself). */
 class MemoGuardSpec extends AnyFunSuite {
 
-  private def hits(home: String)(bad: String => Boolean): List[String] = {
-    val root = Paths.get("src/main/scala")
+  private def hits(home: String, under: String = "src/main/scala")(
+      bad: String => Boolean): List[String] = {
+    val root = Paths.get(under)
     assert(Files.isDirectory(root), s"run from the repo root: $root")
     Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != home)
@@ -79,6 +85,17 @@ class MemoGuardSpec extends AnyFunSuite {
       """\.parquet\([^)]*(logDir|partitionDir)""",
       """\.parquet\(\s*staging\s*\)""").map(_.r)
     val found = hits("SegmentWriter.scala")(l => patterns.exists(_.findFirstIn(l).isDefined))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("nothing under graft/core creates files or dirs through Hadoop") {
+    val patterns = Seq(
+      """HadoopOutputFile""",
+      """OutputWriterFactory""",
+      """(\bfs|\bFs\([^)]*\)|\bFileSystem)\s*\.\s*(create|createNewFile|createNonRecursive|mkdirs)\(""")
+      .map(_.r)
+    val found = hits("", "src/main/scala/graft/core")(l =>
+      patterns.exists(_.findFirstIn(l).isDefined))
     assert(found.isEmpty, found.mkString("\n"))
   }
 }
